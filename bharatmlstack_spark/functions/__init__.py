@@ -3,7 +3,6 @@ from bharatmlstack_spark.functions.quantize import (
     fp8e5m2_roundtrip,
     fp8e4m3_roundtrip,
     quantize_column,
-    register_sql_functions,
 )
 from bharatmlstack_spark.functions.vector import (
     dot,
@@ -18,7 +17,6 @@ __all__ = [
     "fp8e5m2_roundtrip",
     "fp8e4m3_roundtrip",
     "quantize_column",
-    "register_sql_functions",
     "dot",
     "l2_norm",
     "cosine_similarity",

@@ -8,9 +8,10 @@ pkg/float8/float8_e5m2.go and float8_e4m3.go).
 
 Spark has no fp16/fp8 types, so the *semantics* — "the value you read is the
 value that survives the narrow encoding" — are provided by round-trip
-functions: encode to the narrow format, decode back to float32. The numpy
-cores are vectorized bit manipulation (Arrow-batched via pandas_udf; never
-row-at-a-time Python).
+functions: encode to the narrow format, decode back to float32. The Spark
+forms are Catalyst expressions (HALF_EVEN ``bround`` at a power-of-two
+quantum; no Python worker in the plan); the numpy cores are the model they
+are tested against bit for bit.
 
 Format notes (public IEEE-754 / OCP FP8 layouts):
 - fp16: 1s/5e/10m — numpy float16 is exactly this.
@@ -24,12 +25,15 @@ Format notes (public IEEE-754 / OCP FP8 layouts):
 
 from __future__ import annotations
 
+from dataclasses import dataclass
+from typing import Callable
+
 import numpy as np
-import pandas as pd
-from pyspark.sql import Column, SparkSession
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
+
+from bharatmlstack_spark.functions.sqltext import quote_ident
 
 # --------------------------------------------------------------------------
 # numpy cores (pure, testable without Spark)
@@ -110,84 +114,145 @@ def fp8e4m3_roundtrip_np(x: np.ndarray) -> np.ndarray:
     return out.astype(np.float32)
 
 
-_NP_CORES = {
-    "fp16": fp16_roundtrip_np,
-    "fp8e5m2": fp8e5m2_roundtrip_np,
-    "fp8e4m3": fp8e4m3_roundtrip_np,
+# --------------------------------------------------------------------------
+# Spark column functions: Catalyst expressions (no Python worker)
+# --------------------------------------------------------------------------
+# Each codec is the SQL text of one expression over a column name, parsed
+# by a single F.expr call: the same tree built from ~30 Column operations
+# costs one py4j round trip each. A value rounds with bround (HALF_EVEN) at
+# the power-of-two quantum 2^(e - mantissa bits) of its binade e, which is
+# clamped at the format's smallest normal exponent (subnormals share that
+# quantum); every step is exact in float64, so the results match the numpy
+# cores bit for bit (tests/test_quantize_fuzz.py).
+
+
+@dataclass(frozen=True)
+class _Format:
+    man: int  # stored mantissa bits
+    exp_bits: int
+    bias: int  # the smallest normal exponent is 1 - bias
+    overflow: str  # predicate on {a} = |x|: x rounds past the largest finite
+    nan_code: int  # canonical NaN code, sign bit clear
+    inf: bool  # overflow gives ±inf (IEEE) or NaN (E4M3FN has no infinity)
+    pre_man: int = 0  # E5M2 rounds through fp16's 10 mantissa bits first
+
+
+_FORMATS = {
+    "FP16": _Format(10, 5, 15, "{a} >= 65520", 0x7E00, True),
+    # 61424 rounds to the fp16 value 61440, the E5M2 tie between 57344
+    # (odd mantissa) and 65536, which is infinity
+    "FP8E5M2": _Format(2, 5, 15, "{a} >= 61424", 0x7F, True, pre_man=10),
+    # 464 ties 448 (even) with the NaN slot 480; NaN compares above it
+    "FP8E4M3": _Format(3, 4, 7, "{a} > 464", 0x7F, False),
 }
 
-# --------------------------------------------------------------------------
-# Spark column functions (Arrow-batched pandas_udfs)
-# --------------------------------------------------------------------------
+
+def _binade(a: str, f: _Format) -> tuple[str, str]:
+    """SQL for (e, m): the clamped binade exponent of ``a`` = |x| and the
+    HALF_EVEN-rounded integer significand in units of 2^(e - f.man). log2
+    is inexact near powers of two, so floor(log2) is corrected by ±1; it
+    is NULL at 0, which greatest() turns into the subnormal exponent."""
+    e0 = f"floor(log2({a}))"
+    e = (
+        f"greatest({e0} + CASE WHEN power(2, {e0}) > {a} THEN -1 "
+        f"WHEN power(2, {e0} + 1) <= {a} THEN 1 ELSE 0 END, {1 - f.bias})"
+    )
+    # E5M2 double-rounds: to fp16 first, then drops 8 more bits. fp16 has
+    # the same exponent range, so one e serves both steps (a first step
+    # that carries into the next binade lands on a power of two, which the
+    # second keeps)
+    if f.pre_man:
+        m = f"bround(bround({a} / power(2, {e} - {f.pre_man})) / {2 ** (f.pre_man - f.man)})"
+    else:
+        m = f"bround({a} / power(2, {e} - {f.man}))"
+    return e, m
 
 
-def _scalar_udf(core):
-    @pandas_udf(T.FloatType())
-    def f(s: pd.Series) -> pd.Series:
-        return pd.Series(core(s.to_numpy(dtype=np.float64)), index=s.index)
-
-    return f
-
-
-def _vector_udf(core):
-    @pandas_udf(T.ArrayType(T.FloatType()))
-    def f(s: pd.Series) -> pd.Series:
-        # ragged list column: flatten -> one vectorized pass -> re-split
-        lens = s.map(lambda v: 0 if v is None else len(v))
-        flat = np.concatenate([np.asarray(v, dtype=np.float64) for v in s if v is not None]) \
-            if int(lens.sum()) else np.array([], dtype=np.float64)
-        q = core(flat)
-        out, pos = [], 0
-        for n, v in zip(lens, s):
-            if v is None:
-                out.append(None)
-            else:
-                out.append(q[pos : pos + n])
-                pos += n
-        return pd.Series(out, index=s.index)
-
-    return f
+def _roundtrip_sql(x: str, f: _Format) -> str:
+    a = f"abs({x})"
+    e, m = _binade(a, f)
+    over = "Infinity" if f.inf else "NaN"
+    # signum keeps the sign of -0.0 and of values that underflow to zero;
+    # NaN takes the overflow branch and signum(NaN) keeps it NaN
+    return (
+        f"CAST(signum({x}) * CASE WHEN {f.overflow.format(a=a)} THEN double('{over}') "
+        f"ELSE {m} * power(2, {e} - {f.man}) END AS FLOAT)"
+    )
 
 
-_FP16 = _scalar_udf(fp16_roundtrip_np)
-_FP8E5M2 = _scalar_udf(fp8e5m2_roundtrip_np)
-_FP8E4M3 = _scalar_udf(fp8e4m3_roundtrip_np)
-_FP16_V = _vector_udf(fp16_roundtrip_np)
-_FP8E5M2_V = _vector_udf(fp8e5m2_roundtrip_np)
-_FP8E4M3_V = _vector_udf(fp8e4m3_roundtrip_np)
+def _encode_sql(x: str, f: _Format) -> str:
+    a = f"abs({x})"
+    e, m = _binade(a, f)
+    width = 1 + f.exp_bits + f.man
+    code = f"({e} + {f.bias - 1}) * {2 ** f.man} + {m}"
+    over = f.overflow.format(a=a)
+    if f.inf:
+        nan = f"isnan({x})"
+        code = f"CASE WHEN {over} THEN {(2 ** f.exp_bits - 1) << f.man} ELSE {code} END"
+    else:
+        nan = over  # overflow and NaN share the unsigned NaN code
+    # -0.0 is not < 0, but power(-0.0, -1) is -inf
+    sign = f"CASE WHEN {x} < 0 OR power({x}, -1) < 0 THEN {2 ** (width - 1)} ELSE 0 END"
+    int_type = "SMALLINT" if width == 16 else "TINYINT"
+    return f"CAST(CASE WHEN {nan} THEN {f.nan_code} ELSE {code} - {sign} END AS {int_type})"
 
 
-def fp16_roundtrip(col: Column, vector: bool = False) -> Column:
-    return (_FP16_V if vector else _FP16)(col)
+def _decode_sql(b: str, f: _Format) -> str:
+    top = 2**f.exp_bits - 1
+    exp = f"(shiftright({b}, {f.man}) & {top})"
+    man = f"({b} & {2 ** f.man - 1})"
+    value = (
+        f"IF({exp} = 0, {man}, {man} + {2 ** f.man}) "
+        f"* power(2, greatest({exp}, 1) - {f.bias + f.man})"
+    )
+    if f.inf:  # all-ones exponent: infinity or NaN
+        special = f"{exp} = {top}", f"IF({man} = 0, double('Infinity'), double('NaN'))"
+    else:  # E4M3FN: only S.1111.111 is NaN
+        special = f"{exp} = {top} AND {man} = {2 ** f.man - 1}", "double('NaN')"
+    # multiplying by -1 also gives -0.0 for the negative zero code
+    return (
+        f"CAST(CASE WHEN {special[0]} THEN {special[1]} ELSE {value} END "
+        f"* IF({b} < 0, -1, 1) AS FLOAT)"
+    )
 
 
-def fp8e5m2_roundtrip(col: Column, vector: bool = False) -> Column:
-    return (_FP8E5M2_V if vector else _FP8E5M2)(col)
+def _codec_sql(sql: Callable[[str, _Format], str], fmt: str, col: str, vector: bool) -> str:
+    """One codec over the column named ``col``, elementwise over an array
+    column when ``vector`` (NULL rows and NULL elements stay NULL)."""
+    x = quote_ident(col)
+    f = _FORMATS[fmt]
+    return f"transform({x}, v -> {sql('v', f)})" if vector else sql(x, f)
 
 
-def fp8e4m3_roundtrip(col: Column, vector: bool = False) -> Column:
-    return (_FP8E4M3_V if vector else _FP8E4M3)(col)
+def _codec(sql: Callable[[str, _Format], str], fmt: str, col: str, vector: bool) -> Column:
+    return F.expr(_codec_sql(sql, fmt, col, vector))
 
 
-def quantize_column(col: Column, target: "DataType", vector: bool = False) -> Column:
-    """Cast-on-read projection to ``target`` (P2). Floats round-trip through
-    the narrow format; integer targets are plain casts (the reference only
-    permits equal-or-lower precision; callers check via
-    ``check_quantization_compat``)."""
-    from bharatmlstack_spark.registry import DataType
+def fp16_roundtrip(col: str, vector: bool = False) -> Column:
+    """float -> fp16 -> float32 of the column named ``col``."""
+    return _codec(_roundtrip_sql, "FP16", col, vector)
 
+
+def fp8e5m2_roundtrip(col: str, vector: bool = False) -> Column:
+    return _codec(_roundtrip_sql, "FP8E5M2", col, vector)
+
+
+def fp8e4m3_roundtrip(col: str, vector: bool = False) -> Column:
+    return _codec(_roundtrip_sql, "FP8E4M3", col, vector)
+
+
+def quantize_column(col: str, target: "DataType", vector: bool = False) -> Column:
+    """Cast-on-read projection of the column named ``col`` to ``target``
+    (P2). Floats round-trip through the narrow format; integer targets are
+    plain casts (the reference only permits equal-or-lower precision;
+    callers check via ``check_quantization_compat``)."""
     elem = target.element
-    if elem == DataType.FP16:
-        return fp16_roundtrip(col, vector)
-    if elem == DataType.FP8E5M2:
-        return fp8e5m2_roundtrip(col, vector)
-    if elem == DataType.FP8E4M3:
-        return fp8e4m3_roundtrip(col, vector)
+    if elem.name in _FORMATS:
+        return _codec(_roundtrip_sql, elem.name, col, vector)
     spark_t = target.spark_type
     if vector and not target.is_vector:
         spark_t = T.ArrayType(spark_t, containsNull=False)
-    return col.cast(spark_t)
-
+    return F.col(col).cast(spark_t)
 
 def check_quantization_compat(source: "DataType", target: "DataType") -> None:
     """Precision-rank compatibility (quantization_utils.go:70-102): projection
@@ -274,108 +339,36 @@ def fp8e4m3_decode_np(code: np.ndarray) -> np.ndarray:
     return out.astype(np.float32)
 
 
+def storage_encode(fmt: str, col: str, vector: bool = False) -> Column:
+    """Storage form of the column named ``col`` in the narrow element type
+    ``fmt`` ("FP16", "FP8E5M2", "FP8E4M3"): SMALLINT IEEE-half bits or the
+    TINYINT fp8 code; NaN encodes to the canonical code."""
+    return _codec(_encode_sql, fmt, col, vector)
 
 
-def _make_scalar_udf(core, out_type):
-    @pandas_udf(out_type)
-    def f(s: pd.Series) -> pd.Series:
-        return pd.Series(core(s.to_numpy(dtype=np.float64)), index=s.index)
-
-    return f
+def storage_decode(fmt: str, col: str, vector: bool = False) -> Column:
+    """Inverse of storage_encode: the stored code back to float32."""
+    return F.expr(storage_decode_sql(fmt, col, vector))
 
 
-def _make_decode_udf(core, in_dtype):
-    @pandas_udf(T.FloatType())
-    def f(s: pd.Series) -> pd.Series:
-        return pd.Series(core(s.to_numpy(dtype=in_dtype)), index=s.index)
-
-    return f
+def storage_decode_sql(fmt: str, col: str, vector: bool = False) -> str:
+    """SQL text of storage_decode, to compose into a larger expression."""
+    return _codec_sql(_decode_sql, fmt, col, vector)
 
 
-def _make_vector_codec_udf(core, out_elem_type, in_np_dtype):
-    """Ragged list column codec: flatten -> one vectorized core pass ->
-    re-split (same shape as _vector_udf; Arrow-batched, never per-row)."""
-
-    @pandas_udf(T.ArrayType(out_elem_type))
-    def f(s: pd.Series) -> pd.Series:
-        lens = s.map(lambda v: 0 if v is None else len(v))
-        flat = (
-            np.concatenate([np.asarray(v, dtype=in_np_dtype) for v in s if v is not None])
-            if int(lens.sum())
-            else np.array([], dtype=in_np_dtype)
-        )
-        q = core(flat)
-        out, pos = [], 0
-        for n, v in zip(lens, s):
-            if v is None:
-                out.append(None)
-            else:
-                out.append(q[pos : pos + n])
-                pos += n
-        return pd.Series(out, index=s.index)
-
-    return f
-
-
-_FP16_ENCODE = _make_scalar_udf(fp16_encode_np, T.ShortType())
-_FP16_DECODE = _make_decode_udf(fp16_decode_np, np.int16)
-_FP8E5M2_ENCODE = _make_scalar_udf(fp8e5m2_encode_np, T.ByteType())
-_FP8E5M2_DECODE = _make_decode_udf(fp8e5m2_decode_np, np.int8)
-_FP8E4M3_ENCODE = _make_scalar_udf(fp8e4m3_encode_np, T.ByteType())
-_FP8E4M3_DECODE = _make_decode_udf(fp8e4m3_decode_np, np.int8)
-_FP16_ENCODE_V = _make_vector_codec_udf(fp16_encode_np, T.ShortType(), np.float64)
-_FP16_DECODE_V = _make_vector_codec_udf(fp16_decode_np, T.FloatType(), np.int16)
-_FP8E5M2_ENCODE_V = _make_vector_codec_udf(fp8e5m2_encode_np, T.ByteType(), np.float64)
-_FP8E5M2_DECODE_V = _make_vector_codec_udf(fp8e5m2_decode_np, T.FloatType(), np.int8)
-_FP8E4M3_ENCODE_V = _make_vector_codec_udf(fp8e4m3_encode_np, T.ByteType(), np.float64)
-_FP8E4M3_DECODE_V = _make_vector_codec_udf(fp8e4m3_decode_np, T.FloatType(), np.int8)
-
-
-def fp16_encode(col: Column) -> Column:
+def fp16_encode(col: str) -> Column:
     """Storage form: SMALLINT holding the IEEE-half bit pattern."""
-    return _FP16_ENCODE(col)
+    return storage_encode("FP16", col)
 
 
-def fp16_decode(col: Column) -> Column:
-    return _FP16_DECODE(col)
+def fp16_decode(col: str) -> Column:
+    return storage_decode("FP16", col)
 
 
-def fp8e5m2_encode(col: Column) -> Column:
+def fp8e5m2_encode(col: str) -> Column:
     """Storage form: TINYINT holding the E5M2 code."""
-    return _FP8E5M2_ENCODE(col)
+    return storage_encode("FP8E5M2", col)
 
 
-def fp8e5m2_decode(col: Column) -> Column:
-    return _FP8E5M2_DECODE(col)
-
-
-# storage codec dispatch by narrow element type name -> (encode, decode)
-# in scalar and vector forms; consumed by FeatureStore's narrow-storage path
-STORAGE_CODECS: dict[str, dict[str, tuple]] = {
-    "FP16": {
-        "scalar": (_FP16_ENCODE, _FP16_DECODE),
-        "vector": (_FP16_ENCODE_V, _FP16_DECODE_V),
-    },
-    "FP8E5M2": {
-        "scalar": (_FP8E5M2_ENCODE, _FP8E5M2_DECODE),
-        "vector": (_FP8E5M2_ENCODE_V, _FP8E5M2_DECODE_V),
-    },
-    "FP8E4M3": {
-        "scalar": (_FP8E4M3_ENCODE, _FP8E4M3_DECODE),
-        "vector": (_FP8E4M3_ENCODE_V, _FP8E4M3_DECODE_V),
-    },
-}
-
-
-def register_sql_functions(spark: SparkSession) -> None:
-    """Expose the round-trips to spark.sql as named functions."""
-    spark.udf.register("fp16_roundtrip", _FP16)
-    spark.udf.register("fp8e5m2_roundtrip", _FP8E5M2)
-    spark.udf.register("fp8e4m3_roundtrip", _FP8E4M3)
-    spark.udf.register("fp16_roundtrip_vec", _FP16_V)
-    spark.udf.register("fp8e5m2_roundtrip_vec", _FP8E5M2_V)
-    spark.udf.register("fp8e4m3_roundtrip_vec", _FP8E4M3_V)
-    spark.udf.register("fp16_encode", _FP16_ENCODE)
-    spark.udf.register("fp16_decode", _FP16_DECODE)
-    spark.udf.register("fp8e5m2_encode", _FP8E5M2_ENCODE)
-    spark.udf.register("fp8e5m2_decode", _FP8E5M2_DECODE)
+def fp8e5m2_decode(col: str) -> Column:
+    return storage_decode("FP8E5M2", col)

@@ -648,7 +648,11 @@ def simhash_near_pairs(
     Pigeonhole banding: split the 64-bit fingerprint into 64/band_bits
     pieces; any pair within distance d < #pieces must collide on one piece
     — so candidates come from an equi-join on (piece_idx, piece), then the
-    exact popcount filter."""
+    exact popcount filter.
+
+    Precondition: ``id`` is unique across ``fingerprints``. Each pair is
+    emitted exactly once (id_a < id_b, from its first matching band) only
+    then; duplicate ids yield duplicate pairs, since no pair dedup runs."""
     n_bands = 64 // band_bits
     mask = (1 << band_bits) - 1
     # the banded frame self-joins: persist it (4 small rows per doc) so the

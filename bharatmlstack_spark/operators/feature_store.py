@@ -12,19 +12,21 @@ Here the whole lifecycle is ONE declarative plan:
                                                  rows written before a feature
                                                  existed hold NULL)
       optional quantized cast (feat@FP16)       (P2)
-      fan back out to original request order    (A6 dedup + restore)
+      one output row per request row            (A6: the pk is unique)
 
 Tiers, channels, write-backs, and negative caches disappear — Catalyst
 column pruning plays the role of FG->store projection (scylla.go:93-107) and
 a broadcast hash join plays the role of the batched point lookup.
 
-At 100 TB scale: the feature table is the big side (keys are the request —
-small), so the plan broadcasts the deduped key set and the scan prunes to
-requested FG columns only; no full-table shuffle. The broadcast is
-two-step because BroadcastHashJoin cannot build the preserved side of a
-LEFT OUTER join: table LEFT SEMI JOIN broadcast(raw keys) first (big
-side streams; semi needs no probe dedup), then
-dedup(keys) LEFT JOIN broadcast(that request-sized result).
+At 100 TB scale: the feature table is the big side and the request is
+small — request-sized by contract, so its keys are collected to the driver
+(free for a local request frame). Each store's scan is filtered by literal
+``key_bucket IN (...)`` and ``<key> IN (...)`` lists (partition pruning,
+parquet row-group skipping), which makes the scan itself request-sized, and
+the raw request LEFT JOINs a broadcast of it: BroadcastHashJoin builds the
+right side of a LEFT OUTER join, the table never shuffles, and the unique
+primary key keeps request multiplicity without a key dedup. The table's
+schema comes from its meta sidecar, so opening it launches no Spark job.
 """
 
 from __future__ import annotations
@@ -35,9 +37,16 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window
+from pyspark.sql import types as T
 
 from bharatmlstack_spark.registry import DataType, Entity, FeatureGroup, SchemaRegistry
-from bharatmlstack_spark.functions.quantize import check_quantization_compat, quantize_column
+from bharatmlstack_spark.functions.quantize import (
+    check_quantization_compat,
+    quantize_column,
+    storage_decode_sql,
+    storage_encode,
+)
+from bharatmlstack_spark.functions.sqltext import quote_ident, sql_in, sql_literal
 
 BUCKET_COL = "key_bucket"
 
@@ -164,14 +173,32 @@ def hadoop_delete_path(spark: SparkSession, path: str) -> bool:
     return bool(fs.delete(jpath, True))
 
 
-def write_table_meta(spark: SparkSession, table_path: str, n_buckets: int) -> None:
+def write_table_meta(
+    spark: SparkSession,
+    table_path: str,
+    n_buckets: int,
+    schema: T.StructType | None = None,
+) -> None:
+    """Replace the sidecar; ``schema`` is the table's read schema, which
+    lets readers open the table without a schema-inference job."""
     import json
 
+    meta: dict = {"n_buckets": n_buckets}
+    if schema is not None:
+        meta["schema"] = schema.jsonValue()
     hadoop_write_text_atomic(
-        spark,
-        os.path.join(table_path, TABLE_META_FILE),
-        json.dumps({"n_buckets": n_buckets}),
+        spark, os.path.join(table_path, TABLE_META_FILE), json.dumps(meta)
     )
+
+
+def _table_schema(df: DataFrame) -> T.StructType:
+    """The schema a bucket-partitioned parquet write of ``df`` reads back
+    with: the data columns, then ``key_bucket`` as partition discovery
+    types it (int)."""
+    fields = [f for f in df.schema.fields if f.name != BUCKET_COL]
+    if BUCKET_COL in df.columns:
+        fields.append(T.StructField(BUCKET_COL, T.IntegerType()))
+    return T.StructType(fields)
 
 
 def read_table_meta(spark: SparkSession, table_path: str) -> dict | None:
@@ -205,10 +232,14 @@ def read_table_meta(spark: SparkSession, table_path: str) -> dict | None:
     return None if text is None else json.loads(text)
 
 
-def _bucket_expr(key_cols: list[str], n_buckets: int) -> Column:
+def _bucket_sql(key_cols: list[str], n_buckets: int) -> str:
     """Same hash-bucket as sources.writers.write_feature_table — the parquet
     analog of Scylla token-range routing (scylla.go:80-167)."""
-    return F.pmod(F.xxhash64(*[F.col(c) for c in key_cols]), F.lit(n_buckets))
+    return f"pmod(xxhash64({', '.join(map(quote_ident, key_cols))}), {n_buckets})"
+
+
+def _bucket_expr(key_cols: list[str], n_buckets: int) -> Column:
+    return F.expr(_bucket_sql(key_cols, n_buckets))
 
 
 
@@ -385,17 +416,14 @@ class FeatureStore:
             else {}
         )
         legacy = exists and not kb_dirs
-        # schema probe: ONE bucket dir suffices (schema is uniform across
-        # dirs by the narrow-width stickiness below); legacy flat tables
-        # read the root (single dir — nothing saved by probing)
+        # schema probe: the table's schema (stored in the sidecar, or merged
+        # over every bucket for a table written before schemas were stored)
         if not exists:
             probe = None
         elif legacy:
             probe = self.spark.read.parquet(path)
         else:
-            probe = self.spark.read.option("basePath", path).parquet(
-                next(iter(kb_dirs.values()))
-            )
+            probe = self._read(path)
 
         # F9 narrow storage: fp16/fp8 FG columns write as bit-pattern
         # integers (2x/4x denser than FLOAT; ref perm_storage_datablock_v2
@@ -421,7 +449,7 @@ class FeatureStore:
                 .partitionBy(BUCKET_COL)
                 .parquet(path)
             )
-            write_table_meta(self.spark, path, nb)
+            write_table_meta(self.spark, path, nb, _table_schema(out))
             return
         if legacy:
             # pre-bucketed table: migrate to the partitioned layout on this
@@ -441,8 +469,12 @@ class FeatureStore:
             # has no existing rows)
             paths = [kb_dirs[b] for b in touched if b in kb_dirs]
             if paths:
-                existing = self.spark.read.option("basePath", path).parquet(
-                    *paths
+                # read with the table's schema: a column an earlier persist
+                # added only to other buckets still reaches the merge
+                existing = (
+                    self.spark.read.schema(probe.schema)
+                    .option("basePath", path)
+                    .parquet(*paths)
                 )
             else:
                 existing = probe.limit(0)  # schema-preserving empty side
@@ -469,10 +501,9 @@ class FeatureStore:
             writer = writer.option("partitionOverwriteMode", "dynamic")
         writer.parquet(path)
         hadoop_delete_path(self.spark, tmp)  # staged copy: reclaim now
-        # stamp the sidecar on tables created before metadata existed (or
-        # just migrated from the pre-bucketed layout)
-        if read_table_meta(self.spark, path) is None:
-            write_table_meta(self.spark, path, nb)
+        # the staged read-back holds every table column (the existing side
+        # was read with the stored schema), so its schema is the table's
+        write_table_meta(self.spark, path, nb, _table_schema(final))
 
     @staticmethod
     def _encode_narrow(
@@ -481,14 +512,10 @@ class FeatureStore:
         """Encode fp16/fp8 FG columns to their storage form (SMALLINT /
         TINYINT bit patterns). A column already stored as float in an
         existing table is left as float (legacy width is sticky)."""
-        from bharatmlstack_spark.functions.quantize import STORAGE_CODECS
-
         cols: dict[str, Column] = {}
         for fg in entity.feature_groups.values():
             if not fg.data_type.is_narrow_float:
                 continue
-            kind = "vector" if fg.data_type.is_vector else "scalar"
-            enc, _dec = STORAGE_CODECS[fg.data_type.element.name][kind]
             labels = {f.label for feats in fg.features.values() for f in feats}
             for label in labels:
                 c = fg.column_name(label)
@@ -498,7 +525,9 @@ class FeatureStore:
                     st = existing_dtypes[c]
                     if "float" in st or "double" in st:
                         continue  # legacy float-stored column stays float
-                cols[c] = enc(F.col(c))
+                cols[c] = storage_encode(
+                    fg.data_type.element.name, c, fg.data_type.is_vector
+                )
         return df.withColumns(cols) if cols else df
 
     @staticmethod
@@ -540,7 +569,22 @@ class FeatureStore:
         return joined.select(*cols)
 
     def load(self, entity_label: str, store_id: int = 0) -> DataFrame:
-        return self.spark.read.parquet(self._table_path(entity_label, store_id))
+        return self._read(self._table_path(entity_label, store_id))
+
+    def _read(self, path: str, *bucket_dirs: str) -> DataFrame:
+        """The table at ``path`` (or only its ``bucket_dirs``), read with the
+        schema its sidecar stores — no schema-inference job, and a column
+        another FeatureStore instance or the streaming sink added is
+        visible. A table whose sidecar has no schema (written before
+        schemas were stored) is inferred, merged over its files."""
+        meta = read_table_meta(self.spark, path) or {}
+        if "schema" in meta:
+            reader = self.spark.read.schema(T.StructType.fromJson(meta["schema"]))
+        else:
+            reader = self.spark.read.option("mergeSchema", "true")
+        if bucket_dirs:
+            return reader.option("basePath", path).parquet(*bucket_dirs)
+        return reader.parquet(path)
 
     def materialize(
         self,
@@ -570,12 +614,15 @@ class FeatureStore:
             path = self._table_path(entity_label, store_id)
             tmp = path + "__staging"
             if BUCKET_COL in table.columns:
+                nb = self._effective_n_buckets(path)  # before the sidecar goes
                 live.repartition(BUCKET_COL).write.mode("overwrite").partitionBy(
                     BUCKET_COL
                 ).parquet(tmp)
                 self.spark.read.parquet(tmp).repartition(BUCKET_COL).write.mode(
                     "overwrite"
                 ).partitionBy(BUCKET_COL).parquet(path)
+                # the full overwrite replaced the directory, sidecar included
+                write_table_meta(self.spark, path, nb, _table_schema(table))
             else:
                 live.write.mode("overwrite").parquet(tmp)
                 self.spark.read.parquet(tmp).write.mode("overwrite").parquet(path)
@@ -640,7 +687,7 @@ class FeatureStore:
         paths = [kb_dirs[b] for b in touched if b in kb_dirs]
         if not paths:
             return 0
-        scoped = self.spark.read.option("basePath", path).parquet(*paths)
+        scoped = self._read(path, *paths)
         kside = kdf.drop(BUCKET_COL)
         if broadcast_keys:
             kside = F.broadcast(kside)
@@ -697,149 +744,123 @@ class FeatureStore:
 
         ``selections``: fg_label -> feature tokens (with optional @quant).
         ``keys_df``: request keys, duplicates allowed — output has one row
-        per request row, in request order (A6 fan-out), defaults filled for
-        missing/expired keys (P3/P4).
+        per request row (A6 fan-out; one row per distinct key with
+        ``keep_request_order=False``), defaults filled for missing/expired
+        keys (P3/P4).
         ``feature_table``: override the stored table (used by fixture-backed
         oracle queries); defaults to the entity's store-0 table.
 
-        ``broadcast_keys``: the request side broadcasts by default (the
-        batched-point-lookup shape — the feature table never shuffles;
-        see the module docstring for why the broadcast is the two-step
-        inner-then-assemble shape). Pass False when the "request" is
-        itself table-sized (a 100M-key backfill): plain left joins, AQE
-        picks a sort-merge join; with the bucketed layout
-        (writers.write_feature_table) the join stays pruned. Same rows
-        either way (tested).
+        ``broadcast_keys``: the request is request-sized by contract, and
+        its keys are collected to the driver here (a local request frame
+        costs no Spark job; any other frame costs the jobs of computing
+        it). Each store's scan keeps only the request's buckets and keys
+        (literal IN lists) and broadcasts into a left join with the
+        request — the feature table never shuffles (module docstring).
+        Pass False when the "request" is itself table-sized (a 100M-key
+        backfill): a plain keys LEFT JOIN table, AQE picks the join. Same
+        rows either way (tested).
         """
         entity = self.registry.entity(entity_label)
         selectors = self._resolve(entity, selections)  # P1 validation
         now = now if now is not None else F.current_timestamp()
+        key_cols = entity.key_columns
 
         # J2 multi-store scatter-gather (retrieve.go:436-444): group the
         # requested FGs by store and join each store's table once; with an
         # explicit feature_table override everything reads from it.
+        # Request-side bucket hashing uses each table's STORED modulus, not
+        # the ctor arg (see __init__).
         if feature_table is not None:
-            store_tables: dict[int, DataFrame] = {0: feature_table}
-            by_store = {0: selectors}
-            nb_by_store: dict[int, int] = {0: self.n_buckets}
+            stores = [(feature_table, self.n_buckets, selectors)]
         else:
-            by_store = {}
+            by_store: dict[int, list[FeatureSelector]] = {}
             for s in selectors:
-                sid = entity.fg(s.fg_label).store_id
-                by_store.setdefault(sid, []).append(s)
-            store_tables = {sid: self.load(entity_label, sid) for sid in by_store}
-            # request-side bucket hashing must use each table's STORED
-            # modulus, not the ctor arg (see __init__)
-            nb_by_store = {
-                sid: self._effective_n_buckets(self._table_path(entity_label, sid))
-                for sid in by_store
-            }
+                by_store.setdefault(entity.fg(s.fg_label).store_id, []).append(s)
+            stores = [
+                (
+                    self.load(entity_label, sid),
+                    self._effective_n_buckets(self._table_path(entity_label, sid)),
+                    sels,
+                )
+                for sid, sels in by_store.items()
+            ]
 
-        keys = keys_df.select(*entity.key_columns)
-        # A6: dedup request keys before the join, fan out after
-        uniq = keys.dropDuplicates(entity.key_columns)
-
-        # bucket-partitioned layout: compute the same hash bucket on the
-        # request side and make it a join key — dynamic partition pruning
-        # then skips every untouched bucket directory at the scan (the
-        # token-range routing of scylla.go:80-167, without a driver collect)
-        bucketed_nbs = {
-            nb_by_store[sid]
-            for sid, t in store_tables.items()
-            if BUCKET_COL in t.columns
-        }
-        if len(bucketed_nbs) > 1:
-            raise ValueError(
-                f"bucketed stores disagree on n_buckets ({sorted(bucketed_nbs)}); "
-                "retrieve them separately"
-            )
-        bucketed = bool(bucketed_nbs)
-        if bucketed:
-            uniq = uniq.withColumn(
-                BUCKET_COL, _bucket_expr(entity.key_columns, next(iter(bucketed_nbs)))
+        request = keys_df.select(*key_cols)
+        keys = request if keep_request_order else request.dropDuplicates(key_cols)
+        if broadcast_keys:
+            scan_filter = self._request_filters(
+                request, key_cols, {nb for t, nb, _ in stores if BUCKET_COL in t.columns}
             )
 
-        # J1: per-store lookup. A LEFT-OUTER BroadcastHashJoin can only
-        # build its RIGHT side — Spark silently drops a broadcast hint on
-        # the preserved key side ("build left for left outer join" is
-        # unsupported) and the fallback SHUFFLES the feature table. The
-        # shape that keeps the big side shuffle-free is two-step: stream
-        # the table past the broadcast RAW key frame with a LEFT-SEMI
-        # join (build-right IS supported there, and semi output never
-        # duplicates on duplicate probe keys — so the probe needs no
-        # dedup, keeping the plan's single key-dedup on the assemble
-        # side), then left-join the request-sized slim result back as a
-        # broadcast build-right.
-        probe = keys
-        if bucketed:
-            probe = probe.withColumn(
-                BUCKET_COL, _bucket_expr(entity.key_columns, next(iter(bucketed_nbs)))
-            )
-        joined = uniq
-        for sid, sels in by_store.items():
-            table = store_tables[sid]
+        # J1: per-store lookup — request LEFT JOIN broadcast(request-sized
+        # scan); the pk is unique, so request multiplicity survives the join
+        joined = keys
+        for table, nb, sels in stores:
+            if broadcast_keys:
+                pred = scan_filter[nb if BUCKET_COL in table.columns else None]
+                if pred:
+                    table = table.filter(pred)
             # P4: expired rows are absent (negative-cache semantics at
             # source, scylla.go:148-162)
             if "expires_at" in table.columns:
                 table = table.filter(
                     F.col("expires_at").isNull() | (F.col("expires_at") > now)
                 )
-            join_keys = list(entity.key_columns)
-            if BUCKET_COL in table.columns:
-                join_keys.append(BUCKET_COL)
             # column pruning: only this store's requested FG columns leave
             # the scan (FG->store projection, scylla.go:93-107)
-            needed = [s.output_column for s in sels]
-            table = table.select(
-                *join_keys, *[c for c in needed if c in table.columns]
-            )
+            needed = [s.output_column for s in sels if s.output_column in table.columns]
+            table = table.select(*key_cols, *needed)
             if broadcast_keys:
-                slim = table.join(
-                    F.broadcast(probe.select(*join_keys)), on=join_keys, how="left_semi"
-                )
-                joined = joined.join(F.broadcast(slim), on=join_keys, how="left")
-            else:
-                joined = joined.join(table, on=join_keys, how="left")
-        if bucketed:
-            joined = joined.drop(BUCKET_COL)
+                table = F.broadcast(table)
+            joined = joined.join(table, on=key_cols, how="left")
 
-        # P3 defaults + P2 quantization (+ F9 narrow-storage decode: applied
-        # AFTER the join so only result rows pay the pandas_udf, not every
-        # scanned row of the touched buckets)
+        # P3 defaults + F9 narrow-storage decode as ONE SQL projection (a
+        # Column tree per feature costs a py4j round trip per node), then
+        # P2 quantization over the named results
         joined_dtypes = dict(joined.dtypes)
         narrow_stored = {"smallint", "tinyint", "array<smallint>", "array<tinyint>"}
-        from bharatmlstack_spark.functions.quantize import STORAGE_CODECS
-
-        cols: list[Column] = [F.col(k) for k in entity.key_columns]
+        exprs = [quote_ident(k) for k in key_cols]
+        quantized: dict[str, Column] = {}
         for s in selectors:
             fg = entity.fg(s.fg_label)
-            feat = fg.feature(s.feature_label)
-            if s.output_column in joined.columns:
-                base = F.col(s.output_column)
-                if (
-                    fg.data_type.is_narrow_float
-                    and joined_dtypes.get(s.output_column) in narrow_stored
-                ):
-                    kind = "vector" if fg.data_type.is_vector else "scalar"
-                    _enc, dec = STORAGE_CODECS[fg.data_type.element.name][kind]
-                    base = dec(base)
+            dtype, out = fg.data_type, s.output_column
+            if out not in joined_dtypes:
+                value = f"CAST(NULL AS {dtype.spark_type.simpleString()})"
+            elif dtype.is_narrow_float and joined_dtypes[out] in narrow_stored:
+                value = storage_decode_sql(dtype.element.name, out, dtype.is_vector)
             else:
-                base = F.lit(None).cast(fg.data_type.spark_type)
-            col = self._with_default(base, fg, feat)
+                value = quote_ident(out)
+            default = self._default_sql(fg, fg.feature(s.feature_label))
+            if default is not None:
+                value = f"coalesce({value}, {default})"
+            exprs.append(f"{value} AS {quote_ident(out)}")
             if s.quantize_to is not None:
-                check_quantization_compat(fg.data_type, s.quantize_to)
-                col = quantize_column(col, s.quantize_to, vector=fg.data_type.is_vector)
-            cols.append(col.alias(s.output_column))
-        result = joined.select(*cols)
+                check_quantization_compat(dtype, s.quantize_to)
+                quantized[out] = quantize_column(out, s.quantize_to, vector=dtype.is_vector)
+        result = joined.selectExpr(*exprs)
+        return result.withColumns(quantized) if quantized else result
 
-        if keep_request_order:
-            # fan-out: one output row per request row (dup keys duplicate —
-            # bag-semantics join restores request multiplicity). No orderBy:
-            # a global sort is pure cost at scale; DataFrames are unordered
-            # and callers needing request order can carry their own index.
-            fanout = F.broadcast(result) if broadcast_keys else result
-            result = keys.join(fanout, on=entity.key_columns, how="left")
-        return result
+    @staticmethod
+    def _request_filters(
+        keys: DataFrame, key_cols: list[str], bucket_counts: set[int]
+    ) -> dict[int | None, str]:
+        """Scan predicates keeping only the request's rows, by the store's
+        bucket count (None: a table without ``key_bucket``). One collect
+        of the request keys and their buckets — the bucket hash evaluates
+        on the driver for a local request frame."""
+        counts = sorted(bucket_counts)
+        rows = keys.selectExpr(
+            *map(quote_ident, key_cols), *(_bucket_sql(key_cols, nb) for nb in counts)
+        ).collect()
+        # a key type without a SQL literal form only loses its IN filter;
+        # the join still matches exactly
+        key_preds = [sql_in(k, (r[i] for r in rows)) for i, k in enumerate(key_cols)]
+        key_pred = " AND ".join(p for p in key_preds if p)
+        out: dict[int | None, str] = {None: key_pred}
+        for j, nb in enumerate(counts, start=len(key_cols)):
+            bucket_pred = sql_in(BUCKET_COL, (r[j] for r in rows))
+            out[nb] = " AND ".join(p for p in (bucket_pred, key_pred) if p)
+        return out
 
     def retrieve_decoded(self, *args, **kwargs) -> DataFrame:
         """RetrieveDecodedResult (F13): stringified feature values.
@@ -1023,16 +1044,17 @@ class FeatureStore:
         return out
 
     @staticmethod
-    def _with_default(col: Column, fg: FeatureGroup, feat) -> Column:
-        """Default fill (P3). Vector defaults broadcast a scalar default to
-        the FG's fixed VectorLength when the default isn't already a list."""
+    def _default_sql(fg: FeatureGroup, feat) -> str | None:
+        """Default fill (P3) as SQL at the FG's type. Vector defaults
+        broadcast a scalar default to the FG's fixed VectorLength when the
+        default isn't already a list."""
         default = feat.default
         if default is None:
-            return col
-        if fg.data_type.is_vector:
-            if isinstance(default, (list, tuple)):
-                dlit = F.array(*[F.lit(v) for v in default])
-            else:
-                dlit = F.array_repeat(F.lit(default), feat.vector_length or 1)
-            return F.coalesce(col, dlit.cast(fg.data_type.spark_type))
-        return F.coalesce(col, F.lit(default).cast(fg.data_type.spark_type))
+            return None
+        if not fg.data_type.is_vector:
+            value = sql_literal(default)
+        elif isinstance(default, (list, tuple)):
+            value = f"array({', '.join(map(sql_literal, default))})"
+        else:
+            value = f"array_repeat({sql_literal(default)}, {feat.vector_length or 1})"
+        return f"CAST({value} AS {fg.data_type.spark_type.simpleString()})"

@@ -29,6 +29,7 @@ from typing import Any
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from bharatmlstack_spark.functions.sqltext import sql_in, sql_literal
 from bharatmlstack_spark.functions.vector import cosine_similarity, dot, euclidean_distance
 
 _OPS = (
@@ -212,12 +213,17 @@ class VectorSearch:
         metric: str = "DOT",
     ) -> DataFrame:
         """J7/F17: dot-product scoring for an explicit candidate id list
-        (skye.proto:67-83; adapter.go:68): semi-join then score per row."""
-        q = F.lit([float(v) for v in query_embedding])  # one array literal py4j call
-        return (
-            candidates.join(F.broadcast(ids_df), on=self.id_col, how="left_semi")
-            .withColumn("score", score_column(metric, F.col(self.emb_col), q))
-        )
+        (skye.proto:67-83; adapter.go:68). The list is request-sized: it is
+        collected to the driver (no job for a local frame) and filters the
+        candidate scan as one literal IN list, then each row is scored."""
+        ids = sql_in(self.id_col, (r[0] for r in ids_df.select(self.id_col).collect()))
+        if ids is None:  # an id type without a SQL literal form
+            cand = candidates.join(F.broadcast(ids_df), on=self.id_col, how="left_semi")
+        else:
+            cand = candidates.filter(ids)
+        # one parsed array literal: F.lit(list) builds a Column per element
+        q = F.expr(f"array({', '.join(sql_literal(float(v)) for v in query_embedding)})")
+        return cand.withColumn("score", score_column(metric, F.col(self.emb_col), q))
 
     def get_embeddings(self, candidates: DataFrame, ids_df: DataFrame) -> DataFrame:
         """Bulk embedding retrieval (GetEmbedding): key semi-join."""

@@ -629,13 +629,16 @@ FROM c CROSS JOIN q
 )
 def dot_score_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J7/F17: dot-product scoring for an explicit candidate id list
-    (skye.proto:67-83, adapter.go:68): semi-join then per-row score."""
+    (skye.proto:67-83, adapter.go:68) through VectorSearch.score_ids: the
+    id list and the query vector are request-sized (collected here), the
+    ids filter the candidate scan as a literal IN list."""
     emb = _t(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") == 1).select(F.col("embedding").alias("qe"))
+    q = emb.filter(F.col("vec_id") == 1).select("embedding").first()[0]
     ids = emb.filter(F.col("vec_id") % 7 == 0).select("vec_id")
-    c = emb.join(F.broadcast(ids), on="vec_id", how="left_semi")
-    return c.crossJoin(F.broadcast(q)).select(
-        "vec_id", _dot_col("embedding", "qe").alias("score")
+    return (
+        VectorSearch(id_col="vec_id", emb_col="embedding")
+        .score_ids(emb, ids, q)
+        .select("vec_id", "score")
     )
 
 

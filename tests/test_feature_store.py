@@ -829,3 +829,141 @@ def test_string_length_books_bytes_not_chars(fs_tags, spark):
         spark.createDataFrame([(1,)], ["user_id"]),
     ).collect()[0]["demo_tags__tags"]
     assert got == ["\U0001F600" * 3, "ok", "ok"]
+
+
+def _sidecar(spark, path):
+    from bharatmlstack_spark.operators.feature_store import read_table_meta
+
+    return read_table_meta(spark, path)
+
+
+def _key_in_another_bucket(spark, key: int, n_buckets: int) -> int:
+    """A key in [0, 40) that FeatureStore hashes into another bucket than ``key``."""
+    bucket = dict(
+        spark.range(0, 40).selectExpr("id", f"pmod(xxhash64(id), {n_buckets})").collect()
+    )
+    return next(k for k, b in bucket.items() if b != bucket[key])
+
+
+def _assert_stored_schema_is_the_tables(spark, fs, path):
+    """load() reads with the sidecar's schema; it must be the schema a
+    full schema-merging inference of the files gives."""
+    from pyspark.sql.types import StructType
+
+    stored = StructType.fromJson(_sidecar(spark, path)["schema"])
+    inferred = spark.read.option("mergeSchema", "true").parquet(path).schema
+    assert fs.load("user").schema == inferred
+    assert [(f.name, f.dataType) for f in stored] == [
+        (f.name, f.dataType) for f in inferred
+    ]
+
+
+def test_second_instance_sees_column_added_by_another(spark, tmp_path):
+    """The table schema lives in the sidecar, not on the instance: a
+    column one FeatureStore's persist adds (to the touched buckets only)
+    is visible to a second FeatureStore opened on the same path before
+    that persist, and survives a later persist touching other buckets."""
+    path = str(tmp_path / "shared")
+    a = FeatureStore(spark, fixtures.user_registry(), path, n_buckets=8)
+    b = FeatureStore(spark, fixtures.user_registry(), path, n_buckets=8)
+    a.persist(
+        "user",
+        spark.range(0, 40).select(
+            F.col("id").alias("user_id"), F.col("id").cast("int").alias("demo_int32__age")
+        ),
+    )
+    assert "demo_fp__acct_bal" not in b.load("user").columns
+    a.persist(
+        "user",
+        spark.createDataFrame([(1, 1.5)], "user_id bigint, demo_fp__acct_bal float"),
+    )
+    assert "demo_fp__acct_bal" in b.load("user").columns
+    # b's own persist touches another bucket: the column must stay
+    other = _key_in_another_bucket(spark, 1, 8)
+    b.persist("user", spark.createDataFrame([(other, 99)], "user_id bigint, demo_int32__age int"))
+    _assert_stored_schema_is_the_tables(spark, a, a._table_path("user"))
+    keys = spark.createDataFrame([(1,), (other,)], ["user_id"])
+    out = a.retrieve("user", {"demo_int32": ["age"], "demo_fp": ["acct_bal"]}, keys, now=_now())
+    got = {r["user_id"]: (r["demo_int32__age"], r["demo_fp__acct_bal"]) for r in out.collect()}
+    assert got == {1: (1, 1.5), other: (99, 0.0)}
+
+
+def test_table_without_stored_schema_still_reads(spark, tmp_path):
+    """A sidecar written before schemas were stored (n_buckets only) makes
+    load() infer the schema, merged over every bucket; the next persist
+    stores it — including a column only some buckets hold."""
+    from bharatmlstack_spark.operators.feature_store import write_table_meta
+
+    fs = FeatureStore(spark, fixtures.user_registry(), str(tmp_path / "old"), n_buckets=8)
+    fs.persist(
+        "user",
+        spark.range(0, 40).select(
+            F.col("id").alias("user_id"), F.col("id").cast("int").alias("demo_int32__age")
+        ),
+    )
+    fs.persist("user", spark.createDataFrame([(1, 1.5)], "user_id bigint, demo_fp__acct_bal float"))
+    path = fs._table_path("user")
+    write_table_meta(spark, path, 8)
+    assert "schema" not in _sidecar(spark, path)
+    fresh = FeatureStore(spark, fixtures.user_registry(), str(tmp_path / "old"), n_buckets=8)
+    keys = spark.createDataFrame([(1,), (2,), (99,)], ["user_id"])
+    out = fresh.retrieve("user", {"demo_int32": ["age"], "demo_fp": ["acct_bal"]}, keys, now=_now())
+    got = {r["user_id"]: (r["demo_int32__age"], r["demo_fp__acct_bal"]) for r in out.collect()}
+    assert got == {1: (1, 1.5), 2: (2, 0.0), 99: (0, 0.0)}
+    # a persist touching only a bucket without acct_bal: the stored schema keeps it
+    other = _key_in_another_bucket(spark, 1, 8)
+    fresh.persist("user", spark.createDataFrame([(other, 50)], ["user_id", "demo_int32__age"]))
+    assert _sidecar(spark, path)["n_buckets"] == 8
+    _assert_stored_schema_is_the_tables(spark, fresh, path)
+
+
+def test_delete_and_compact_keep_the_stored_schema(spark, tmp_path):
+    fs = FeatureStore(spark, fixtures.user_registry(), str(tmp_path / "dc"), n_buckets=4)
+    past = F.lit("2020-01-01").cast("timestamp")
+    future = F.lit("2030-01-01").cast("timestamp")
+    fs.persist(
+        "user",
+        spark.range(0, 30).select(
+            F.col("id").alias("user_id"),
+            F.col("id").cast("int").alias("demo_int32__age"),
+            F.when(F.col("id") % 3 == 0, past).otherwise(future).alias("expires_at"),
+        ),
+    )
+    path = fs._table_path("user")
+    fs.persist("user", spark.createDataFrame([(5, "blr")], ["user_id", "demo_str__location"]))
+    stored = _sidecar(spark, path)
+    assert fs.delete("user", spark.createDataFrame([(1,), (2,)], ["user_id"])) == 2
+    assert _sidecar(spark, path) == stored
+    _assert_stored_schema_is_the_tables(spark, fs, path)
+    assert fs.compact("user", now=F.lit("2026-01-01").cast("timestamp")) == 10
+    assert _sidecar(spark, path) == stored  # the overwrite's sidecar is rewritten
+    _assert_stored_schema_is_the_tables(spark, fs, path)
+    assert sorted(r["user_id"] for r in fs.load("user").collect()) == [
+        i for i in range(3, 30) if i % 3
+    ]
+
+
+def test_retrieve_string_keys_need_escaping(spark, tmp_path):
+    """The request keys reach the scan as SQL literal IN lists: string keys
+    with quotes, backslashes and non-ASCII text must match exactly, and a
+    key that only differs by escaping must stay a miss."""
+    from bharatmlstack_spark.registry import Entity, Feature, FeatureGroup, SchemaRegistry
+
+    reg = SchemaRegistry()
+    reg.register(
+        Entity(
+            "shop",
+            ["name"],
+            {"s": FeatureGroup("s", 1, DataType.INT32, {1: [Feature("n", 0, default=-1)]})},
+        )
+    )
+    fs = FeatureStore(spark, reg, str(tmp_path / "shops"), n_buckets=4)
+    names = ["o'brien", "back\\slash", "both\\'", "plain", "ಬೆಂಗಳೂರು"]
+    fs.persist(
+        "shop",
+        spark.createDataFrame([(k, i) for i, k in enumerate(names)], "name string, s__n int"),
+    )
+    request = names + ["o\\'brien", "missing"]
+    keys = spark.createDataFrame([(k,) for k in request], "name string")
+    got = {r["name"]: r["s__n"] for r in fs.retrieve("shop", {"s": ["n"]}, keys).collect()}
+    assert got == {**{k: i for i, k in enumerate(names)}, "o\\'brien": -1, "missing": -1}

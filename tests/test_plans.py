@@ -3,6 +3,7 @@ want at scale — pushdown reaches scans, dims broadcast, scans prune, no
 shuffle creep. A refactor that de-optimizes fails here even with correct
 results."""
 
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -48,29 +49,107 @@ def test_feature_retrieve_no_sort_one_prune(spark, sf_dir, qs):
     assert any("c_custkey" in s for s in read_schemas(df))
 
 
-def test_feature_retrieve_broadcasts_with_autobroadcast_off(spark, sf_dir, qs):
-    """The 100 TB hot-path invariant: retrieve's lookup joins must come
-    from the HINT, not from size-based auto-broadcast (at real scale the
-    feature table is far over any threshold). BroadcastHashJoin cannot
-    build the preserved side of a LEFT OUTER join — a keys-side hint
-    there is silently dropped and the big table would shuffle — so
-    retrieve streams the table past the broadcast RAW key frame with a
-    LEFT-SEMI join (no dedup needed: semi never duplicates on duplicate
-    probe keys) and assembles via a broadcast-right left join. With
-    auto-broadcast disabled, only hinted broadcasts survive: any
-    SortMergeJoin or ShuffledHashJoin here means the shape regressed."""
+def _stored_lookup(spark, tmp_path):
+    """A persisted narrow-storage table (FP16 scalars, E5M2 vectors on
+    disk), its FeatureStore and a 100-row local-relation request with
+    duplicates, misses and an @FP16 projection — the serve lookup shape."""
+    from bharatmlstack_spark import fixtures
+    from bharatmlstack_spark.operators.feature_store import FeatureStore
+
+    fs = FeatureStore(
+        spark, fixtures.user_narrow_registry(), str(tmp_path / "fs"), n_buckets=8
+    )
+    fs.persist(
+        "user",
+        spark.range(0, 400).select(
+            F.col("id").alias("user_id"),
+            (F.col("id") / 7.0).cast("float").alias("demo_fp__acct_bal"),
+            F.array(*[(F.col("id") * (i + 1) / 3.0).cast("float") for i in range(8)])
+            .alias("demo_vec__taste_vec"),
+        ),
+    )
+    # pandas + Arrow: a LocalRelation, as a serving caller builds it
+    keys = spark.createDataFrame(pd.DataFrame({"user_id": [(i * 37) % 450 for i in range(100)]}))
+    sel = {"demo_fp": ["acct_bal@DataTypeFP8E4M3"], "demo_vec": ["taste_vec"]}
+    return fs, keys, sel
+
+
+def test_feature_retrieve_broadcasts_with_autobroadcast_off(spark, tmp_path):
+    """The 100 TB hot-path invariant: the feature table never shuffles,
+    and retrieve's lookup join comes from the HINT, not from size-based
+    auto-broadcast (at real scale the feature table is far over any
+    threshold). The request keys are collected to the driver and filter
+    the scan as literal IN lists (key_bucket partition filter + pushed key
+    filter), so the scan is request-sized and broadcasts into ONE
+    request LEFT JOIN per store. No key dedup (no hash Exchange: the pk is
+    unique, so the join keeps request multiplicity) and no Python worker
+    (the fp16/fp8 codecs are Catalyst expressions)."""
     from bharatmlstack_spark.plans import explain_formatted
 
+    fs, keys, sel = _stored_lookup(spark, tmp_path)
     thr = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        df = qs["feature_retrieve"](spark, sf_dir)
+        df = fs.retrieve("user", sel, keys)
         plan = explain_formatted(df)
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thr)
     assert "SortMergeJoin" not in plan and "ShuffledHashJoin" not in plan
-    assert "BroadcastHashJoin LeftSemi BuildRight" in plan
-    assert "BroadcastHashJoin LeftOuter BuildRight" in plan
+    assert plan.count("BroadcastHashJoin LeftOuter BuildRight") == 1
+    assert plan.count("BroadcastHashJoin ") == 1  # tree line; details say "(n) BroadcastHashJoin"
+    assert "Exchange hashpartitioning" not in plan
+    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+    partition_filters = [
+        line for line in plan.splitlines() if line.startswith("PartitionFilters: ")
+    ]
+    assert any("key_bucket#" in f and " IN (" in f for f in partition_filters)
+    assert "In(user_id, [" in " ".join(pushed_filters(df))
+
+
+def _jobs_launched(spark, fn):
+    """(fn(), Spark jobs it launched): status-tracker job-id delta after
+    the listener bus has drained."""
+    sc = spark.sparkContext
+    st = sc.statusTracker()
+
+    def ids():
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return set(st.getJobIdsForGroup())
+
+    before = ids()
+    out = fn()
+    return out, len(ids() - before)
+
+
+def test_lookup_job_counts(spark, tmp_path):
+    """A serve lookup on a local-relation request: retrieve() plans with
+    0 jobs (the table schema comes from the sidecar, the request keys are
+    collected without a job), collecting a single-store lookup takes at
+    most 2 (broadcast of the filtered scan + the join stage), and
+    collecting score_ids takes 1 (literal-IN candidate filter)."""
+    from bharatmlstack_spark.operators.knn import VectorSearch
+
+    fs, keys, sel = _stored_lookup(spark, tmp_path)
+    fs.retrieve("user", sel, keys).collect()  # warm the path once
+    df, planned = _jobs_launched(spark, lambda: fs.retrieve("user", sel, keys))
+    rows, executed = _jobs_launched(spark, df.collect)
+    assert planned == 0
+    assert 1 <= executed <= 2
+    assert len(rows) == 100
+
+    path = str(tmp_path / "cands")
+    spark.range(0, 50).select(
+        F.col("id").alias("candidate_id"),
+        F.array(F.col("id").cast("float"), F.lit(1.0).cast("float")).alias("embedding"),
+    ).write.parquet(path)
+    cands = spark.read.parquet(path)
+    ids = spark.createDataFrame(pd.DataFrame({"candidate_id": [3, 9, 9, 70]}))
+    scored, planned = _jobs_launched(
+        spark, lambda: VectorSearch().score_ids(cands, ids, [1.0, 2.0])
+    )
+    got, executed = _jobs_launched(spark, scored.collect)
+    assert planned == 0 and executed == 1
+    assert sorted((r["candidate_id"], r["score"]) for r in got) == [(3, 5.0), (9, 11.0)]
 
 
 def test_events_range_is_take_ordered(spark, sf_dir, qs):
@@ -372,10 +451,13 @@ def test_minhash_lsh_no_corpus_wide_verify(spark, sf_dir, qs):
 
 
 def test_multi_store_retrieve_broadcasts_keys(spark, sf_dir, qs):
-    """S3 scatter-gather: both store joins must broadcast the request side
-    (feature tables never shuffle)."""
-    df = qs["feature_multi_store"](spark, sf_dir)
-    assert has_broadcast_join(df)
+    """S3 scatter-gather: one broadcast request LEFT JOIN per store, no
+    hash Exchange (feature tables never shuffle)."""
+    from bharatmlstack_spark.plans import explain_formatted
+
+    plan = explain_formatted(qs["feature_multi_store"](spark, sf_dir))
+    assert plan.count("BroadcastHashJoin LeftOuter BuildRight") == 2
+    assert "Exchange hashpartitioning" not in plan
 
 
 def test_metadata_dim_join_filters_before_join(spark, sf_dir, qs):

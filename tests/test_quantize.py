@@ -123,7 +123,6 @@ def test_compat_matrix():
 
 def test_spark_quantize_udfs(spark):
     import pandas as pd
-    from pyspark.sql import functions as F
 
     from bharatmlstack_spark.functions.quantize import fp16_roundtrip, fp8e5m2_roundtrip
 
@@ -131,7 +130,7 @@ def test_spark_quantize_udfs(spark):
         pd.DataFrame({"x": [0.1, 1.0, 3.14159, 57344.0]}),
     )
     rows = df.select(
-        fp16_roundtrip(F.col("x")).alias("h"), fp8e5m2_roundtrip(F.col("x")).alias("e")
+        fp16_roundtrip("x").alias("h"), fp8e5m2_roundtrip("x").alias("e")
     ).collect()
     assert rows[1]["h"] == 1.0 and rows[1]["e"] == 1.0
     assert rows[2]["h"] == pytest.approx(3.140625, abs=1e-6)  # fp16(3.14159)
@@ -139,14 +138,13 @@ def test_spark_quantize_udfs(spark):
 
 
 def test_spark_quantize_vector_udf(spark):
-    from pyspark.sql import functions as F
     from pyspark.sql.types import ArrayType, DoubleType, StructField, StructType
 
     from bharatmlstack_spark.functions.quantize import fp16_roundtrip
 
     schema = StructType([StructField("v", ArrayType(DoubleType()), True)])
     df = spark.createDataFrame([([0.1, 1.0, 2.5],), (None,)], schema)
-    rows = df.select(fp16_roundtrip(F.col("v"), vector=True).alias("q")).collect()
+    rows = df.select(fp16_roundtrip("v", vector=True).alias("q")).collect()
     assert rows[0]["q"][1] == 1.0 and rows[0]["q"][2] == 2.5
     assert rows[1]["q"] is None
 
@@ -188,10 +186,10 @@ def test_storage_codec_through_parquet(spark, tmp_path):
         F.col("id"), (F.col("id") / 7.0).cast("double").alias("x")
     )
     path = str(tmp_path / "narrow")
-    df.select("id", fp16_encode(F.col("x")).alias("x_fp16")).write.parquet(path)
+    df.select("id", fp16_encode("x").alias("x_fp16")).write.parquet(path)
     loaded = spark.read.parquet(path)
     assert dict(loaded.dtypes)["x_fp16"] == "smallint"
-    back = loaded.select("id", fp16_decode(F.col("x_fp16")).alias("x"))
+    back = loaded.select("id", fp16_decode("x_fp16").alias("x"))
     raw = {r["id"]: r["x"] for r in back.collect()}
     import numpy as nperr  # noqa: F401  (keep numpy import local pattern consistent)
     for r in df.collect():

@@ -484,11 +484,12 @@ def test_simhash_banding_fuzz_matches_python_popcount(spark, base, flips):
             h = bin((fps[a] ^ fps[b]) & _U64).count("1")
             if h <= 3:
                 expect.add((a, b, h))
-    got = {
+    rows = [
         (r["id_a"], r["id_b"], r["hamming"])
         for r in simhash_near_pairs(df, max_hamming=3).collect()
-    }
-    assert got == expect, fps
+    ]
+    assert len(rows) == len(set(rows)), fps  # each pair emitted exactly once
+    assert set(rows) == expect, fps
 
 
 @settings(max_examples=15, deadline=None)
