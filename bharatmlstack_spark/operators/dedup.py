@@ -35,36 +35,53 @@ def tokenize(col: Column | str) -> Column:
     return F.split(F.trim(c), r"\s+")
 
 
+def _shingled(seq: Column, n: int, shingle, whole) -> Column:
+    """Distinct ``shingle(s, i)`` over the n-windows of the array ``seq``
+    (``whole(s)`` when it has fewer than n elements).
+
+    ``seq`` is bound ONCE per row by an outer one-element transform: a
+    column expression referenced inside a lambda is re-evaluated on every
+    call, so the bare form re-split and re-hashed the whole text for each
+    shingle — O(words²) per document."""
+    return F.element_at(
+        F.transform(
+            F.array(seq),
+            lambda s: F.array_distinct(
+                F.when(
+                    F.size(s) >= n,
+                    F.transform(
+                        F.sequence(F.lit(0), F.size(s) - n),
+                        lambda i: shingle(s, i),
+                    ),
+                ).otherwise(F.array(whole(s)))
+            ),
+        ),
+        1,
+    )
+
+
 def hashed_word_shingles(col: Column | str, n: int = 3) -> Column:
     """Distinct word n-grams as LONG hashes, never materializing the n-gram
-    strings: each word hashes once, a shingle hash is xxhash64 over the
-    n-long slice of word hashes. Collision-equivalent to
+    strings: each word hashes once, a shingle hash is
+    ``xxhash64(wh[i], ..., wh[i+n-1])`` over the word hashes ``wh`` — Spark
+    hashes those arguments exactly like the slice
+    ``xxhash64(slice(wh, i+1, n))``. Collision-equivalent to
     ``xxhash64(word_shingles(...))`` but allocation-free — use wherever the
     consumer only needs shingle IDENTITY (MinHash, SimHash), not the string
     (the PPJoin/oracle paths keep string shingles)."""
-    words = tokenize(col)
-    wh = F.transform(words, lambda w: F.xxhash64(w))
-    return F.array_distinct(
-        F.when(
-            F.size(words) >= n,
-            F.transform(
-                F.sequence(F.lit(0), F.size(words) - n),
-                lambda i: F.xxhash64(F.slice(wh, i + 1, n)),
-            ),
-        ).otherwise(F.array(F.xxhash64(wh)))
+    wh = F.transform(tokenize(col), lambda w: F.xxhash64(w))
+    return _shingled(
+        wh, n, lambda s, i: F.xxhash64(*[s[i + k] for k in range(n)]), F.xxhash64
     )
 
 
 def _shingles_of_words(words: Column, n: int) -> Column:
     """Distinct word n-grams from an already-tokenized words array."""
-    return F.array_distinct(
-        F.when(
-            F.size(words) >= n,
-            F.transform(
-                F.sequence(F.lit(0), F.size(words) - n),
-                lambda i: F.concat_ws(" ", F.slice(words, i + 1, n)),
-            ),
-        ).otherwise(F.array(F.concat_ws(" ", words)))
+    return _shingled(
+        words,
+        n,
+        lambda s, i: F.concat_ws(" ", F.slice(s, i + 1, n)),
+        lambda s: F.concat_ws(" ", s),
     )
 
 
@@ -537,38 +554,33 @@ def simhash(
 
     The +-1 vote for bit b is ``2*ones_b - n_tokens`` where ``ones_b``
     counts tokens with bit b set, so only the ones-counts need
-    aggregating. Three 21-bit ones-counters are packed per 64-bit sum
-    (fields at shifts 0/21/42; a field saturates only past 2^21 tokens
-    per doc, guarded below), shrinking the aggregation to
-    ceil(bits/3)+1 longs with plain shift-and-mask expressions instead
-    of ``bits`` branchy when/otherwise sums.
+    aggregating. They are packed three per 64-bit sum: sum j adds
+    ``(h >>> j) & (1 | 1<<21 | 1<<42)`` per token hash h, so bits j, j+21
+    and j+42 count in its 21-bit fields at shifts 0/21/42, and the top
+    field of sum 21 carries bit 63 (a field saturates only past 2^21
+    tokens per doc, guarded below). The sums (22 at 64 bits) are ONE
+    ``transform`` over ``sequence(0, 21)`` of an ``aggregate`` fold over
+    the token hashes; the fingerprint is one OR-fold over the bits.
 
-    Entirely MAP-SIDE (like minhash_signatures): the per-token hashes
-    live in an in-row array and each packed sum is an ``F.aggregate``
-    long fold over it — no explode, no groupBy. To be precise about
-    what this buys: the previous explode+groupBy form already combined
-    map-side (partial aggregation), so its exchange was per-DOC, not
-    per-token — wall-clock at sf0.1 is unchanged. What the fold
-    removes is structural: the per-token row materialization and
-    hash-table probes inside the aggregate, and the exchange + stage
-    boundary entirely — fingerprinting is now ONE whole-stage-codegen
-    projection (0 Exchanges in the executed plan), so the only shuffle
-    in the SimHash pipeline is the band bucket join, and the
-    fingerprint stage fuses with whatever scan/filter precedes it.
+    Entirely MAP-SIDE (like minhash_signatures): no explode, no groupBy,
+    0 Exchanges in the executed plan, so the only shuffle in the SimHash
+    pipeline is the band bucket join. The folds are higher-order
+    functions, evaluated interpretively inside the codegen'd stage.
     Integer adds commute, so the fold is bit-identical to the exploded
-    sum (pinned against an independent per-bit reference in
-    tests/test_dedup_text.py). NULL text drops the doc from the
-    output, matching the explode form's behavior.
+    per-bit vote sum (pinned against independent references in
+    tests/test_dedup_text.py and tests/test_text_fuzz.py). NULL text
+    drops the doc from the output.
 
     ``tokens_col``: a pre-tokenized words array column (e.g. a persisted
     (id, words) frame shared with an exact-verification branch —
     queries_text.dedup_simhash). Skips both the tokenize and the input
     spread: the caller is expected to have spread/persisted the frame."""
     _FIELD = 21  # 3 packed counters per long; safe below 2**21 tokens/doc
-    n_packed = (bits + 2) // 3
+    # bit b < 63 counts in sum b % 21; at 64 bits, sum 21 adds bit 63
+    n_sums = min(bits, _FIELD) + (bits > 3 * _FIELD)
     # the fold below is the CPU-heaviest map in the SimHash pipeline
-    # (tokenize + per-token hash + ceil(bits/3)+1 packed folds + the
-    # 64-term fingerprint sum); when the source arrives in fewer splits
+    # (tokenize + per-token hash + 22 packed folds + the fingerprint
+    # fold); when the source arrives in fewer splits
     # than cores (a 3-branch corpus union reading one parquet file), the
     # whole fingerprint stage runs on those few tasks — spread the raw
     # text first, exactly as minhash_lsh_dedup_pairs does (the text
@@ -579,54 +591,37 @@ def simhash(
         par = df.sparkSession.sparkContext.defaultParallelism
         if df.rdd.getNumPartitions() < par:
             df = df.repartition(par)
-    base = df.select(
+    # NULL text drops the doc. Filter the source column, not __wh: a filter
+    # on __wh is pushed below the projection and tokenizes + hashes twice.
+    base = df.filter(F.col(tokens_col or text_col).isNotNull()).select(
         F.col(id_col).alias("id"),
         F.transform(tokens, lambda w: F.xxhash64(w)).alias("__wh"),
-    ).filter(F.col("__wh").isNotNull())
+    )
 
-    # The fold and fingerprint expressions below are built as SQL STRINGS
-    # parsed once by F.expr, not as Column-by-Column Python trees: the
-    # Column form costs ~2 s of driver time PER CALL in py4j round-trips
-    # (22 lambda conversions + 64 when-terms x ~6 calls each, measured in
-    # OPTIMIZATION_r17.md) while the parsed tree — and therefore the
-    # analyzed plan, the codegen and every result bit — is identical.
-    # Guide §5: the driver should do almost no work; expression
-    # construction is driver work.
-    def packed_sql(j: int) -> str:
-        # bits 3j, 3j+1, 3j+2 of h -> 21-bit fields 0, 1, 2 of sum j
-        c = f"(shiftrightunsigned(__h, {3 * j}) & 1)"
-        for k in (1, 2):
-            b = 3 * j + k
-            if b < bits:
-                c += (
-                    f" + shiftleft(CAST((shiftrightunsigned(__h, {b}) & 1)"
-                    f" AS BIGINT), {_FIELD * k})"
-                )
-        return c
-
-    def fold_sql(j: int) -> Column:
-        return F.expr(
-            "aggregate(__wh, CAST(0 AS BIGINT),"
-            f" (__acc, __h) -> __acc + {packed_sql(j)})"
-        )
-
+    # Both folds are SQL text parsed once by F.expr: a Column-built tree
+    # costs seconds of py4j round-trips per call for the same parsed plan
+    # (OPTIMIZATION_r17.md). Field layout: see the docstring.
+    fields = 1 | 1 << _FIELD | 1 << 2 * _FIELD
     votes = base.select(
         "id",
         F.size("__wh").cast("long").alias("__cnt"),
-        *[fold_sql(j).alias(f"p{j}") for j in range(n_packed)],
+        F.expr(
+            f"transform(sequence(0, {n_sums - 1}), __j -> aggregate(__wh,"
+            f" CAST(0 AS BIGINT), (__acc, __h) -> __acc"
+            f" + (shiftrightunsigned(__h, __j) & {fields})))"
+        ).alias("__p"),
     )
-    mask = (1 << _FIELD) - 1
-    fp_terms = ["CAST(0 AS BIGINT)"]
-    for b in range(bits):
-        j, k = divmod(b, 3)
-        ones = f"(shiftrightunsigned(p{j}, {_FIELD * k}) & {mask})"
-        # vote = 2*ones - cnt; positive iff 2*ones > cnt
-        fp_terms.append(
-            f"CASE WHEN {ones} * 2 > __cnt THEN"
-            f" shiftleft(CAST(1 AS BIGINT), {b})"
-            " ELSE CAST(0 AS BIGINT) END"
-        )
-    fp = F.expr(" + ".join(fp_terms))
+    # bit b = field k of sum b - 21k, k = least(b div 21, 2); its vote
+    # 2*ones - cnt is positive iff 2*ones > cnt
+    k = f"least(__b div {_FIELD}, 2)"
+    ones = (
+        f"(shiftrightunsigned(__p[__b - {_FIELD} * {k}], {_FIELD} * {k})"
+        f" & {(1 << _FIELD) - 1})"
+    )
+    fp = F.expr(
+        f"aggregate(sequence(0, {bits - 1}), CAST(0 AS BIGINT), (__fp, __b) -> __fp"
+        f" | IF({ones} * 2 > __cnt, shiftleft(CAST(1 AS BIGINT), __b), CAST(0 AS BIGINT)))"
+    )
     guard = F.assert_true(
         F.col("__cnt") < F.lit(1 << _FIELD),
         F.concat(
@@ -655,21 +650,19 @@ def simhash_near_pairs(
     then; duplicate ids yield duplicate pairs, since no pair dedup runs."""
     n_bands = 64 // band_bits
     mask = (1 << band_bits) - 1
+
+    # SQL text throughout: the Column-built pieces and predicate cost ~900
+    # py4j round-trips per call for the same parsed plan
+    def band(side: str, j: int) -> str:
+        return f"(shiftright({side}simhash, {j * band_bits}) & {mask})"
+
     # the banded frame self-joins: persist it (4 small rows per doc) so the
     # fingerprint computation (tokenize + 64 bit-votes over the corpus)
     # runs once, not once per join side
+    pieces = ", ".join(band("", j) for j in range(n_bands))
     pieces = defer_unpersist(
-        fingerprints.select(
-            F.col("id"),
-            F.col("simhash"),
-            F.posexplode(
-                F.array(
-                    *[
-                        F.shiftright("simhash", i * band_bits).bitwiseAND(F.lit(mask))
-                        for i in range(n_bands)
-                    ]
-                )
-            ).alias("piece_idx", "piece"),
+        fingerprints.selectExpr(
+            "id", "simhash", f"posexplode(array({pieces})) AS (piece_idx, piece)"
         ).persist()
     )
     a, b = pieces.alias("a"), pieces.alias("b")
@@ -683,28 +676,19 @@ def simhash_near_pairs(
     # two fingerprints agree (the join guarantees at least one), and every
     # qualifying pair survives exactly once — same multiset, same hamming
     # (a function of the two fingerprints alone), zero pair exchanges.
-    def _band(side: str, j: int) -> Column:
-        return F.shiftright(F.col(f"{side}.simhash"), j * band_bits).bitwiseAND(
-            F.lit(mask)
-        )
-
-    first_match = F.coalesce(
-        *[F.when(_band("a", j) == _band("b", j), F.lit(j)) for j in range(n_bands)]
+    first_match = ", ".join(
+        f"CASE WHEN {band('a.', j)} = {band('b.', j)} THEN {j} END"
+        for j in range(n_bands)
     )
     return (
         a.join(b, on=["piece_idx", "piece"])
-        .filter(F.col("a.id") < F.col("b.id"))
-        .filter(F.col("piece_idx") == first_match)
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))).alias(
-                "hamming"
-            ),
+        .where(f"a.id < b.id AND piece_idx = coalesce({first_match})")
+        .selectExpr(
+            "a.id AS id_a", "b.id AS id_b", "bit_count(a.simhash ^ b.simhash) AS hamming"
         )
         # popcount is row-local too: every filter in this pipeline runs
         # inside the join stage; no exchange touches the pair set
-        .filter(F.col("hamming") <= max_hamming)
+        .where(f"hamming <= {max_hamming}")
     )
 
 

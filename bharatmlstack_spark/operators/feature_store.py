@@ -138,7 +138,7 @@ def hadoop_list_partition_dirs(
     reading the root and filtering ``isin(values)`` lists EVERY partition
     dir first — at thousands of buckets that O(all dirs) file-discovery
     job dwarfs the pruned scan itself (measured for the near-dup state in
-    tools/neardup_state_experiment.py; the same economics apply to any
+    SCALE.md's r09 tables; the same economics apply to any
     bucket-partitioned table on an object store)."""
     jvm = spark._jvm
     jpath = jvm.org.apache.hadoop.fs.Path(path)

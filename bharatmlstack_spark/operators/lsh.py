@@ -328,6 +328,11 @@ class IvfIndex:
             query_emb_col,
             F.explode(probe_col).alias("cell"),
         )
+        # join on a NON-NULL key: on the nullable UDF output the join's
+        # inferred isnotnull(cell) filter is pushed below the projection
+        # and the cell-assignment UDF runs twice (two ArrowEvalPython).
+        # Probe cells are >= 0, so the -1 stand-in matches nothing.
+        indexed = indexed.withColumn("cell", F.coalesce("cell", F.lit(-1)))
         cands = indexed.join(F.broadcast(probes), on="cell")
         scored = cands.withColumn(
             "score", score_column(metric, F.col(self.emb_col), F.col(query_emb_col))

@@ -1602,7 +1602,7 @@ def semantic_dedup_ivf_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_cells follows the operator's PRESCRIBED costing, n_cells ~ n/10^4
     (cells stay ~10^4 vectors, sum(|cell|^2) stays executor-sized),
     derived from one cheap driver-side count — not a hardcoded cell
-    count. tools/scale_experiment.py keeps the cautionary pair: a fixed
+    count. SCALE.md's 10x scale experiment keeps the cautionary pair: a fixed
     16 cells superlinearly degrades at 10x data (11.0x) where the
     prescribed 16->160 holds 4.5x.
 

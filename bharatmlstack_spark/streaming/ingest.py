@@ -968,7 +968,7 @@ def stream_neardup_minhash_sink(
     the FLAT layout (measured faster there: partitioned appends +
     per-batch bucket collects cost more than the unprunable scans they
     replace — see SCALE.md's 10x rows). Measured regime rule
-    (tools/neardup_state_experiment.py, SCALE.md r09 tables): prefer
+    (SCALE.md, r09 batch≪index near-dup state tables): prefer
     FLAT for replay-style bulk loads (batch ~= index); the default
     bucketed form (HYBRID — sets partitioned, bands flat) wins once
     batch ≪ index (1.15x e2e at a 1M-doc index, verify prune 6.4x,
@@ -1008,8 +1008,8 @@ def stream_neardup_minhash_sink(
     ``phase_log`` (measurement only): pass a list and each micro-batch
     appends {sign_s, probe_s, verify_s, append_s, total_s} — phase
     boundaries are forced with count() actions, so instrumented runs
-    are NOT wall-clock-identical to production runs; used by
-    tools/neardup_state_experiment.py to attribute layout costs."""
+    are NOT wall-clock-identical to production runs; used to attribute
+    layout costs in SCALE.md's r09 near-dup state tables."""
     from bharatmlstack_spark.operators.dedup import (
         band_signatures,
         hashed_word_shingles,
@@ -1154,7 +1154,7 @@ def stream_neardup_minhash_sink(
                 "compact/rebucket pass) before resuming the sink."
             )
         _ensure_layout()
-        # phase_log instrumentation (tools/neardup_state_experiment.py):
+        # phase_log instrumentation (SCALE.md r09 near-dup state tables):
         # forces a count() at each phase boundary so the phases time
         # separately — measurement mode only, never the production path
         instrument = phase_log is not None
@@ -1196,7 +1196,7 @@ def stream_neardup_minhash_sink(
                     # Reading the root and filtering isin() would list
                     # every bucket dir first: at state_buckets=4096 the
                     # O(buckets) discovery job dwarfs the probe itself
-                    # (measured in tools/neardup_state_experiment.py);
+                    # (measured in SCALE.md's r09 near-dup state runs);
                     # targeted paths make listing + read both O(touched).
                     existing = _list_kb_dirs(spark, bands_path)
                     probe_kb = [

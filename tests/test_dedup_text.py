@@ -73,6 +73,17 @@ def test_word_shingles_short_doc(spark):
     assert out == ["only two"]  # whole text as single shingle when < n words
 
 
+def test_shingle_columns_tokenize_once(spark):
+    """Each shingle expression holds the tokenizing split exactly once: the
+    word (hash) array is bound by an outer lambda. Referenced inside the
+    per-shingle lambda instead, it is re-split and re-hashed for every
+    shingle — O(words²) per document."""
+    df = spark.createDataFrame([(1, "a b c d")], "id long, text string")
+    for col in (DD.hashed_word_shingles("text", 3), DD.word_shingles("text", 3)):
+        plan = df.select(col.alias("s"))._jdf.queryExecution().analyzed().toString()
+        assert plan.count("split(") == 1, plan
+
+
 # -- text functions ---------------------------------------------------------
 
 

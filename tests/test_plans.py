@@ -493,6 +493,34 @@ def test_ann_ivf_exact_side_cached_once(spark, sf_dir, qs):
     assert plan.count("InMemoryTableScan") >= 2
 
 
+def test_ivf_search_assigns_cells_once(spark):
+    """IvfIndex.search joins on a non-null cell key, so the candidate side
+    runs the cell-assignment UDF once. On the nullable UDF output the
+    join's inferred isnotnull(cell) filter is pushed below the projection
+    and plans a second ArrowEvalPython over the same UDF. index() itself
+    keeps `cell` a nullable int: the streaming sinks persist its schema."""
+    import numpy as np
+    from pyspark.sql.types import IntegerType
+
+    from bharatmlstack_spark.operators.lsh import IvfIndex
+
+    x = np.random.default_rng(0).standard_normal((200, 8))
+    cands = spark.createDataFrame(
+        [(i, [float(v) for v in r]) for i, r in enumerate(x)],
+        "vec_id long, embedding array<float>",
+    )
+    q = spark.createDataFrame(
+        [(0, [float(v) for v in x[3]])], "query_id long, query_embedding array<float>"
+    )
+    idx = IvfIndex(n_cells=4).fit(cands, sample_size=100, iters=2)
+    indexed = idx.index(cands)
+    cell = indexed.schema["cell"]
+    assert cell.dataType == IntegerType() and cell.nullable
+    plan = idx.search(indexed, q, k=3, nprobe=2)._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("ArrowEvalPython [assign(") == 1, plan  # candidate side
+    assert plan.count("ArrowEvalPython [probe_cells(") == 1, plan  # query side
+
+
 def test_round5_rows_hold_their_shuffle_budgets(spark, sf_dir, qs):
     # the declared shuffle budget of each round-5 row: a refactor that
     # adds an exchange (or a cartesian product) fails here even if the

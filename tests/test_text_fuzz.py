@@ -74,6 +74,61 @@ def test_word_shingles_match_python(spark, texts, n):
         assert r.sh == ref(r.text), (r.text, n, r.sh)
 
 
+# texts every shingle batch carries: NULL, empty, whitespace-only, one and
+# two words, and 5,000 words (quadratic shingling shows there)
+_SHINGLE_EDGES = [None, "", " \t ", "solo", "two  words"] + [
+    " ".join(f"w{i % 613}" for i in range(5000))
+]
+
+
+@settings(max_examples=10, deadline=None)
+@given(_texts, st.integers(min_value=1, max_value=8))
+def test_shingles_match_materialised_words_reference(spark, texts, n):
+    """hashed_word_shingles and word_shingles equal their O(words)
+    definition: tokenize and hash the words in a prior, materialised
+    select, then shingle the stored arrays (a hashed shingle is
+    xxhash64 over the slice of n word hashes)."""
+    from bharatmlstack_spark.operators.dedup import (
+        hashed_word_shingles,
+        tokenize,
+        word_shingles,
+    )
+
+    rows = list(enumerate(texts + _SHINGLE_EDGES))
+    df = spark.createDataFrame(rows, "id long, text string")
+    words = df.select(
+        "id",
+        tokenize("text").alias("w"),
+        F.transform(tokenize("text"), lambda x: F.xxhash64(x)).alias("wh"),
+    ).localCheckpoint()
+
+    def shingle(arr, one, whole):
+        return F.array_distinct(
+            F.when(
+                F.size(arr) >= n,
+                F.transform(F.sequence(F.lit(0), F.size(arr) - n), one),
+            ).otherwise(F.array(whole))
+        )
+
+    ref = words.select(
+        "id",
+        shingle("wh", lambda i: F.xxhash64(F.slice("wh", i + 1, n)), F.xxhash64("wh")).alias("h"),
+        shingle(
+            "w", lambda i: F.concat_ws(" ", F.slice("w", i + 1, n)), F.concat_ws(" ", "w")
+        ).alias("s"),
+    )
+    got = df.select(
+        "id",
+        hashed_word_shingles("text", n).alias("h"),
+        word_shingles("text", n).alias("s"),
+    )
+    want = {r.id: (r.h, r.s) for r in ref.collect()}
+    have = {r.id: (r.h, r.s) for r in got.collect()}
+    assert set(have) == set(want) == set(range(len(rows)))
+    for i, t in rows:
+        assert have[i] == want[i], (t if t is None else t[:80], n)
+
+
 # ---------------------------------------------------------------------------
 # z-order interleave law over the full 16-bit domain
 # ---------------------------------------------------------------------------
@@ -523,6 +578,37 @@ def test_simhash_fold_matches_python_vote_counter(spark, texts):
                 fp |= 1 << b
         if fp >= 1 << 63:  # Spark longs are signed
             fp -= 1 << 64
+        assert got[d] == fp, (d, texts[d])
+
+
+@settings(max_examples=5, deadline=None)
+@given(_texts)
+def test_simhash_fold_bits32_matches_python_vote_counter(spark, texts):
+    """bits < 64: the packed sums are indexed by bit % 21, so a 32-bit
+    fingerprint must equal the Python per-bit vote counter over the low
+    32 bits of the same token hashes."""
+    from bharatmlstack_spark.operators import dedup as DD
+
+    docs = spark.createDataFrame(
+        list(enumerate(texts)), "doc_id long, text string"
+    )
+    hashes = {
+        r["doc_id"]: [h & _U64 for h in r["wh"]]
+        for r in docs.select(
+            "doc_id",
+            F.transform(DD.tokenize("text"), lambda w: F.xxhash64(w)).alias("wh"),
+        ).collect()
+    }
+    got = {
+        r["id"]: r["simhash"]
+        for r in DD.simhash(docs, id_col="doc_id", bits=32).collect()
+    }
+    assert set(got) == set(hashes)
+    for d, whs in hashes.items():
+        fp = 0
+        for b in range(32):
+            if 2 * sum((h >> b) & 1 for h in whs) > len(whs):
+                fp |= 1 << b
         assert got[d] == fp, (d, texts[d])
 
 
