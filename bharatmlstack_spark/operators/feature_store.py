@@ -27,6 +27,13 @@ the raw request LEFT JOINs a broadcast of it: BroadcastHashJoin builds the
 right side of a LEFT OUTER join, the table never shuffles, and the unique
 primary key keeps request multiplicity without a key dedup. The table's
 schema comes from its meta sidecar, so opening it launches no Spark job.
+
+Writes (persist, delete, compact) cost O(touched buckets) the same way:
+the new rows of the touched buckets are written ONCE, to a stage beside
+the table, and one tablecommit marker swaps those bucket dirs in, drops
+the buckets left empty and installs the sidecar. Every read and write
+finishes a marker a crash left behind, so each sees the old or the new
+table, never a mix.
 """
 
 from __future__ import annotations
@@ -66,24 +73,6 @@ def hadoop_path_exists(spark: SparkSession, path: str) -> bool:
 TABLE_META_FILE = "_bharatml_table_meta.json"
 
 
-def hadoop_write_text(spark: SparkSession, path: str, text: str) -> None:
-    """Small-file write through the Hadoop FS API (works on HDFS/S3/GCS).
-
-    NOT crash-safe for REPLACING a file something depends on:
-    ``fs.create(path, True)`` truncates in place, so a crash mid-write
-    leaves a torn file. Sidecars (which carry the streamed states'
-    layout/signature contract and are rewritten every micro-batch) go
-    through hadoop_write_text_atomic instead."""
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    out = fs.create(jpath, True)
-    try:
-        out.write(bytearray(text.encode("utf-8")))
-    finally:
-        out.close()
-
-
 # staged half of an atomic small-file replace; read_table_meta knows how
 # to adopt an orphaned one after a crash
 TEXT_TMP_SUFFIX = ".__tmp"
@@ -91,16 +80,16 @@ TEXT_TMP_SUFFIX = ".__tmp"
 
 def hadoop_write_text_atomic(spark: SparkSession, path: str, text: str) -> None:
     """Crash-safe small-file REPLACE: write the full content to
-    ``<path>.__tmp``, delete the target, rename the tmp over it. The
-    in-place truncate of hadoop_write_text exposes every reader to a
-    torn file for the duration of the write — fatal once the meta
-    sidecar became a per-micro-batch write carrying the layout contract
-    (a truncated JSON bricks every subsequent sink start). Crash
-    windows: mid-tmp-write leaves a torn tmp but the INTACT target
-    (readers unaffected; the next write overwrites the tmp); between
-    delete and rename leaves no target but a COMPLETE tmp, which
-    read_table_meta adopts (a torn tmp with a missing target cannot
-    occur — the tmp write strictly precedes the delete)."""
+    ``<path>.__tmp``, delete the target, rename the tmp over it. An
+    in-place truncate would expose every reader to a torn file for the
+    duration of the write — fatal for a sidecar rewritten every
+    micro-batch carrying the layout contract (a truncated JSON bricks
+    every subsequent sink start). Crash windows: mid-tmp-write leaves a
+    torn tmp but the INTACT target (readers unaffected; the next write
+    overwrites the tmp); between delete and rename leaves no target but
+    a COMPLETE tmp, which read_table_meta adopts (a torn tmp with a
+    missing target cannot occur — the tmp write strictly precedes the
+    delete)."""
     jvm = spark._jvm
     jpath = jvm.org.apache.hadoop.fs.Path(path)
     fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
@@ -162,11 +151,8 @@ def hadoop_list_partition_dirs(
 
 
 def hadoop_delete_path(spark: SparkSession, path: str) -> bool:
-    """Recursive delete through the Hadoop FS API (HDFS/S3/GCS-safe) —
-    used to drop bucket directories a key-delete fully emptied (dynamic
-    partition overwrite only REPLACES partitions present in the new
-    output; an emptied bucket produces no output rows, so its stale
-    directory must be removed explicitly)."""
+    """Recursive delete through the Hadoop FS API (HDFS/S3/GCS-safe):
+    stages, tombstone tables and other scratch dirs."""
     jvm = spark._jvm
     jpath = jvm.org.apache.hadoop.fs.Path(path)
     fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
@@ -183,12 +169,19 @@ def write_table_meta(
     lets readers open the table without a schema-inference job."""
     import json
 
+    path, meta = table_meta_entry(table_path, n_buckets, schema)
+    hadoop_write_text_atomic(spark, path, json.dumps(meta))
+
+
+def table_meta_entry(
+    table_path: str, n_buckets: int, schema: T.StructType | None = None
+) -> tuple[str, dict]:
+    """(sidecar path, content) of write_table_meta, for a commit that
+    installs the sidecar together with the data."""
     meta: dict = {"n_buckets": n_buckets}
     if schema is not None:
         meta["schema"] = schema.jsonValue()
-    hadoop_write_text_atomic(
-        spark, os.path.join(table_path, TABLE_META_FILE), json.dumps(meta)
-    )
+    return os.path.join(table_path, TABLE_META_FILE), meta
 
 
 def _table_schema(df: DataFrame) -> T.StructType:
@@ -318,32 +311,37 @@ class FeatureStore:
     def _table_path(self, entity_label: str, store_id: int = 0) -> str:
         return os.path.join(self.base_path, entity_label, f"store_{store_id}")
 
-    def _drop_table(self, path: str) -> None:
-        """Remove a table directory entirely (incl. the meta sidecar) and
-        forget its cached bucket count — the next persist sees a NEW table
-        (ctor n_buckets applies again). Used when a delete empties the
-        whole table: leaving only the sidecar behind would make
-        hadoop_path_exists(path) true while spark.read.parquet(path)
-        raises 'Unable to infer schema for Parquet'."""
-        hadoop_delete_path(self.spark, path)
-        self._nb_cache.pop(path, None)
+    def _bucket_dirs(self, path: str) -> dict[int, str]:
+        """{bucket: dir} of the table at ``path`` ({} when there is none),
+        after finishing a commit a crash left pending. One driver-side
+        listStatus gives the layout AND the dirs for targeted pruned
+        reads; reading the root + isin would list every bucket dir first
+        (hadoop_list_partition_dirs). A table without ``key_bucket=``
+        dirs was not written by FeatureStore: it is refused."""
+        from bharatmlstack_spark.tablecommit import BUCKET_MARKER_SUFFIX, finish_commit
 
-    def _drop_table_if_no_buckets(self, path: str) -> None:
-        """After dropping emptied bucket dirs, check whether ANY
-        key_bucket= directory survives; if none does, the table holds no
-        data files (just the sidecar) and must be dropped — see
-        _drop_table. The listing is driver-side over <= n_buckets
-        entries, Hadoop-FS-API so HDFS/S3/GCS-safe."""
-        jvm = self.spark._jvm
-        jpath = jvm.org.apache.hadoop.fs.Path(path)
-        fs = jpath.getFileSystem(self.spark._jsc.hadoopConfiguration())
-        if not fs.exists(jpath):
-            self._nb_cache.pop(path, None)
-            return
-        for st in fs.listStatus(jpath):
-            if st.getPath().getName().startswith(f"{BUCKET_COL}="):
-                return
-        self._drop_table(path)
+        finish_commit(self.spark, path + BUCKET_MARKER_SUFFIX)
+        kb_dirs = hadoop_list_partition_dirs(self.spark, path, BUCKET_COL)
+        if not kb_dirs and hadoop_path_exists(self.spark, path):
+            raise ValueError(
+                f"feature table {path} has no {BUCKET_COL}= partition dirs; "
+                "FeatureStore reads and writes only its bucket-partitioned "
+                "layout"
+            )
+        if not kb_dirs:
+            self._nb_cache.pop(path, None)  # a NEW table: ctor n_buckets
+        return kb_dirs
+
+    def _drop_table(self, path: str) -> None:
+        """Commit the removal of the whole table dir, sidecar included,
+        and forget its cached bucket count — the next persist sees a NEW
+        table. Used when a delete or compact empties every bucket: a
+        sidecar-only dir would read as an empty table whose layout no
+        write can extend."""
+        from bharatmlstack_spark.tablecommit import BUCKET_MARKER_SUFFIX, commit
+
+        commit(self.spark, path + BUCKET_MARKER_SUFFIX, [], [path])
+        self._nb_cache.pop(path, None)
 
     # ------------------------------------------------------------------
     # persist (S2 + write path §3.2)
@@ -365,6 +363,10 @@ class FeatureStore:
         ordered by ``order_col`` descending when given (e.g. an event-time
         column, the per-key ordering the reference's sharded consumer
         guarantees — kafka.go:80-95), arbitrarily-but-singly otherwise.
+
+        Only the buckets the batch's keys hash into are read and merged;
+        their merged rows are written once and swapped in by one bucket
+        commit that also installs the sidecar (module docstring).
         """
         entity = self.registry.entity(entity_label)
         for k in entity.key_columns:
@@ -406,24 +408,10 @@ class FeatureStore:
             out = out.dropDuplicates(entity.key_columns)
 
         path = self._table_path(entity_label, store_id)
-        exists = hadoop_path_exists(self.spark, path)
-        # one driver-side listStatus gives the physical layout AND the
-        # dirs for targeted pruned reads; reading the root + isin would
-        # list every bucket dir first (hadoop_list_partition_dirs)
-        kb_dirs = (
-            hadoop_list_partition_dirs(self.spark, path, BUCKET_COL)
-            if exists
-            else {}
-        )
-        legacy = exists and not kb_dirs
-        # schema probe: the table's schema (stored in the sidecar, or merged
-        # over every bucket for a table written before schemas were stored)
-        if not exists:
-            probe = None
-        elif legacy:
-            probe = self.spark.read.parquet(path)
-        else:
-            probe = self._read(path)
+        kb_dirs = self._bucket_dirs(path)
+        # the table's schema, from its sidecar (or merged over every
+        # bucket for a table written before schemas were stored)
+        probe = self._read(path) if kb_dirs else None
 
         # F9 narrow storage: fp16/fp8 FG columns write as bit-pattern
         # integers (2x/4x denser than FLOAT; ref perm_storage_datablock_v2
@@ -442,7 +430,7 @@ class FeatureStore:
         nb = self._effective_n_buckets(path)
         out = out.withColumn(BUCKET_COL, _bucket_expr(entity.key_columns, nb))
 
-        if not exists:
+        if not kb_dirs:
             (
                 out.repartition(BUCKET_COL)
                 .write.mode("overwrite")
@@ -451,59 +439,37 @@ class FeatureStore:
             )
             write_table_meta(self.spark, path, nb, _table_schema(out))
             return
-        if legacy:
-            # pre-bucketed table: migrate to the partitioned layout on this
-            # write (one full rewrite, then scoped forever after)
-            existing = probe.withColumn(
-                BUCKET_COL, _bucket_expr(entity.key_columns, nb)
+        # the incoming batch is the small side by contract — the list of
+        # touched buckets is <= n_buckets driver-side values
+        touched = sorted(r[0] for r in out.select(BUCKET_COL).distinct().collect())
+        # partition pruning: only touched bucket dirs are read (targeted
+        # paths; a touched bucket with no dir yet has no existing rows)
+        paths = [kb_dirs[b] for b in touched if b in kb_dirs]
+        if paths:
+            # read with the table's schema: a column an earlier persist
+            # added only to other buckets still reaches the merge
+            existing = (
+                self.spark.read.schema(probe.schema)
+                .option("basePath", path)
+                .parquet(*paths)
             )
-            touched = None
         else:
-            # the incoming batch is the small side by contract — the list of
-            # touched buckets is <= n_buckets driver-side values
-            touched = sorted(
-                r[0] for r in out.select(BUCKET_COL).distinct().collect()
-            )
-            # partition pruning: only touched bucket dirs are read
-            # (targeted paths; a touched bucket with no dir yet simply
-            # has no existing rows)
-            paths = [kb_dirs[b] for b in touched if b in kb_dirs]
-            if paths:
-                # read with the table's schema: a column an earlier persist
-                # added only to other buckets still reaches the merge
-                existing = (
-                    self.spark.read.schema(probe.schema)
-                    .option("basePath", path)
-                    .parquet(*paths)
-                )
-            else:
-                existing = probe.limit(0)  # schema-preserving empty side
+            existing = probe.limit(0)  # schema-preserving empty side
 
         merged = self._merge_columnwise(existing, out, entity)
+        # the touched buckets are written once and swapped in by one
+        # commit, which also installs the sidecar: the merged frame holds
+        # every table column (the existing side carries the stored
+        # schema), so its schema is the table's
+        from bharatmlstack_spark.tablecommit import commit_buckets
 
-        # parquet can't overwrite a path being read: stage then swap. With
-        # the partitioned layout the final write uses dynamic partition
-        # overwrite, so ONLY the touched bucket directories are replaced.
-        tmp = path + "__staging"
-        (
-            merged.repartition(BUCKET_COL)
-            .write.mode("overwrite")
-            .partitionBy(BUCKET_COL)
-            .parquet(tmp)
+        commit_buckets(
+            merged,
+            path,
+            BUCKET_COL,
+            touched,
+            table_meta_entry(path, nb, _table_schema(merged)),
         )
-        final = self.spark.read.parquet(tmp)
-        writer = (
-            final.repartition(BUCKET_COL)
-            .write.mode("overwrite")
-            .partitionBy(BUCKET_COL)
-        )
-        if not legacy:
-            writer = writer.option("partitionOverwriteMode", "dynamic")
-        writer.parquet(path)
-        hadoop_delete_path(self.spark, tmp)  # staged copy: reclaim now
-        # the staged read-back holds every table column (the existing side
-        # was read with the stored schema), so its schema is the table's
-        write_table_meta(self.spark, path, nb, _table_schema(final))
 
     @staticmethod
     def _encode_narrow(
@@ -569,7 +535,12 @@ class FeatureStore:
         return joined.select(*cols)
 
     def load(self, entity_label: str, store_id: int = 0) -> DataFrame:
-        return self._read(self._table_path(entity_label, store_id))
+        """The table, after finishing a commit a crash left pending."""
+        from bharatmlstack_spark.tablecommit import BUCKET_MARKER_SUFFIX, finish_commit
+
+        path = self._table_path(entity_label, store_id)
+        finish_commit(self.spark, path + BUCKET_MARKER_SUFFIX)
+        return self._read(path)
 
     def _read(self, path: str, *bucket_dirs: str) -> DataFrame:
         """The table at ``path`` (or only its ``bucket_dirs``), read with the
@@ -603,30 +574,35 @@ class FeatureStore:
     def compact(self, entity_label: str, store_id: int = 0, now: Column | None = None) -> int:
         """SS2 companion job: physically drop expired rows (reads already
         treat them as absent; compaction reclaims storage — the declarative
-        form of Scylla TTL eviction). Returns rows removed."""
+        form of Scylla TTL eviction). Only the buckets holding expired rows
+        are rewritten, in one bucket commit; a bucket left without rows is
+        dropped, and so is the table dir when every row expired (as for
+        delete). Returns rows removed."""
         now = now if now is not None else F.current_timestamp()
-        table = self.load(entity_label, store_id)
+        path = self._table_path(entity_label, store_id)
+        kb_dirs = self._bucket_dirs(path)
+        table = self._read(path)
         if "expires_at" not in table.columns:
             return 0
-        live = table.filter(F.col("expires_at").isNull() | (F.col("expires_at") > now))
-        removed = table.count() - live.count()
-        if removed:
-            path = self._table_path(entity_label, store_id)
-            tmp = path + "__staging"
-            if BUCKET_COL in table.columns:
-                nb = self._effective_n_buckets(path)  # before the sidecar goes
-                live.repartition(BUCKET_COL).write.mode("overwrite").partitionBy(
-                    BUCKET_COL
-                ).parquet(tmp)
-                self.spark.read.parquet(tmp).repartition(BUCKET_COL).write.mode(
-                    "overwrite"
-                ).partitionBy(BUCKET_COL).parquet(path)
-                # the full overwrite replaced the directory, sidecar included
-                write_table_meta(self.spark, path, nb, _table_schema(table))
-            else:
-                live.write.mode("overwrite").parquet(tmp)
-                self.spark.read.parquet(tmp).write.mode("overwrite").parquet(path)
-            hadoop_delete_path(self.spark, tmp)  # staged copy: reclaim now
+        expired = F.col("expires_at").isNotNull() & (F.col("expires_at") <= now)
+        # one job: per bucket holding expired rows, (rows, expired rows)
+        counts = {
+            r[0]: (r[1], r[2])
+            for r in table.groupBy(BUCKET_COL)
+            .agg(F.count(F.lit(1)), F.count(F.when(expired, 1)).alias("dead"))
+            .filter("dead > 0")
+            .collect()
+        }
+        removed = sum(dead for _, dead in counts.values())
+        if not removed:
+            return 0
+        if set(kb_dirs) <= set(counts) and all(n == d for n, d in counts.values()):
+            self._drop_table(path)
+            return removed
+        from bharatmlstack_spark.tablecommit import commit_buckets
+
+        scoped = self._read(path, *(kb_dirs[b] for b in counts))
+        commit_buckets(scoped.filter(~expired), path, BUCKET_COL, counts)
         return removed
 
     def delete(
@@ -639,91 +615,54 @@ class FeatureStore:
         """Hard-delete rows by PK (the right-to-be-forgotten path) with
         the same bucket-scoped cost model as persist: the key set's
         touched buckets are collected driver-side (<= n_buckets values),
-        only those directories are read and anti-joined, and the staged
-        rewrite uses dynamic partition overwrite — untouched buckets are
-        never read or rewritten. Buckets the delete fully empties are
-        removed explicitly (dynamic overwrite cannot replace a partition
-        with nothing). Returns rows removed. At 100 TB a delete costs
-        O(touched buckets), like persist. ``broadcast_keys=False`` drops
-        the broadcast hint for compliance-scale key sets (tens of
-        millions of keys stop being broadcastable; AQE then picks a
-        shuffled join over the already-bucket-pruned existing side)."""
+        only those directories are read and anti-joined, and the
+        survivors are written once and swapped in by one bucket commit —
+        untouched buckets are never read or rewritten. A bucket the
+        delete fully empties is dropped in the same commit, and the table
+        dir when every bucket is emptied. Returns rows removed. At 100 TB
+        a delete costs O(touched buckets), like persist.
+        ``broadcast_keys=False`` drops the broadcast hint for
+        compliance-scale key sets (tens of millions of keys stop being
+        broadcastable; AQE then picks a shuffled join over the already-
+        bucket-pruned existing side)."""
         entity = self.registry.entity(entity_label)
         for k in entity.key_columns:
             if k not in keys.columns:
                 raise ValueError(f"delete missing key column {k!r}")
         path = self._table_path(entity_label, store_id)
-        if not hadoop_path_exists(self.spark, path):
-            return 0
-        kb_dirs = hadoop_list_partition_dirs(self.spark, path, BUCKET_COL)
-        kdf = keys.select(*entity.key_columns).dropDuplicates(entity.key_columns)
-
+        kb_dirs = self._bucket_dirs(path)
         if not kb_dirs:
-            # legacy pre-bucketed table: one full anti-join rewrite
-            existing = self.spark.read.parquet(path)
-            kside = F.broadcast(kdf) if broadcast_keys else kdf
-            remaining = existing.join(
-                kside, on=entity.key_columns, how="left_anti"
-            )
-            n_remaining = remaining.count()
-            removed = existing.count() - n_remaining
-            if removed and n_remaining == 0:
-                # full-table delete: an empty parquet write can't be read
-                # back ("Unable to infer schema"), so drop the table dir —
-                # the next persist recreates it as a NEW table
-                self._drop_table(path)
-            elif removed:
-                tmp = path + "__staging"
-                remaining.write.mode("overwrite").parquet(tmp)
-                self.spark.read.parquet(tmp).write.mode("overwrite").parquet(path)
-                hadoop_delete_path(self.spark, tmp)  # staged copy: reclaim
-            return removed
-
+            return 0
         nb = self._effective_n_buckets(path)
-        kdf = kdf.withColumn(BUCKET_COL, _bucket_expr(entity.key_columns, nb))
-        touched = sorted(r[0] for r in kdf.select(BUCKET_COL).distinct().collect())
+        key_cols = entity.key_columns
+        bucket = _bucket_expr(key_cols, nb)
+        touched = sorted(r[0] for r in keys.select(bucket).distinct().collect())
         # targeted pruned read of the touched dirs only (a touched bucket
         # with no dir holds nothing to delete)
         paths = [kb_dirs[b] for b in touched if b in kb_dirs]
         if not paths:
             return 0
         scoped = self._read(path, *paths)
-        kside = kdf.drop(BUCKET_COL)
+        kside = keys.select(*key_cols).dropDuplicates(key_cols)
+        hits = kside.withColumn("__hit", F.lit(1))
         if broadcast_keys:
-            kside = F.broadcast(kside)
-        remaining = scoped.join(kside, on=entity.key_columns, how="left_anti")
-        n_remaining = remaining.count()
-        removed = scoped.count() - n_remaining
+            kside, hits = F.broadcast(kside), F.broadcast(hits)
+        # one job counts the scoped rows and the deleted ones
+        n_scoped, removed = (
+            scoped.join(hits, on=key_cols, how="left")
+            .agg(F.count(F.lit(1)), F.count("__hit"))
+            .first()
+        )
         if not removed:
             return 0
-        if n_remaining == 0:
-            # every row of every touched bucket is gone: nothing to stage
-            # (an empty parquet write can't even be read back) — drop the
-            # touched directories directly
-            for b in touched:
-                hadoop_delete_path(self.spark, f"{path}/{BUCKET_COL}={b}")
-            self._drop_table_if_no_buckets(path)
-            return removed
-        tmp = path + "__staging"
-        (
-            remaining.repartition(BUCKET_COL)
-            .write.mode("overwrite")
-            .partitionBy(BUCKET_COL)
-            .parquet(tmp)
-        )
-        staged = self.spark.read.parquet(tmp)
-        (
-            staged.repartition(BUCKET_COL)
-            .write.mode("overwrite")
-            .partitionBy(BUCKET_COL)
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(path)
-        )
-        survivors = {r[0] for r in staged.select(BUCKET_COL).distinct().collect()}
-        hadoop_delete_path(self.spark, tmp)  # staged copy: reclaim now
-        for b in touched:
-            if b not in survivors:
-                hadoop_delete_path(self.spark, f"{path}/{BUCKET_COL}={b}")
+        n_remaining = n_scoped - removed
+        remaining = scoped.join(kside, on=key_cols, how="left_anti")
+        if n_remaining == 0 and set(kb_dirs) <= set(touched):
+            self._drop_table(path)
+        else:
+            from bharatmlstack_spark.tablecommit import commit_buckets
+
+            commit_buckets(remaining, path, BUCKET_COL, touched)
         return removed
 
     # ------------------------------------------------------------------

@@ -3777,11 +3777,12 @@ FROM req r LEFT JOIN live l USING (user_id)
 def feature_delete_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GDPR-style hard delete end to end through the store API: persist a
     bucketed feature table, DELETE every key with user_id % 9 = 2
-    (FeatureStore.delete — bucket-scoped anti-join + dynamic partition
-    overwrite, untouched bucket dirs never rewritten, emptied dirs
-    dropped), then retrieve a request set spanning deleted and surviving
-    keys. Deleted keys come back as the FG default — exactly how a
-    forgotten user must look to every downstream consumer. The oracle
+    (FeatureStore.delete — bucket-scoped anti-join whose survivors are
+    written once and swapped in by one bucket commit, untouched bucket
+    dirs never rewritten, emptied dirs dropped), then retrieve a request
+    set spanning deleted and surviving keys. Deleted keys come back as
+    the FG default — exactly how a forgotten user must look to every
+    downstream consumer. The oracle
     replays persist-minus-delete declaratively. At 100 TB the delete
     costs O(touched buckets), the same contract as persist
     (operators/feature_store.py:delete)."""

@@ -27,6 +27,16 @@ from pyspark.sql import functions as F
 
 from bharatmlstack_spark.operators.event_store import EventStore
 from bharatmlstack_spark.operators.feature_store import FeatureStore, hadoop_path_exists
+from bharatmlstack_spark.tablecommit import (
+    ASIDE_SUFFIX,
+    BUCKET_MARKER_SUFFIX,
+    _hadoop_rename,
+    _recover_root_swap,
+    _swap_staged_root,
+    commit,
+    commit_buckets,
+    finish_commit,
+)
 
 # ---------------------------------------------------------------------------
 # sources
@@ -440,7 +450,7 @@ def seed_cdc_state(
     mode: a partitionBy write of zero rows leaves a file-less dir that
     cannot be read back; the flat empty file reads fine, carries no
     __kb partition values (nothing to prune), and the first real batch
-    writes the actual bucket dirs via dynamic overwrite."""
+    converts it to the bucket dirs with one full overwrite."""
     from bharatmlstack_spark.operators.feature_store import write_table_meta
 
     spark = snapshot.sparkSession
@@ -549,7 +559,7 @@ def stream_cdc_sink(
        definition).
     3. staged rewrite of the state parquet. In a bucketed state a batch
        rewrites ONLY the buckets its keys hash into (guard read, merge
-       scope, and dynamic partition overwrite are all bucket-pruned) —
+       scope, and the tablecommit bucket commit are all bucket-pruned) —
        at 100 TB a micro-batch costs O(touched buckets), the same cost
        model as FeatureStore.persist. Deletes are tombstone ROWS, so no
        bucket is ever emptied by CDC. An empty-seeded bucketed state
@@ -578,6 +588,7 @@ def stream_cdc_sink(
 
         if batch_df.isEmpty():
             return
+        finish_commit(spark, state_path + BUCKET_MARKER_SUFFIX)
         # one driver-side listStatus stands in for reading the root:
         # physical layout detection AND the pruned read's dir paths —
         # reading the root + isin(touched) would list every bucket dir
@@ -644,6 +655,15 @@ def stream_cdc_sink(
         merged = cdc_apply(
             state, changes, key_cols=key_cols, seq_col=seq_col, op_col="__mop"
         ).drop("src")
+        if n_buckets is not None and not bootstrap:
+            # the touched buckets' new rows: written once, swapped in
+            commit_buckets(
+                merged.withColumn("__kb", _bucket(n_buckets)),
+                state_path,
+                "__kb",
+                touched,
+            )
+            return
         tmp = state_path + "__staging"
         if n_buckets is None:
             merged.write.mode("overwrite").parquet(tmp)
@@ -656,24 +676,20 @@ def stream_cdc_sink(
                 .partitionBy("__kb")
                 .parquet(tmp)
             )
-            if bootstrap:
-                # the conversion's full overwrite below deletes the
-                # state's meta sidecar; the staging copy carries it
-                # across the crash window until write_table_meta
-                # restores it (_resolve_state_layout recovers from here)
-                write_table_meta(spark, tmp, n_buckets)
-            writer = (
+            # the conversion's full overwrite below deletes the state's
+            # meta sidecar; the staging copy carries it across the crash
+            # window until write_table_meta restores it
+            # (_resolve_state_layout recovers from here)
+            write_table_meta(spark, tmp, n_buckets)
+            (
                 spark.read.parquet(tmp)
                 .repartition("__kb")
                 .write.mode("overwrite")
                 .partitionBy("__kb")
+                .parquet(state_path)
             )
-            if not bootstrap:
-                writer = writer.option("partitionOverwriteMode", "dynamic")
-            writer.parquet(state_path)
-            if bootstrap:
-                # the full overwrite replaced the dir, sidecar included
-                write_table_meta(spark, state_path, n_buckets)
+            # the full overwrite replaced the dir, sidecar included
+            write_table_meta(spark, state_path, n_buckets)
         hadoop_delete_path(spark, tmp)  # staged copy: reclaim now
 
     writer = stream_df.writeStream.foreachBatch(_apply).option(
@@ -702,61 +718,38 @@ def compact_cdc_state(
     must stay: dropping one would let a stale update resurrect the key.
 
     Returns tombstones removed. The layout comes from the state's meta
-    sidecar; the rewrite is a staged full-state pass (flat) or per-bucket
-    dynamic overwrite touching only buckets that held dead tombstones,
-    dropping any bucket the GC empties — run it at the cadence of
+    sidecar; the rewrite is a staged full-state pass (flat) or, bucketed,
+    one bucket commit touching only buckets that held dead tombstones:
+    their surviving rows are written once and swapped in, and a bucket
+    the GC empties is dropped — run it at the cadence of
     FeatureStore.compact, not per batch. If the GC would leave the WHOLE
     state empty (every row a dead tombstone), it declines and returns 0:
     a file-less state dir is unreadable, and an all-tombstone table
     should be re-seeded, not compacted."""
     from bharatmlstack_spark.operators.feature_store import hadoop_delete_path
 
+    finish_commit(spark, state_path + BUCKET_MARKER_SUFFIX)
     state = spark.read.parquet(state_path)
     n_buckets = _resolve_state_layout(spark, state_path, state.columns)
     dead = (F.col("__op") == "D") & (F.col("__last_seq") <= F.lit(watermark_seq))
     if n_buckets is not None and "__kb" in state.columns:
-        touched = sorted(
-            r[0]
-            for r in state.filter(dead).select("__kb").distinct().collect()
-        )
-        if not touched:
+        # one job: per bucket holding dead tombstones, (rows, dead rows)
+        counts = {
+            r[0]: (r[1], r[2])
+            for r in state.groupBy("__kb")
+            .agg(F.count(F.lit(1)), F.count(F.when(dead, 1)).alias("dead"))
+            .filter("dead > 0")
+            .collect()
+        }
+        if not counts:
             return 0
-        scoped = state.filter(F.col("__kb").isin(touched))
-        keep = scoped.filter(~dead)
-        removed = scoped.filter(dead).count()
-        if keep.isEmpty():
-            # every touched-bucket row is a dead tombstone: nothing to
-            # stage (a zero-row partitionBy write is unreadable) — drop
-            # the dirs directly, unless that would empty the whole state
-            others = state.filter(~F.col("__kb").isin(touched))
-            if others.isEmpty():
-                return 0
-            for b in touched:
-                hadoop_delete_path(spark, f"{state_path}/__kb={b}")
-            return removed
-        tmp = state_path + "__staging"
-        (
-            keep.repartition("__kb")
-            .write.mode("overwrite")
-            .partitionBy("__kb")
-            .parquet(tmp)
-        )
-        staged = spark.read.parquet(tmp)
-        (
-            staged.repartition("__kb")
-            .write.mode("overwrite")
-            .partitionBy("__kb")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(state_path)
-        )
-        # a bucket holding ONLY dead tombstones produces no staged rows;
-        # dynamic overwrite leaves its stale dir — drop it explicitly
-        survivors = {r[0] for r in staged.select("__kb").distinct().collect()}
-        hadoop_delete_path(spark, tmp)
-        for b in touched:
-            if b not in survivors:
-                hadoop_delete_path(spark, f"{state_path}/__kb={b}")
-        return removed
+        if set(_list_kb_dirs(spark, state_path)) <= set(counts) and all(
+            n == d for n, d in counts.values()
+        ):
+            return 0  # the GC would empty the whole state: decline
+        touched = F.col("__kb").isin(list(counts))
+        commit_buckets(state.filter(touched & ~dead), state_path, "__kb", counts)
+        return sum(d for _, d in counts.values())
     removed = state.filter(dead).count()
     if not removed:
         return 0
@@ -805,14 +798,6 @@ def _neardup_root_layout(spark: SparkSession, path: str) -> str | None:
     if has_kb and has_flat:
         return "mixed"
     return "bucketed" if has_kb else ("flat" if has_flat else None)
-
-
-def _hadoop_rename(spark: SparkSession, src: str, dst: str) -> None:
-    jvm = spark._jvm
-    jsrc = jvm.org.apache.hadoop.fs.Path(src)
-    fs = jsrc.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.rename(jsrc, jvm.org.apache.hadoop.fs.Path(dst)):
-        raise RuntimeError(f"rename {src} -> {dst} failed")
 
 
 def _ensure_neardup_root(
@@ -1053,7 +1038,7 @@ def stream_neardup_minhash_sink(
         # are already hashed with the new one; then restore any root
         # whose flat compaction swap crashed mid-rename (a missing
         # bands root would read as an EMPTY index — silent pair loss)
-        _finish_rebucket_commit(spark, state_dir)
+        finish_commit(spark, f"{state_dir}/{REBUCKET_MARKER}")
         _recover_root_swap(spark, sets_path)
         _recover_root_swap(spark, bands_path)
         meta = read_table_meta(spark, state_dir)
@@ -1775,7 +1760,8 @@ def read_streamed_ivf_index(
     Vectors tombstoned by ``delete_indexed_vectors`` are broadcast-anti-
     joined out — deleted ids leave every search immediately, before the
     next compaction/refit folds them physically."""
-    _finish_refit_commit(spark, index_path)  # adopt a crashed refit first
+    # adopt a crashed refit first
+    finish_commit(spark, index_path + REFIT_MARKER_SUFFIX)
     _recover_root_swap(spark, index_path)  # ...or a crashed flat-swap
     df = spark.read.parquet(index_path)
     tomb = _ivf_tombstones(spark, index_path, id_col)
@@ -1802,12 +1788,10 @@ def _compact_dedup_state(
 
     1. detect — per-partition ``count(*) - count_distinct(dedup cols)``
        (one scan reading only the dedup columns; map-side partial agg);
-    2. rewrite — ONLY the partition dirs holding duplicates, via
-       targeted paths + dynamic partition overwrite (the dedup key
-       determines its partition, so dedup is partition-local and
-       untouched dirs never rewrite). Dedup never empties a non-empty
-       dir, so no emptied-dir sweep is needed (unlike compact_cdc_state
-       whose tombstone GC can drain a bucket).
+    2. rewrite — ONLY the partition dirs holding duplicates: targeted
+       paths, their deduped rows written once and swapped in by one
+       bucket commit (the dedup key determines its partition, so dedup
+       is partition-local and untouched dirs never rewrite).
 
     Flat (unpartitioned) states fall back to a full staged rewrite —
     correct at any size, but the partitioned layouts are the 100 TB
@@ -1817,7 +1801,6 @@ def _compact_dedup_state(
     the callers then preserve the sidecar's redelivery flag instead of
     consuming the signal for a reclaim that never happened."""
     from bharatmlstack_spark.operators.feature_store import (
-        hadoop_delete_path,
         hadoop_list_partition_dirs,
     )
 
@@ -1846,27 +1829,17 @@ def _compact_dedup_state(
         bailed = len(paths) < len(touched)
         if not paths:
             return 0, bailed
-        scoped = spark.read.option("basePath", path).parquet(*paths)
-        before = scoped.count()
-        keep = scoped.dropDuplicates(dedup_cols)
-        tmp = path + "__compacting"
-        (
-            keep.repartition(partition_col)
-            .write.mode("overwrite")
-            .partitionBy(partition_col)
-            .parquet(tmp)
+        # each read lists the dirs afresh: the last one counts the
+        # committed rows
+        reader = spark.read.option("basePath", path)
+        before = reader.parquet(*paths).count()
+        commit_buckets(
+            reader.parquet(*paths).dropDuplicates(dedup_cols),
+            path,
+            partition_col,
+            [p for p in touched if p in dirs],
         )
-        staged = spark.read.parquet(tmp)
-        removed = before - staged.count()
-        (
-            staged.repartition(partition_col)
-            .write.mode("overwrite")
-            .partitionBy(partition_col)
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(path)
-        )
-        hadoop_delete_path(spark, tmp)
-        return removed, bailed
+        return before - reader.parquet(*paths).count(), bailed
     before = state.count()
     keep = state.dropDuplicates(dedup_cols)
     removed = before - keep.count()
@@ -1921,7 +1894,8 @@ def compact_streamed_index(
     Run at maintenance cadence (after a redelivery event or N batches —
     ``maintenance_due`` / ``maybe_compact_streamed_index`` decide that
     from the sidecar the sinks maintain), never per micro-batch."""
-    _finish_refit_commit(spark, index_path)  # adopt a crashed refit first
+    # adopt a crashed refit first
+    finish_commit(spark, index_path + REFIT_MARKER_SUFFIX)
     # fold pending vector deletions first (also removes the _tombstones
     # dir before any flat-fallback root swap could drop it silently)
     fold_index_tombstones(spark, index_path, id_col)
@@ -1972,7 +1946,8 @@ def compact_neardup_state(spark: SparkSession, state_dir: str) -> dict:
 
     sets_path = f"{state_dir}/sets"
     bands_path = f"{state_dir}/bands"
-    _finish_rebucket_commit(spark, state_dir)  # adopt a crashed rebucket
+    # adopt a crashed rebucket
+    finish_commit(spark, f"{state_dir}/{REBUCKET_MARKER}")
     # fold pending deletions first: the dedup rewrite must see the
     # post-deletion state, and the sink's pending-tombstone refusal
     # clears through any compaction pass
@@ -1998,169 +1973,12 @@ def compact_neardup_state(spark: SparkSession, state_dir: str) -> dict:
     return {"sets_removed": sets_removed, "bands_removed": bands_removed}
 
 
-# commit markers for the reset jobs' staged swaps: written ATOMICALLY
-# after every stage is complete, deleted after adoption — their presence
-# IS the commit point, so a crash anywhere leaves either the intact old
-# state (pre-marker: stages are garbage, cleaned by the next reset run)
-# or a finishable commit (post-marker: _finish_*_commit re-runs the
-# adoption idempotently from any reader/writer entry point)
+# tablecommit markers of the reset jobs' staged root swaps: a crash
+# before the marker leaves the intact old state (stages are garbage,
+# cleaned by the next reset run); after it, finish_commit re-runs the
+# adoption idempotently from any reader/writer entry point
 REBUCKET_MARKER = "__rebucket_commit.json"
 REFIT_MARKER_SUFFIX = "__refit_commit.json"
-
-
-ASIDE_SUFFIX = "__replaced"
-
-
-def _swap_staged_root(spark: SparkSession, stage: str, live: str) -> None:
-    """Adopt one complete staged root: move the live dir ASIDE, rename
-    the stage over its place, then drop the aside copy. The
-    aside-then-rename order (never delete-live-first) guarantees a
-    complete copy of the data exists in SOME directory (live, aside, or
-    stage) at every instant — a crash at any point, or a second adopter
-    racing this one (concurrent readers all run the commit-recovery
-    path), can strand a copy under the aside name but can never destroy
-    the state: the stranded cases are restored by the retry/recovery
-    re-entry below. A stage already renamed away means another adopter
-    finished — skip. A stage present WITHOUT _SUCCESS under a commit
-    marker is refused loudly (see _require_stage_success — markers are
-    only written after complete stages, so this means _SUCCESS markers
-    are disabled or the stage was corrupted; silently skipping would
-    install the marker's sidecar over un-swapped roots)."""
-    from bharatmlstack_spark.operators.feature_store import hadoop_delete_path
-
-    aside = live + ASIDE_SUFFIX
-    if not hadoop_path_exists(spark, stage):
-        # already adopted (possibly by a racing recovery) — if that
-        # racer crashed between its renames, the old copy is stranded
-        # aside while live exists: drop it; if live is MISSING, restore
-        # the aside copy (crash between aside-rename and stage-rename,
-        # with the stage consumed by a third party — restore beats loss)
-        if hadoop_path_exists(spark, live):
-            if hadoop_path_exists(spark, aside):
-                hadoop_delete_path(spark, aside)
-        elif hadoop_path_exists(spark, aside):
-            _hadoop_rename(spark, aside, live)
-        return
-    _require_stage_success(spark, stage)
-    if hadoop_path_exists(spark, aside):
-        hadoop_delete_path(spark, aside)
-    if hadoop_path_exists(spark, live):
-        _hadoop_rename(spark, live, aside)
-    jvm = spark._jvm
-    jstage = jvm.org.apache.hadoop.fs.Path(stage)
-    fs = jstage.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.rename(jstage, jvm.org.apache.hadoop.fs.Path(live)):
-        # lost a race: another adopter consumed the stage between our
-        # existence check and the rename; make sure live holds data
-        if not hadoop_path_exists(spark, live):
-            if hadoop_path_exists(spark, aside):
-                _hadoop_rename(spark, aside, live)
-            else:
-                raise RuntimeError(
-                    f"staged-root adoption failed: {stage} vanished and "
-                    f"{live} is missing with no aside copy"
-                )
-    if hadoop_path_exists(spark, aside) and hadoop_path_exists(spark, live):
-        hadoop_delete_path(spark, aside)
-
-
-def _recover_root_swap(spark: SparkSession, live: str) -> None:
-    """Restore a root whose flat compaction swap (_swap_staged_root from
-    _compact_dedup_state) crashed mid-rename: a missing live dir adopts
-    a complete ``__compacting`` stage, else restores the ``__replaced``
-    aside copy; a stranded aside beside an intact live is dropped.
-    Called from the state entry points (sink layout check, compactor,
-    probes, readers) — one or two FS existence checks in the common
-    no-op case. Without this, a sink restarted after such a crash would
-    see hadoop_path_exists(bands)=False and silently treat the whole
-    accumulated index as empty."""
-    from bharatmlstack_spark.operators.feature_store import hadoop_delete_path
-
-    tmp, aside = live + "__compacting", live + ASIDE_SUFFIX
-    if not hadoop_path_exists(spark, live):
-        if hadoop_path_exists(spark, tmp + "/_SUCCESS"):
-            _hadoop_rename(spark, tmp, live)
-        elif hadoop_path_exists(spark, aside):
-            _hadoop_rename(spark, aside, live)
-    elif hadoop_path_exists(spark, aside):
-        hadoop_delete_path(spark, aside)
-
-
-def _require_stage_success(spark: SparkSession, stage: str) -> None:
-    if not hadoop_path_exists(spark, stage + "/_SUCCESS"):
-        raise RuntimeError(
-            f"staged root {stage} exists but has no _SUCCESS marker — "
-            "either mapreduce.fileoutputcommitter.marksuccessfuljobs is "
-            "disabled (the reset jobs' commit protocol requires it) or "
-            "the stage is a partial write; refusing to adopt or commit "
-            "over it. Re-run the reset job with _SUCCESS markers "
-            "enabled, or delete the stage to discard it."
-        )
-
-
-def _finish_rebucket_commit(spark: SparkSession, state_dir: str) -> bool:
-    """(Re-)run a rebucket_neardup_state adoption whose commit marker
-    exists: swap any staged roots still present, install the marker's
-    sidecar, drop the marker. Called by the rebucket job itself AND by
-    every state entry point (sink layout check, compactor, cross-dedup
-    probe) so a crash mid-adoption can never leave roots hashed with
-    new_buckets while the sidecar records the old count — the silent
-    wrong-quarter-of-dirs probe. One FS existence check when no marker.
-    Returns True when a commit was finished."""
-    import json as _json
-    import os as _os
-
-    from bharatmlstack_spark.operators.feature_store import (
-        TABLE_META_FILE,
-        hadoop_delete_path,
-        hadoop_read_text,
-        hadoop_write_text_atomic,
-    )
-
-    marker = f"{state_dir}/{REBUCKET_MARKER}"
-    text = hadoop_read_text(spark, marker)
-    if text is None:
-        return False
-    info = _json.loads(text)
-    if info.get("adopt_sets"):
-        _swap_staged_root(
-            spark, f"{state_dir}/sets__rebucketing", f"{state_dir}/sets"
-        )
-    if info.get("adopt_bands"):
-        _swap_staged_root(
-            spark, f"{state_dir}/bands__rebucketing", f"{state_dir}/bands"
-        )
-    hadoop_write_text_atomic(
-        spark,
-        _os.path.join(state_dir, TABLE_META_FILE),
-        _json.dumps(info["new_meta"]),
-    )
-    hadoop_delete_path(spark, marker)
-    return True
-
-
-def _finish_refit_commit(spark: SparkSession, index_path: str) -> bool:
-    """The refit_streamed_index analog of _finish_rebucket_commit: adopt
-    the staged re-assigned index AND its staged quantizer together (the
-    fresh sidecar rides inside the index stage, so the rename installs
-    root + sidecar as one move). Called by the refit job and by every
-    index entry point (sinks, readers, compactor); closes the crash
-    window where a re-bucketed root goes live while the persisted
-    quantizer still holds the old centroids — restarted sinks and
-    searches would silently mis-route probes."""
-    from bharatmlstack_spark.operators.feature_store import hadoop_delete_path
-
-    marker = index_path + REFIT_MARKER_SUFFIX
-    if not hadoop_path_exists(spark, marker):
-        return False
-    _swap_staged_root(spark, index_path + "__refitting", index_path)
-    _swap_staged_root(
-        spark,
-        index_path + QUANTIZER_DIR_SUFFIX + "__refitting",
-        index_path + QUANTIZER_DIR_SUFFIX,
-    )
-    hadoop_delete_path(spark, marker)
-    return True
 
 
 def rebucket_neardup_state(
@@ -2201,7 +2019,7 @@ def rebucket_neardup_state(
     adopted (delete + rename) and the sidecar installed from the
     marker. Pre-marker crashes leave the old state intact (stages are
     garbage, cleaned on the next run); post-marker crashes are finished
-    by _finish_rebucket_commit from ANY state entry point — the sink's
+    by finish_commit from ANY state entry point — the sink's
     layout check, the compactor, the cross-dedup probe, or the next
     rebucket — so roots hashed with new_buckets can never serve probes
     pruned with the old sidecar count.
@@ -2214,11 +2032,9 @@ def rebucket_neardup_state(
     sink — same single-writer assumption as the appends). Returns
     {"old_buckets", "new_buckets", "sets_rows", "bands_rows",
     "rows_removed"}."""
-    import json as _json
-
     from bharatmlstack_spark.operators.feature_store import (
+        TABLE_META_FILE,
         hadoop_delete_path,
-        hadoop_write_text_atomic,
         read_table_meta,
     )
 
@@ -2226,7 +2042,7 @@ def rebucket_neardup_state(
     bands_path = f"{state_dir}/bands"
     # finish a crashed predecessor's adoption, then clear any orphaned
     # pre-commit stages (theirs, or a pre-marker crash of our own past)
-    _finish_rebucket_commit(spark, state_dir)
+    finish_commit(spark, f"{state_dir}/{REBUCKET_MARKER}")
     # fold pending deletions: the re-bucketed state and its fresh
     # sidecar row totals must see the shrunk corpus
     fold_neardup_tombstones(spark, state_dir)
@@ -2257,9 +2073,6 @@ def rebucket_neardup_state(
             .partitionBy("__kb")
             .parquet(tmp)
         )
-        # fail BEFORE the commit marker on clusters that disable
-        # _SUCCESS markers — adoption keys on them
-        _require_stage_success(spark, tmp)
         n = spark.read.parquet(tmp).count()
         removed += before - n
         return n
@@ -2295,18 +2108,13 @@ def rebucket_neardup_state(
     merged.pop(MAINT_REDELIVERY_KEY, None)
     # COMMIT POINT: stages complete -> atomic marker carrying the new
     # sidecar -> adopt (swaps + sidecar install + marker delete)
-    hadoop_write_text_atomic(
+    roots = [sets_path, bands_path] if bucket_bands else [sets_path]
+    commit(
         spark,
         f"{state_dir}/{REBUCKET_MARKER}",
-        _json.dumps(
-            {
-                "new_meta": merged,
-                "adopt_sets": True,
-                "adopt_bands": bool(bucket_bands),
-            }
-        ),
+        [(root + "__rebucketing", root) for root in roots],
+        meta=(f"{state_dir}/{TABLE_META_FILE}", merged),
     )
-    _finish_rebucket_commit(spark, state_dir)
     return {
         "old_buckets": recorded,
         "new_buckets": new_buckets,
@@ -2359,7 +2167,8 @@ def cross_dedup_against_state(
 
     sets_path = f"{state_dir}/sets"
     bands_path = f"{state_dir}/bands"
-    _finish_rebucket_commit(spark, state_dir)  # adopt a crashed rebucket
+    # adopt a crashed rebucket
+    finish_commit(spark, f"{state_dir}/{REBUCKET_MARKER}")
     _recover_root_swap(spark, sets_path)
     _recover_root_swap(spark, bands_path)
     meta = read_table_meta(spark, state_dir) or {}
@@ -2753,7 +2562,8 @@ def load_streamed_index_quantizer(
 
     from bharatmlstack_spark.operators.lsh import IvfIndex
 
-    _finish_refit_commit(spark, index_path)  # adopt a crashed refit first
+    # adopt a crashed refit first
+    finish_commit(spark, index_path + REFIT_MARKER_SUFFIX)
     rows = (
         spark.read.parquet(index_path + QUANTIZER_DIR_SUFFIX)
         .orderBy("cell")
@@ -2781,7 +2591,8 @@ def _ensure_quantizer_consistent(
     guard for every subsequent restart."""
     import numpy as np
 
-    _finish_refit_commit(spark, index_path)  # adopt a crashed refit first
+    # adopt a crashed refit first
+    finish_commit(spark, index_path + REFIT_MARKER_SUFFIX)
     qdir = index_path + QUANTIZER_DIR_SUFFIX
     if not hadoop_path_exists(spark, qdir):
         save_streamed_index_quantizer(spark, index_path, ivf)
@@ -3055,7 +2866,8 @@ def refit_due(
     refit from metadata alone."""
     from bharatmlstack_spark.operators.feature_store import read_table_meta
 
-    _finish_refit_commit(spark, index_path)  # adopt a crashed refit first
+    # adopt a crashed refit first
+    finish_commit(spark, index_path + REFIT_MARKER_SUFFIX)
     meta = read_table_meta(spark, index_path) or {}
     n_cells = meta.get("n_cells")
     rows = meta.get(MAINT_ROWS_KEY)
@@ -3083,7 +2895,8 @@ def rebucket_due(
     sink has recorded counters yet."""
     from bharatmlstack_spark.operators.feature_store import read_table_meta
 
-    _finish_rebucket_commit(spark, state_dir)  # adopt a crashed rebucket
+    # adopt a crashed rebucket
+    finish_commit(spark, f"{state_dir}/{REBUCKET_MARKER}")
     meta = read_table_meta(spark, state_dir) or {}
     n_buckets = meta.get("n_buckets")
     rows = meta.get(MAINT_ROWS_KEY)
@@ -3189,14 +3002,14 @@ def refit_streamed_index(
     3. re-fit the coarse quantizer on the accumulated vectors
        (IvfIndex.fit — deterministic hash-ordered sample, ≤ sample_size
        driver rows) and re-assign every vector (one Arrow GEMM pass);
-    4. marker commit (r12, the _finish_rebucket_commit discipline):
+    4. marker commit (tablecommit.commit):
        stage the re-assigned state at ``<index>__refitting`` with the
        fresh meta sidecar INSIDE it (n_cells + target_cell_rows + reset
        maintenance counters — it rides the rename), stage the NEW
        quantizer at ``<index>__quantizer__refitting``, then write the
        atomic commit marker and adopt both stages via delete + rename.
        A crash before the marker leaves the live root + quantizer
-       untouched; after it, _finish_refit_commit finishes the adoption
+       untouched; after it, finish_commit finishes the adoption
        from any entry point (sinks, readers, compactor, next refit) —
        the index and its quantizer can never go live separately, which
        is what made a restarted sink silently mis-route probes.
@@ -3225,7 +3038,7 @@ def refit_streamed_index(
 
     # finish a crashed predecessor's adoption, then clear orphaned
     # pre-commit stages
-    _finish_refit_commit(spark, index_path)
+    finish_commit(spark, index_path + REFIT_MARKER_SUFFIX)
     tmp = index_path + "__refitting"
     qtmp = index_path + QUANTIZER_DIR_SUFFIX + "__refitting"
     for orphan in (tmp, qtmp):
@@ -3287,18 +3100,13 @@ def refit_streamed_index(
         _json.dumps(merged),
     )
     _write_quantizer(spark, qtmp, ivf)
-    # fail BEFORE the commit marker on clusters that disable _SUCCESS
-    # markers — adoption keys on them
-    _require_stage_success(spark, tmp)
-    _require_stage_success(spark, qtmp)
     # COMMIT POINT: both stages complete -> atomic marker -> adopt
     # index + quantizer together (aside-rename each, marker dropped)
-    hadoop_write_text_atomic(
+    commit(
         spark,
         index_path + REFIT_MARKER_SUFFIX,
-        _json.dumps({"n_cells": n_cells}),
+        [(tmp, index_path), (qtmp, index_path + QUANTIZER_DIR_SUFFIX)],
     )
-    _finish_refit_commit(spark, index_path)
     return {
         "ivf": ivf,
         "n": n,
@@ -3778,7 +3586,8 @@ def stream_postings_sink(
         # would leave half the index unmaskable — same refusal
         "versioned": bool(allow_updates),
     }
-    _finish_postings_rebucket(spark, index_path)  # adopt a crashed rebucket
+    # adopt a crashed rebucket
+    finish_commit(spark, f"{index_path}/{POSTINGS_REBUCKET_MARKER}")
     meta = read_table_meta(spark, index_path)
     if meta is not None and "n_buckets" in meta:
         for key, want in sig.items():
@@ -4069,7 +3878,8 @@ def bm25_search_streamed(
     from bharatmlstack_spark.operators.feature_store import read_table_meta
     from bharatmlstack_spark.query_registry import defer_unpersist
 
-    _finish_postings_rebucket(spark, index_path)  # adopt a crashed rebucket
+    # adopt a crashed rebucket
+    finish_commit(spark, f"{index_path}/{POSTINGS_REBUCKET_MARKER}")
     meta = read_table_meta(spark, index_path) or {}
     if "n_buckets" not in meta:
         raise RuntimeError(
@@ -4191,7 +4001,8 @@ def compact_streamed_postings(spark: SparkSession, index_path: str) -> dict:
     holds duplicates the stats must not double-count."""
     from bharatmlstack_spark.operators.feature_store import read_table_meta
 
-    _finish_postings_rebucket(spark, index_path)  # adopt a crashed rebucket
+    # adopt a crashed rebucket
+    finish_commit(spark, f"{index_path}/{POSTINGS_REBUCKET_MARKER}")
     # fold pending deletions first: the dedup rewrite and the stats
     # recompute below must see the post-deletion corpus
     purged = fold_postings_tombstones(spark, index_path)
@@ -4370,41 +4181,6 @@ def maybe_compact_streamed_postings(
 POSTINGS_REBUCKET_MARKER = "__postings_rebucket.json"
 
 
-def _finish_postings_rebucket(spark: SparkSession, index_path: str) -> bool:
-    """(Re-)run a rebucket_postings_index adoption whose commit marker
-    exists — the postings analog of _finish_rebucket_commit, called by
-    the rebucket job itself AND by every index entry point (sink start,
-    search, compactor, the due policy) so a crash mid-adoption can never
-    leave bucket dirs hashed with new_buckets while the sidecar records
-    the old count. One FS existence check when no marker."""
-    import json as _json
-    import os as _os
-
-    from bharatmlstack_spark.operators.feature_store import (
-        TABLE_META_FILE,
-        hadoop_delete_path,
-        hadoop_read_text,
-        hadoop_write_text_atomic,
-    )
-
-    marker = f"{index_path}/{POSTINGS_REBUCKET_MARKER}"
-    text = hadoop_read_text(spark, marker)
-    if text is None:
-        return False
-    info = _json.loads(text)
-    for sub in info.get("adopt", ()):
-        _swap_staged_root(
-            spark, f"{index_path}/{sub}__rebucketing", f"{index_path}/{sub}"
-        )
-    hadoop_write_text_atomic(
-        spark,
-        _os.path.join(index_path, TABLE_META_FILE),
-        _json.dumps(info["new_meta"]),
-    )
-    hadoop_delete_path(spark, marker)
-    return True
-
-
 def rebucket_postings_index(
     spark: SparkSession, index_path: str, new_buckets: int
 ) -> dict:
@@ -4432,18 +4208,17 @@ def rebucket_postings_index(
     marker carrying the new sidecar is the commit point, then stages
     are adopted and the marker dropped — pre-marker crashes leave the
     old index intact, post-marker crashes are finished by
-    _finish_postings_rebucket from any entry point. OFFLINE ONLY (the
+    finish_commit from any entry point. OFFLINE ONLY (the
     sinks' single-writer assumption). Returns {"old_buckets",
     "new_buckets", "postings_rows", "doclen_rows", "rows_removed"}."""
-    import json as _json
-
     from bharatmlstack_spark.operators.feature_store import (
+        TABLE_META_FILE,
         hadoop_delete_path,
-        hadoop_write_text_atomic,
         read_table_meta,
     )
 
-    _finish_postings_rebucket(spark, index_path)  # adopt a crashed run
+    # adopt a crashed run
+    finish_commit(spark, f"{index_path}/{POSTINGS_REBUCKET_MARKER}")
     # fold pending deletions first: the rewrite below recomputes the
     # sidecar row totals and stats from the surviving corpus
     fold_postings_tombstones(spark, index_path)
@@ -4471,7 +4246,6 @@ def rebucket_postings_index(
             .partitionBy(bucket_col)
             .parquet(tmp)
         )
-        _require_stage_success(spark, tmp)  # adoption keys on _SUCCESS
         n = spark.read.parquet(tmp).count()
         removed += before - n
         return n
@@ -4504,14 +4278,15 @@ def rebucket_postings_index(
     # the success path recomputes right after adoption
     merged.pop("n_docs", None)
     merged.pop("sum_dl", None)
-    hadoop_write_text_atomic(
+    commit(
         spark,
         f"{index_path}/{POSTINGS_REBUCKET_MARKER}",
-        _json.dumps(
-            {"new_meta": merged, "adopt": [POSTINGS_DIR, DOCLEN_DIR]}
-        ),
+        [
+            (f"{index_path}/{sub}__rebucketing", f"{index_path}/{sub}")
+            for sub in (POSTINGS_DIR, DOCLEN_DIR)
+        ],
+        meta=(f"{index_path}/{TABLE_META_FILE}", merged),
     )
-    _finish_postings_rebucket(spark, index_path)
     # the rewrite just deduped doclen: roll the corpus stats forward so
     # searches skip the doclen scan until the next append (see
     # _cache_postings_stats)
@@ -4539,7 +4314,8 @@ def rebucket_postings_due(
     docs."""
     from bharatmlstack_spark.operators.feature_store import read_table_meta
 
-    _finish_postings_rebucket(spark, index_path)  # adopt a crashed run
+    # adopt a crashed run
+    finish_commit(spark, f"{index_path}/{POSTINGS_REBUCKET_MARKER}")
     meta = read_table_meta(spark, index_path) or {}
     n_buckets = meta.get("n_buckets")
     rows = meta.get(MAINT_ROWS_KEY)
@@ -4606,7 +4382,7 @@ def delete_postings_docs(
     the id; the sink's single-arrival contract's deletion corollary."""
     from bharatmlstack_spark.operators.feature_store import read_table_meta
 
-    _finish_postings_rebucket(spark, index_path)
+    finish_commit(spark, f"{index_path}/{POSTINGS_REBUCKET_MARKER}")
     meta = read_table_meta(spark, index_path) or {}
     if "n_buckets" not in meta:
         raise RuntimeError(
@@ -4825,7 +4601,7 @@ def delete_indexed_vectors(
     # (read_streamed_ivf_index, compact/refit): a crashed refit commit or
     # flat-swap would otherwise make this raise a spurious "does not
     # exist" or read a mid-swap root's schema
-    _finish_refit_commit(spark, index_path)
+    finish_commit(spark, index_path + REFIT_MARKER_SUFFIX)
     _recover_root_swap(spark, index_path)
     if not hadoop_path_exists(spark, index_path):
         raise RuntimeError(
@@ -4952,9 +4728,8 @@ def _purge_tombstoned_rows(
       survives);
     - partitioned: ``touched`` bucket values are either pre-derived by
       the caller (a pure function of the id — no scan) or found by one
-      thin detection scan; only existing targeted dirs rewrite, and a
-      fully-emptied dir is dropped explicitly (dynamic overwrite leaves
-      absent partitions in place).
+      thin detection scan; only existing targeted dirs rewrite, in one
+      bucket commit that also drops a fully-emptied dir.
 
     When ``t`` carries a ``gen_lt`` column (versioned postings), "dead"
     means ``id matches AND gen < gen_lt`` — the same predicate the
@@ -5037,27 +4812,7 @@ def _purge_tombstoned_rows(
         # nothing in the targeted dirs matched (absent/no-op ids):
         # skip the identical-data rewrite the flat branch also skips
         return 0
-    survive: set = set()
-    if n_after:
-        (
-            keep.repartition(bucket_col)
-            .write.mode("overwrite")
-            .partitionBy(bucket_col)
-            .parquet(tmp)
-        )
-        staged = spark.read.parquet(tmp)
-        (
-            staged.repartition(bucket_col)
-            .write.mode("overwrite")
-            .partitionBy(bucket_col)
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(root)
-        )
-        survive = {r[0] for r in staged.select(bucket_col).distinct().collect()}
-    for b, path in targeted.items():
-        if b not in survive:
-            hadoop_delete_path(spark, path)
-    hadoop_delete_path(spark, tmp)
+    commit_buckets(keep, root, bucket_col, targeted)
     return before - n_after
 
 
@@ -5282,7 +5037,8 @@ def phrase_search_streamed(
 
     from bharatmlstack_spark.operators.feature_store import read_table_meta
 
-    _finish_postings_rebucket(spark, index_path)  # adopt a crashed rebucket
+    # adopt a crashed rebucket
+    finish_commit(spark, f"{index_path}/{POSTINGS_REBUCKET_MARKER}")
     meta = read_table_meta(spark, index_path) or {}
     if "n_buckets" not in meta:
         raise RuntimeError(

@@ -152,6 +152,38 @@ def test_lookup_job_counts(spark, tmp_path):
     assert sorted((r["candidate_id"], r["score"]) for r in got) == [(3, 5.0), (9, 11.0)]
 
 
+def test_bucket_writes_job_counts(spark, tmp_path):
+    """An upsert into an existing 4-bucket table and a key delete from it
+    write the touched buckets once and swap them in by one commit: 7 and
+    10 jobs (staging, reading the stage back and rewriting it with
+    dynamic partition overwrite took 10 and 17). Neither leaves a stage
+    or aside dir beside the table, and retrieve() still plans with 0
+    jobs."""
+    import os
+
+    from bharatmlstack_spark import fixtures
+    from bharatmlstack_spark.operators.feature_store import FeatureStore
+
+    fs = FeatureStore(spark, fixtures.user_registry(), str(tmp_path / "w"), n_buckets=4)
+    fs.persist(
+        "user",
+        spark.range(0, 64).select(
+            F.col("id").alias("user_id"), (F.col("id") % 60).cast("int").alias("demo_int32__age")
+        ),
+    )
+    upsert = spark.createDataFrame([(1, 7), (2, 8)], ["user_id", "demo_int32__age"])
+    _, persisted = _jobs_launched(spark, lambda: fs.persist("user", upsert))
+    keys = spark.createDataFrame(pd.DataFrame({"user_id": [3, 4]}))
+    removed, deleted = _jobs_launched(spark, lambda: fs.delete("user", keys))
+    assert removed == 2
+    assert (persisted, deleted) == (7, 10)
+    assert os.listdir(tmp_path / "w" / "user") == ["store_0"]
+    _, planned = _jobs_launched(
+        spark, lambda: fs.retrieve("user", {"demo_int32": ["age"]}, keys)
+    )
+    assert planned == 0
+
+
 def test_events_range_is_take_ordered(spark, sf_dir, qs):
     from bharatmlstack_spark.plans import explain_formatted
 

@@ -285,7 +285,10 @@ def test_rebucket_commit_marker_recovery(spark, tmp_path):
     finished by the next state entry point: staged roots swap in, the
     marker's sidecar installs, the marker disappears — roots and
     sidecar can never disagree on the bucket count."""
-    from bharatmlstack_spark.operators.feature_store import read_table_meta
+    from bharatmlstack_spark.operators.feature_store import (
+        TABLE_META_FILE,
+        read_table_meta,
+    )
     from bharatmlstack_spark.streaming.ingest import (
         REBUCKET_MARKER,
         await_stream,
@@ -327,7 +330,11 @@ def test_rebucket_commit_marker_recovery(spark, tmp_path):
     with open(os.path.join(state, REBUCKET_MARKER), "w") as f:
         f.write(
             json.dumps(
-                {"new_meta": new_meta, "adopt_sets": True, "adopt_bands": False}
+                {
+                    "swaps": [[f"{state}/sets__rebucketing", f"{state}/sets"]],
+                    "drops": [],
+                    "meta": [os.path.join(state, TABLE_META_FILE), new_meta],
+                }
             )
         )
 
@@ -380,8 +387,20 @@ def test_refit_commit_marker_recovery(spark, tmp_path):
     with open(os.path.join(stage, TABLE_META_FILE), "w") as f:
         f.write(json.dumps({"n_cells": 4, "batches_since_compact": 0}))
     _write_quantizer(spark, index_path + QUANTIZER_DIR_SUFFIX + "__refitting", idx1)
+    quantizer = index_path + QUANTIZER_DIR_SUFFIX
     with open(index_path + REFIT_MARKER_SUFFIX, "w") as f:
-        f.write(json.dumps({"n_cells": 4}))
+        f.write(
+            json.dumps(
+                {
+                    "swaps": [
+                        [stage, index_path],
+                        [quantizer + "__refitting", quantizer],
+                    ],
+                    "drops": [],
+                    "meta": None,
+                }
+            )
+        )
 
     # a reader entry point finishes the commit
     index = read_streamed_ivf_index(spark, index_path)

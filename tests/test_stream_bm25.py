@@ -275,7 +275,10 @@ def test_postings_rebucket_marker_recovery(spark, tmp_path):
     and sidecar can never disagree on the modulus."""
     import json
 
-    from bharatmlstack_spark.operators.feature_store import read_table_meta
+    from bharatmlstack_spark.operators.feature_store import (
+        TABLE_META_FILE,
+        read_table_meta,
+    )
     from bharatmlstack_spark.streaming.ingest import (
         POSTINGS_REBUCKET_MARKER,
         compact_streamed_postings,
@@ -317,7 +320,18 @@ def test_postings_rebucket_marker_recovery(spark, tmp_path):
     new_meta = dict(old_meta)
     new_meta.update({"n_buckets": 8, "batches_since_compact": 0})
     with open(os.path.join(index_path, POSTINGS_REBUCKET_MARKER), "w") as f:
-        f.write(json.dumps({"new_meta": new_meta, "adopt": ["postings", "doclen"]}))
+        f.write(
+            json.dumps(
+                {
+                    "swaps": [
+                        [f"{index_path}/{sub}__rebucketing", f"{index_path}/{sub}"]
+                        for sub in ("postings", "doclen")
+                    ],
+                    "drops": [],
+                    "meta": [os.path.join(index_path, TABLE_META_FILE), new_meta],
+                }
+            )
+        )
 
     compact_streamed_postings(spark, index_path)  # any entry point
     meta = read_table_meta(spark, index_path)

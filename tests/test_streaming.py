@@ -1125,7 +1125,7 @@ def test_compact_neardup_state_legacy_sidecar_keeps_band_layout(
 
     from bharatmlstack_spark.operators.feature_store import (
         TABLE_META_FILE,
-        hadoop_write_text,
+        hadoop_write_text_atomic,
     )
     from bharatmlstack_spark.streaming.ingest import (
         compact_neardup_state,
@@ -1150,7 +1150,7 @@ def test_compact_neardup_state_legacy_sidecar_keeps_band_layout(
     run("lg_ck2")  # full redelivery: duplicates in both roots
 
     # rewrite the sidecar to the legacy form: n_buckets only
-    hadoop_write_text(
+    hadoop_write_text_atomic(
         spark, f"{state}/{TABLE_META_FILE}", json.dumps({"n_buckets": 8})
     )
     stats = compact_neardup_state(spark, state)
@@ -1346,7 +1346,7 @@ def test_neardup_signature_params_are_a_contract(spark, tmp_path):
 
     from bharatmlstack_spark.operators.feature_store import (
         TABLE_META_FILE,
-        hadoop_write_text,
+        hadoop_write_text_atomic,
         read_table_meta,
     )
     from bharatmlstack_spark.streaming.ingest import (
@@ -1376,7 +1376,7 @@ def test_neardup_signature_params_are_a_contract(spark, tmp_path):
         run("sg_ck2", num_hashes=32)
 
     # a pre-contract sidecar (layout keys only): the probe refuses
-    hadoop_write_text(
+    hadoop_write_text_atomic(
         spark, f"{state}/{TABLE_META_FILE}",
         json.dumps({"n_buckets": 8, "bucket_bands": False}),
     )
