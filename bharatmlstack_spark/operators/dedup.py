@@ -10,7 +10,9 @@ Exact, MinHash+LSH, SimHash, n-gram Jaccard, and embedding-cosine near-dup
 - MinHash+LSH: k hash slots per shingle folded map-side to a k-wide
   signature, banded; candidate pairs = equi-join on (band_idx, band_hash).
   At 100 TB the band join is THE scale path: cost ~ (docs x bands), not
-  docs².
+  docs². The dedup pipeline verifies each pair inside that one join: the
+  band rows carry the shingle sets, and a pair is kept at its first
+  matching band only.
 - SimHash:     per-token hash bit votes -> 64-bit fingerprint; near-dups by
   hamming distance over banded fingerprint pieces.
 - embedding:   cosine over an embedding column, banded by LSH
@@ -285,27 +287,31 @@ def minhash_signatures_from_hashes(
     array: slot i = min over shingles of xxhash64(i, shingle_hash).
 
     Split out of minhash_signatures so a pipeline that also needs the
-    shingle sets for verification (minhash_lsh_dedup_pairs) hashes the
-    corpus ONCE and derives both the signatures and the verify sides from
-    the persisted (id, long-array) frame — shingling is the expensive
-    map, and computing it twice was the dominant cost of the product
-    path. Entirely map-side over the cached arrays; no explode, no
-    shuffle."""
+    shingle sets for verification (minhash_lsh_cross_pairs, the streaming
+    near-dup sink) hashes the corpus ONCE and derives both the signatures
+    and the verify sides from the persisted (id, long-array) frame —
+    shingling is the expensive map, and computing it twice was the
+    dominant cost of the product path. Entirely map-side over the cached
+    arrays; no explode, no shuffle."""
+    return base.select(
+        F.col(id_col).alias("id"),
+        F.expr(_signature_sql(hashes_col, num_hashes)).alias("signature"),
+    )
 
-    # one parsed SQL string instead of num_hashes Column-built slots: the
-    # Column form pays ~num_hashes lambda conversions + array() assembly in
-    # py4j round-trips (~0.8 s driver time per call at 64 slots, measured
-    # in OPTIMIZATION_r17.md) — the parsed expression tree, plan and
-    # values are identical. The lambda must take ONE arg (a 2-arg lambda
-    # would receive the array index and collapse every slot).
+
+def _signature_sql(hashes_col: str, num_hashes: int) -> str:
+    """The MinHash signature of the hash array ``hashes_col`` as ONE SQL
+    expression. One parsed string instead of num_hashes Column-built
+    slots: the Column form pays ~num_hashes lambda conversions + array()
+    assembly in py4j round-trips (~0.8 s driver time per call at 64
+    slots, measured in OPTIMIZATION_r17.md) — the parsed expression tree,
+    plan and values are identical. The lambda must take ONE arg (a 2-arg
+    lambda would receive the array index and collapse every slot)."""
     slots = ", ".join(
         f"array_min(transform(`{hashes_col}`, __s -> xxhash64({i}, __s)))"
         for i in range(num_hashes)
     )
-    return base.select(
-        F.col(id_col).alias("id"),
-        F.expr(f"array({slots})").alias("signature"),
-    )
+    return f"array({slots})"
 
 
 def minhash_signatures(
@@ -394,14 +400,19 @@ def lsh_candidate_pairs(
     id_col: str = "id",
     sig_col: str = "signature",
 ) -> DataFrame:
-    """Band the signature; docs colliding in any band become candidates.
+    """Band the signature; docs colliding in any band become candidates
+    (distinct (id_a < id_b) pairs, unverified).
 
     One explode + one equi-join on (band_idx, band_hash) — the sub-linear
-    path that replaces the all-pairs product at scale. The banded frame is
-    persisted because BOTH self-join sides consume it — without the cache
-    the whole signature scan (the pipeline's expensive map) runs twice; the
-    cached rows are (id, band_idx, band_hash) longs, docs x bands of them,
-    tiny next to the corpus.
+    path that replaces the all-pairs product at scale — then a pair dedup
+    (a pair colliding in k bands joins k times). minhash_lsh_dedup_pairs
+    does not call it: it keeps each pair at its first matching band and
+    verifies it in the joined row; this candidate-only form is its test
+    reference and perfbench's MinHash precision denominator. The banded
+    frame is persisted because BOTH self-join sides consume it — without
+    the cache the whole signature scan (the pipeline's expensive map) runs
+    twice; the cached rows are (id, band_idx, band_hash) longs, docs x
+    bands of them, tiny next to the corpus.
     """
     banded = band_signatures(signatures, bands, id_col, sig_col)
     banded = defer_unpersist(banded.persist())
@@ -414,6 +425,37 @@ def lsh_candidate_pairs(
     )
 
 
+def _minhash_bands(sets: DataFrame, num_hashes: int, bands: int) -> DataFrame:
+    """(id, band_idx, band_hash, bh, sh) from an (id, sh) frame of hashed
+    shingle sets: one row per (doc, band), carrying all of the doc's band
+    hashes ``bh`` and its set ``sh``. ``band_hash`` equals
+    band_signatures(minhash_signatures_from_hashes(sets, num_hashes), bands)
+    row for row."""
+    if num_hashes % bands:
+        raise ValueError(
+            f"minhash: num_hashes={num_hashes} is not divisible by bands={bands}"
+            " — the trailing signature slots would be excluded from every band"
+        )
+    width = num_hashes // bands
+    # band b hashes signature slots [b*width, (b+1)*width) exactly as
+    # band_signatures does. The signature is bound once per row by the
+    # outer one-element transform; referenced inside the band lambda it
+    # would be recomputed per band.
+    bh = (
+        f"element_at(transform(array({_signature_sql('sh', num_hashes)}), __sig ->"
+        f" transform(sequence(0, {bands - 1}), __b -> xxhash64(concat_ws(',',"
+        f" transform(slice(__sig, __b * {width} + 1, {width}), __x -> CAST(__x AS STRING)))))), 1)"
+    )
+    # explode a constant band sequence, not bh itself: posexplode(bh)
+    # infers a size(bh) > 0 filter that is pushed below the input spread
+    # and computes every signature on the single scan task
+    return (
+        sets.selectExpr("id", "sh", f"{bh} AS bh")
+        .selectExpr("id", "sh", "bh", f"explode(sequence(0, {bands - 1})) AS band_idx")
+        .selectExpr("id", "band_idx", "bh[band_idx] AS band_hash", "bh", "sh")
+    )
+
+
 def minhash_lsh_dedup_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -423,47 +465,60 @@ def minhash_lsh_dedup_pairs(
     shingle_n: int = 3,
     threshold: float = 0.8,
 ) -> DataFrame:
-    """Full pipeline: shingle -> minhash -> band -> bucket-join -> verify
-    candidates with exact Jaccard (the classic LSH dedup shape).
+    """Near-dup pairs (id_a < id_b, jaccard >= threshold): shingle ->
+    minhash -> band -> bucket-join -> exact Jaccard, in ONE band self-join.
 
-    Verification is CANDIDATE-LOCAL: each surviving pair joins its two
-    hashed shingle sets and computes Jaccard with array ops — cost scales
-    with the candidate count, not the corpus (running the corpus-wide
-    similarity join here would defeat the point of LSH). Same
-    hashed-distinct-shingle semantics as ngram_jaccard_pairs (exact up to
-    xxhash64 collisions within a pair)."""
+    Each band row carries its doc's hashed shingle set ``sh`` and all of
+    its band hashes ``bh`` (the same values as :func:`band_signatures` over
+    :func:`minhash_signatures_from_hashes`). So the joined row already
+    holds everything the pair needs:
+    - a pair colliding in k bands comes out of the join k times, and is
+      kept only at its first matching band (the lowest j with
+      ``a.bh[j] = b.bh[j]``), the row-local test ``simhash_near_pairs``
+      uses: no pair-dedup aggregate, no pair shuffle;
+    - its Jaccard is computed in the row from ``a.sh`` and ``b.sh``: no
+      verify joins back to the shingle sets, and no checkpoint of them.
+    The output equals ``lsh_candidate_pairs`` verified by Jaccard over the
+    hashed distinct shingles (exact up to xxhash64 collisions within a
+    pair, as ngram_jaccard_pairs). Cost scales with the candidate count,
+    not the corpus.
 
-    # shingling is the expensive map and EVERY stage needs it — the
-    # signatures AND both verification sides (and the source may itself
-    # be a multi-branch union): hash-shingle ONCE, persist the compact
-    # (id, long-array) frame, derive everything from the cache. Spread
-    # the map first when the source arrives in fewer splits than cores
-    # (a 3-branch union strands the whole signature stage on 3 tasks) —
-    # the raw-text exchange is bytes-cheap next to the map it unblocks.
+    Trade-off: the persisted banded frame holds ``sh`` once per band, so it
+    is about ``bands`` times the size of the shingle sets. Measured from
+    the storage status on perfbench's 1,620-doc corpus at 64 hashes / 16
+    bands: 14.8 MB cached, where the checkpointed sets plus the
+    (id, band_idx, band_hash) rows of the three-join form held 1.0 MB. The
+    band join stays a broadcast at that size.
+
+    Precondition: ``id_col`` is unique across ``df``. Each pair is emitted
+    exactly once only then; duplicate ids yield duplicate pairs, since no
+    pair dedup runs."""
+    # shingling is the expensive map: spread it first when the source
+    # arrives in fewer splits than cores (a 3-branch union strands the
+    # whole stage on 3 tasks) — the raw-text exchange is bytes-cheap next
+    # to the map it unblocks
     par = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < par:
         df = df.repartition(par)
-    # localCheckpoint, not persist: three consumers (signatures + both
-    # verify sides) — same rationale and measurement as the PPJoin sets
-    # frame above (OPTIMIZATION_r17.md)
     sets = df.select(
         F.col(id_col).alias("id"),
         hashed_word_shingles(text_col, shingle_n).alias("sh"),
-    ).localCheckpoint()
-    sigs = minhash_signatures_from_hashes(sets, "id", "sh", num_hashes)
-    cands = lsh_candidate_pairs(sigs, bands)
-    a = sets.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a"))
-    b = sets.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b"))
+    )
+    banded = _minhash_bands(sets, num_hashes, bands)
+    # both join sides read the banded frame: persist it so shingling and
+    # the signatures run once
+    banded = defer_unpersist(banded.persist())
+    a, b = banded.alias("a"), banded.alias("b")
+    first_match = ", ".join(
+        f"CASE WHEN a.bh[{j}] = b.bh[{j}] THEN {j} END" for j in range(bands)
+    )
     return (
-        cands.join(a, on="id_a")
-        .join(b, on="id_b")
-        .select(
-            "id_a",
-            "id_b",
-            (
-                F.size(F.array_intersect("sh_a", "sh_b"))
-                / F.size(F.array_union("sh_a", "sh_b"))
-            ).alias("jaccard"),
+        a.join(b, on=["band_idx", "band_hash"])
+        .where(f"a.id < b.id AND band_idx = coalesce({first_match})")
+        .selectExpr(
+            "a.id AS id_a",
+            "b.id AS id_b",
+            "size(array_intersect(a.sh, b.sh)) / size(array_union(a.sh, b.sh)) AS jaccard",
         )
         .filter(F.col("jaccard") >= threshold)
     )
@@ -501,8 +556,9 @@ def minhash_lsh_cross_pairs(
     def _sets(df: DataFrame) -> DataFrame:
         if df.rdd.getNumPartitions() < par:
             df = df.repartition(par)
-        # localCheckpoint for the same multi-consumer reason as the
-        # self-join form above
+        # localCheckpoint: two consumers (the signatures and one verify
+        # side) read each corpus's sets; materialize the compact
+        # (id, long-array) rows once (OPTIMIZATION_r17.md)
         return df.select(
             F.col(id_col).alias("id"),
             hashed_word_shingles(text_col, shingle_n).alias("sh"),

@@ -14,6 +14,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def get_spark(
     app_name: str = "bharatmlstack_spark",
@@ -60,6 +62,11 @@ def get_spark(
         )
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        # Python workers skip re-reading Spark's zip archives on every task
+        # (worker_daemon.py); the package's parent dir on the workers' path
+        # lets the daemon start whatever the working directory
+        .config("spark.python.daemon.module", "bharatmlstack_spark.worker_daemon")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
     )
     if master is not None:
         builder = builder.master(master)

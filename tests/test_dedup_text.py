@@ -229,3 +229,90 @@ def test_band_signatures_rejects_indivisible_bands(spark):
     assert band_signatures(sigs, bands=16).count() == 16  # contract holds
     with pytest.raises(Exception, match="not divisible by bands=10"):
         band_signatures(sigs, bands=10).count()
+
+
+def _minhash_corpus(spark):
+    """Seeded corpus for the MinHash pipeline: random docs over a small
+    vocabulary (so unrelated docs still share shingles), exact copies,
+    near copies (one word swapped, one appended), and NULL, empty,
+    whitespace-only, 1- and 2-word texts, each of those twice."""
+    import random
+
+    rng = random.Random(11)
+    vocab = [f"w{i}" for i in range(30)]
+    texts = [" ".join(rng.choices(vocab, k=rng.randint(3, 30))) for _ in range(60)]
+    for t in texts[:12]:
+        texts.append(t)
+        words = t.split()
+        words[rng.randrange(len(words))] = "swapped"
+        texts.append(" ".join(words))
+        texts.append(t + " tail")
+    texts += [None, None, "", "", "   ", "one", "one", "two words", "two words"]
+    return spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+
+
+@pytest.mark.parametrize("num_hashes,bands,threshold", [(64, 16, 0.8), (32, 8, 0.5)])
+def test_minhash_lsh_pairs_match_candidate_reference(spark, num_hashes, bands, threshold):
+    """The one-join pipeline (pair kept at its first matching band,
+    Jaccard in the joined row) equals the candidate pairs of
+    lsh_candidate_pairs over minhash_signatures_from_hashes, verified by
+    a Python Jaccard over the same hashed shingle sets."""
+    from bharatmlstack_spark.query_registry import drain_pending_unpersist
+
+    docs = _minhash_corpus(spark)
+    sets = docs.select(F.col("doc_id").alias("id"), DD.hashed_word_shingles("text").alias("sh"))
+    sh = {r["id"]: r["sh"] for r in sets.collect()}
+    cands = DD.lsh_candidate_pairs(
+        DD.minhash_signatures_from_hashes(sets, "id", "sh", num_hashes), bands
+    ).collect()
+    want = {}
+    for r in cands:
+        a, b = sh[r["id_a"]], sh[r["id_b"]]
+        if a is not None and b is not None:
+            j = len(set(a) & set(b)) / len(set(a) | set(b))
+            if j >= threshold:
+                want[(r["id_a"], r["id_b"])] = j
+    rows = DD.minhash_lsh_dedup_pairs(
+        docs, num_hashes=num_hashes, bands=bands, threshold=threshold
+    ).collect()
+    drain_pending_unpersist()
+    got = {(r["id_a"], r["id_b"]): r["jaccard"] for r in rows}
+    assert len(got) == len(rows)  # each pair exactly once
+    assert got == want
+    assert sum(j == 1.0 for j in want.values()) >= 12 + 2  # copies + short twins
+    assert any(j < 1.0 for j in want.values())  # near copies verified too
+
+
+def test_minhash_in_row_band_hashes_match_band_signatures(spark):
+    """The band rows of minhash_lsh_dedup_pairs carry the same band hashes
+    as band_signatures over minhash_signatures_from_hashes, row for row,
+    and bh[band_idx] is the row's band_hash."""
+    docs = _minhash_corpus(spark)
+    sets = docs.select(F.col("doc_id").alias("id"), DD.hashed_word_shingles("text").alias("sh"))
+    for num_hashes, bands in ((64, 16), (32, 8)):
+        ref = DD.band_signatures(
+            DD.minhash_signatures_from_hashes(sets, "id", "sh", num_hashes), bands
+        )
+        rows = DD._minhash_bands(sets, num_hashes, bands).collect()
+        assert all(r["bh"][r["band_idx"]] == r["band_hash"] for r in rows)
+        got = sorted((r["id"], r["band_idx"], r["band_hash"]) for r in rows)
+        assert got == sorted(tuple(r) for r in ref.collect())
+    with pytest.raises(ValueError, match="not divisible by bands=10"):
+        DD.minhash_lsh_dedup_pairs(docs, num_hashes=64, bands=10)
+
+
+def test_dedup_pass_leaves_no_cached_rdd(spark, docs):
+    """A simhash_near_pairs + minhash_lsh_dedup_pairs pass caches only
+    what the registry's deferred unpersist frees: nothing new stays
+    persisted after drain_pending_unpersist()."""
+    from bharatmlstack_spark.query_registry import drain_pending_unpersist
+
+    def persisted():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    drain_pending_unpersist()
+    before = persisted()
+    DD.simhash_near_pairs(DD.simhash(docs, id_col="doc_id"), max_hamming=3).collect()
+    DD.minhash_lsh_dedup_pairs(docs, threshold=0.5).collect()
+    drain_pending_unpersist()
+    assert persisted() - before == set()

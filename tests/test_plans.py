@@ -473,13 +473,31 @@ def test_cross_corpus_dedup_plan_shape(spark, sf_dir, qs):
 
 
 def test_minhash_lsh_no_corpus_wide_verify(spark, sf_dir, qs):
-    """The LSH dedup plan joins candidates with shingle SETS (id-keyed
-    joins), never the corpus-wide shingle self-join: no join keyed on the
-    raw shingle column may appear."""
+    """The LSH dedup plan verifies candidates with the shingle SETS the
+    band rows carry, never the corpus-wide shingle self-join: no join
+    keyed on the raw shingle column may appear."""
     df = qs["dedup_minhash_lsh"](spark, sf_dir)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
+
+
+def test_minhash_lsh_is_one_band_join(spark, sf_dir, qs):
+    """minhash_lsh_dedup_pairs verifies each pair in its band-join row, at
+    the pair's first matching band: the plan has one join, no pair-dedup
+    aggregate and no checkpointed RDD scan, and a collect runs at most 5
+    Spark jobs (a checkpoint, a pair dedup and two verify joins took 8)."""
+    from bharatmlstack_spark.query_registry import drain_pending_unpersist
+
+    df = qs["dedup_minhash_lsh"](spark, sf_dir)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert sum(plan.count(j) for j in ("HashJoin", "SortMergeJoin", "NestedLoopJoin")) == 1
+    assert "HashAggregate" not in plan
+    assert "Scan ExistingRDD" not in plan
+    rows, jobs = _jobs_launched(spark, df.collect)
+    drain_pending_unpersist()
+    assert len(rows) > 0
+    assert jobs <= 5
 
 
 def test_multi_store_retrieve_broadcasts_keys(spark, sf_dir, qs):
