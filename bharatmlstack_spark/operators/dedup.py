@@ -287,12 +287,12 @@ def minhash_signatures_from_hashes(
     array: slot i = min over shingles of xxhash64(i, shingle_hash).
 
     Split out of minhash_signatures so a pipeline that also needs the
-    shingle sets for verification (minhash_lsh_cross_pairs, the streaming
-    near-dup sink) hashes the corpus ONCE and derives both the signatures
-    and the verify sides from the persisted (id, long-array) frame —
-    shingling is the expensive map, and computing it twice was the
-    dominant cost of the product path. Entirely map-side over the cached
-    arrays; no explode, no shuffle."""
+    shingle sets for verification (the streaming near-dup sink) hashes
+    the corpus ONCE and derives both the signatures and the verify sides
+    from the persisted (id, long-array) frame — shingling is the
+    expensive map, and computing it twice was the dominant cost of the
+    product path. Entirely map-side over the cached arrays; no explode,
+    no shuffle."""
     return base.select(
         F.col(id_col).alias("id"),
         F.expr(_signature_sql(hashes_col, num_hashes)).alias("signature"),
@@ -493,28 +493,48 @@ def minhash_lsh_dedup_pairs(
     Precondition: ``id_col`` is unique across ``df``. Each pair is emitted
     exactly once only then; duplicate ids yield duplicate pairs, since no
     pair dedup runs."""
-    # shingling is the expensive map: spread it first when the source
-    # arrives in fewer splits than cores (a 3-branch union strands the
-    # whole stage on 3 tasks) — the raw-text exchange is bytes-cheap next
-    # to the map it unblocks
-    par = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < par:
-        df = df.repartition(par)
-    sets = df.select(
-        F.col(id_col).alias("id"),
-        hashed_word_shingles(text_col, shingle_n).alias("sh"),
+    banded = _minhash_bands(
+        _shingle_sets(df, id_col, text_col, shingle_n), num_hashes, bands
     )
-    banded = _minhash_bands(sets, num_hashes, bands)
     # both join sides read the banded frame: persist it so shingling and
     # the signatures run once
     banded = defer_unpersist(banded.persist())
-    a, b = banded.alias("a"), banded.alias("b")
+    return _first_band_pairs(banded, banded, bands, threshold, "a.id < b.id")
+
+
+def _shingle_sets(
+    df: DataFrame, id_col: str, text_col: str, shingle_n: int
+) -> DataFrame:
+    """(id, sh): each doc's hashed shingle set. Shingling is the expensive
+    map: spread it first when the source arrives in fewer splits than
+    cores (a 3-branch union strands the whole stage on 3 tasks) — the
+    raw-text exchange is bytes-cheap next to the map it unblocks."""
+    par = df.sparkSession.sparkContext.defaultParallelism
+    if df.rdd.getNumPartitions() < par:
+        df = df.repartition(par)
+    return df.select(
+        F.col(id_col).alias("id"),
+        hashed_word_shingles(text_col, shingle_n).alias("sh"),
+    )
+
+
+def _first_band_pairs(
+    banded_a: DataFrame,
+    banded_b: DataFrame,
+    bands: int,
+    threshold: float,
+    where: str = "TRUE",
+) -> DataFrame:
+    """(id_a, id_b, jaccard >= threshold) from one band join of two
+    _minhash_bands frames: a pair colliding in k bands is kept only at
+    its first matching band, and its Jaccard is computed in the row."""
+    a, b = banded_a.alias("a"), banded_b.alias("b")
     first_match = ", ".join(
         f"CASE WHEN a.bh[{j}] = b.bh[{j}] THEN {j} END" for j in range(bands)
     )
     return (
         a.join(b, on=["band_idx", "band_hash"])
-        .where(f"a.id < b.id AND band_idx = coalesce({first_match})")
+        .where(f"{where} AND band_idx = coalesce({first_match})")
         .selectExpr(
             "a.id AS id_a",
             "b.id AS id_b",
@@ -544,53 +564,21 @@ def minhash_lsh_cross_pairs(
     cross-dedups. The band bucket join is A-bands ⋈ B-bands — within-
     corpus collisions never materialize by construction, which at
     |B| ≪ |A| (a daily crawl against a 100 TB reference) makes the
-    candidate set proportional to B's collisions, not A². Verification
-    is candidate-local exact Jaccard over the hashed shingle sets, like
-    the self-join form. Ids may repeat across corpora (they are
-    different documents); pair identity is (id_a, id_b) with the sides
-    kept distinct."""
-
-    sess = df_a.sparkSession
-    par = sess.sparkContext.defaultParallelism
-
-    def _sets(df: DataFrame) -> DataFrame:
-        if df.rdd.getNumPartitions() < par:
-            df = df.repartition(par)
-        # localCheckpoint: two consumers (the signatures and one verify
-        # side) read each corpus's sets; materialize the compact
-        # (id, long-array) rows once (OPTIMIZATION_r17.md)
-        return df.select(
-            F.col(id_col).alias("id"),
-            hashed_word_shingles(text_col, shingle_n).alias("sh"),
-        ).localCheckpoint()
-
-    sets_a, sets_b = _sets(df_a), _sets(df_b)
-    bands_a = band_signatures(
-        minhash_signatures_from_hashes(sets_a, "id", "sh", num_hashes), bands
-    ).select(F.col("id").alias("id_a"), "band_idx", "band_hash")
-    bands_b = band_signatures(
-        minhash_signatures_from_hashes(sets_b, "id", "sh", num_hashes), bands
-    ).select(F.col("id").alias("id_b"), "band_idx", "band_hash")
-    cands = (
-        bands_a.join(bands_b, on=["band_idx", "band_hash"])
-        .select("id_a", "id_b")
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    a = sets_a.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a"))
-    b = sets_b.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b"))
-    return (
-        cands.join(a, on="id_a")
-        .join(b, on="id_b")
-        .select(
-            "id_a",
-            "id_b",
-            (
-                F.size(F.array_intersect("sh_a", "sh_b"))
-                / F.size(F.array_union("sh_a", "sh_b"))
-            ).alias("jaccard"),
+    candidate set proportional to B's collisions, not A². As in the
+    self-join form, each pair is kept at its first matching band and its
+    exact Jaccard over the hashed shingle sets is computed in the joined
+    row: each side's band rows are read once, so nothing is cached, and
+    no pair dedup or verify join runs. Ids may repeat across corpora
+    (they are different documents); pair identity is (id_a, id_b) with
+    the sides kept distinct. Precondition: ids are unique within each
+    corpus, or a repeated id yields repeated pairs."""
+    banded_a, banded_b = (
+        _minhash_bands(
+            _shingle_sets(df, id_col, text_col, shingle_n), num_hashes, bands
         )
-        .filter(F.col("jaccard") >= threshold)
+        for df in (df_a, df_b)
     )
+    return _first_band_pairs(banded_a, banded_b, bands, threshold)
 
 
 # ---------------------------------------------------------------------------

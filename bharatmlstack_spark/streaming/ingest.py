@@ -28,13 +28,10 @@ from pyspark.sql import functions as F
 from bharatmlstack_spark.operators.event_store import EventStore
 from bharatmlstack_spark.operators.feature_store import FeatureStore, hadoop_path_exists
 from bharatmlstack_spark.tablecommit import (
-    ASIDE_SUFFIX,
     BUCKET_MARKER_SUFFIX,
-    _hadoop_rename,
-    _recover_root_swap,
-    _swap_staged_root,
     commit,
     commit_buckets,
+    commit_root,
     finish_commit,
 )
 
@@ -409,19 +406,21 @@ def stream_event_retention(
     """SS3+SS5 (batch-MERGE fallback path): merge each micro-batch into the
     parquet event state and re-trim to top-N per (user, week) — exactly
     EventStore.merge_trim, so late/out-of-order arrivals re-sort within
-    their week (SS4, persist/click.go:165-182)."""
+    their week (SS4, persist/click.go:165-182). Each batch writes the
+    merged state once and swaps it in with tablecommit.commit_root, so a
+    batch killed at any step leaves the old or the new state."""
 
     def _merge(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
+        # a batch killed mid-swap must not read as a missing state
+        finish_commit(spark, state_path + BUCKET_MARKER_SUFFIX)
         if hadoop_path_exists(spark, state_path):
             existing = spark.read.parquet(state_path)
             merged = store.merge_trim(existing, batch_df)
         else:
             merged = store.merge_trim(batch_df)
-        tmp = state_path + "__staging"
-        merged.write.mode("overwrite").parquet(tmp)
-        spark.read.parquet(tmp).write.mode("overwrite").parquet(state_path)
+        commit_root(merged, state_path)
 
     writer = stream_df.writeStream.foreachBatch(_merge).option(
         "checkpointLocation", checkpoint_dir
@@ -450,7 +449,8 @@ def seed_cdc_state(
     mode: a partitionBy write of zero rows leaves a file-less dir that
     cannot be read back; the flat empty file reads fine, carries no
     __kb partition values (nothing to prune), and the first real batch
-    converts it to the bucket dirs with one full overwrite."""
+    converts it to the bucket dirs with one root commit that brings the
+    sidecar in with them."""
     from bharatmlstack_spark.operators.feature_store import write_table_meta
 
     spark = snapshot.sparkSession
@@ -488,33 +488,20 @@ def _resolve_state_layout(
     spark: SparkSession, state_path: str, state_cols: list[str]
 ) -> int | None:
     """Recorded bucket count, CONSISTENCY-CHECKED against the physical
-    layout. A bucket-partitioned state ('__kb' present) whose meta
-    sidecar is missing means the bootstrap conversion's full overwrite
-    (which deletes the sidecar) crashed before write_table_meta restored
-    it. Treating that state as flat would be silently wrong twice over:
-    every later batch would rewrite the FULL state (the O(touched
-    buckets) cost model lost for good) and would write '__kb' as a DATA
-    column conflicting with the partition dirs. Recover the count from
-    the staging copy's sidecar (written before the overwrite precisely
-    for this window) and re-record it; if the staging dir is gone too,
-    fail loudly — never degrade the layout."""
-    from bharatmlstack_spark.operators.feature_store import (
-        read_table_meta,
-        write_table_meta,
-    )
-
+    layout. The bootstrap conversion's root commit brings the sidecar in
+    with the '__kb' dirs, so a bucket-partitioned state without one was
+    damaged outside the sink. Treating it as flat would be silently
+    wrong twice over: every later batch would rewrite the FULL state
+    (the O(touched buckets) cost model lost for good) and would write
+    '__kb' as a DATA column conflicting with the partition dirs. Fail
+    loudly — never degrade the layout."""
     n_buckets = cdc_state_n_buckets(spark, state_path)
     if n_buckets is not None or "__kb" not in state_cols:
         return n_buckets
-    staged = read_table_meta(spark, state_path + "__staging")
-    if staged and "n_buckets" in staged:
-        n = int(staged["n_buckets"])
-        write_table_meta(spark, state_path, n)
-        return n
     raise RuntimeError(
         f"CDC state {state_path} is bucket-partitioned ('__kb' dirs) but "
-        "has no meta sidecar and no staging copy to recover it from — "
-        "refusing to silently flatten the layout. Repair: "
+        "has no meta sidecar — refusing to silently flatten the layout. "
+        "Repair: "
         "write_table_meta(spark, state_path, <the n_buckets the state "
         "was seeded with>)."
     )
@@ -557,25 +544,23 @@ def stream_cdc_sink(
        carried as PAYLOAD (every change is an upsert at the merge
        level; the change batch is broadcast — a micro-batch by
        definition).
-    3. staged rewrite of the state parquet. In a bucketed state a batch
-       rewrites ONLY the buckets its keys hash into (guard read, merge
-       scope, and the tablecommit bucket commit are all bucket-pruned) —
-       at 100 TB a micro-batch costs O(touched buckets), the same cost
-       model as FeatureStore.persist. Deletes are tombstone ROWS, so no
-       bucket is ever emptied by CDC. An empty-seeded bucketed state
-       (flat zero-row bootstrap file, see seed_cdc_state) converts to
-       the real bucket layout on its first non-stale batch via one full
-       (non-dynamic) overwrite.
+    3. one write of the new rows, then one tablecommit commit. In a
+       bucketed state a batch rewrites ONLY the buckets its keys hash
+       into (guard read, merge scope, and the bucket commit are all
+       bucket-pruned) — at 100 TB a micro-batch costs O(touched
+       buckets), the same cost model as FeatureStore.persist. Deletes
+       are tombstone ROWS, so no bucket is ever emptied by CDC. A flat
+       state is rewritten whole by commit_root. An empty-seeded
+       bucketed state (flat zero-row bootstrap file, see seed_cdc_state)
+       converts to the real bucket layout on its first non-stale batch
+       by one commit_root that installs the sidecar with the dirs.
 
     Fixed point == one-shot batch cdc_apply over ALL changes, because
     per-key max-seq-wins is associative and commutative across any
     batch split — the property that makes replay safety provable (and
     what the stream_cdc_apply driver row checks against the batch
     oracle)."""
-    from bharatmlstack_spark.operators.feature_store import (
-        hadoop_delete_path,
-        write_table_meta,
-    )
+    from bharatmlstack_spark.operators.feature_store import table_meta_entry
     from bharatmlstack_spark.operators.incremental import cdc_apply
 
     def _bucket(n: int) -> F.Column:
@@ -664,33 +649,17 @@ def stream_cdc_sink(
                 touched,
             )
             return
-        tmp = state_path + "__staging"
         if n_buckets is None:
-            merged.write.mode("overwrite").parquet(tmp)
-            spark.read.parquet(tmp).write.mode("overwrite").parquet(state_path)
+            commit_root(merged, state_path)
         else:
-            merged = merged.withColumn("__kb", _bucket(n_buckets))
-            (
-                merged.repartition("__kb")
-                .write.mode("overwrite")
-                .partitionBy("__kb")
-                .parquet(tmp)
+            # the bootstrap conversion: the swap replaces the root,
+            # sidecar included, so the commit installs it again
+            commit_root(
+                merged.withColumn("__kb", _bucket(n_buckets)),
+                state_path,
+                meta=table_meta_entry(state_path, n_buckets),
+                partition_col="__kb",
             )
-            # the conversion's full overwrite below deletes the state's
-            # meta sidecar; the staging copy carries it across the crash
-            # window until write_table_meta restores it
-            # (_resolve_state_layout recovers from here)
-            write_table_meta(spark, tmp, n_buckets)
-            (
-                spark.read.parquet(tmp)
-                .repartition("__kb")
-                .write.mode("overwrite")
-                .partitionBy("__kb")
-                .parquet(state_path)
-            )
-            # the full overwrite replaced the dir, sidecar included
-            write_table_meta(spark, state_path, n_buckets)
-        hadoop_delete_path(spark, tmp)  # staged copy: reclaim now
 
     writer = stream_df.writeStream.foreachBatch(_apply).option(
         "checkpointLocation", checkpoint_dir
@@ -718,16 +687,14 @@ def compact_cdc_state(
     must stay: dropping one would let a stale update resurrect the key.
 
     Returns tombstones removed. The layout comes from the state's meta
-    sidecar; the rewrite is a staged full-state pass (flat) or, bucketed,
-    one bucket commit touching only buckets that held dead tombstones:
-    their surviving rows are written once and swapped in, and a bucket
-    the GC empties is dropped — run it at the cadence of
+    sidecar; the rewrite is one root commit of the whole state (flat)
+    or, bucketed, one bucket commit touching only buckets that held dead
+    tombstones: their surviving rows are written once and swapped in,
+    and a bucket the GC empties is dropped — run it at the cadence of
     FeatureStore.compact, not per batch. If the GC would leave the WHOLE
     state empty (every row a dead tombstone), it declines and returns 0:
     a file-less state dir is unreadable, and an all-tombstone table
     should be re-seeded, not compacted."""
-    from bharatmlstack_spark.operators.feature_store import hadoop_delete_path
-
     finish_commit(spark, state_path + BUCKET_MARKER_SUFFIX)
     state = spark.read.parquet(state_path)
     n_buckets = _resolve_state_layout(spark, state_path, state.columns)
@@ -754,13 +721,9 @@ def compact_cdc_state(
     if not removed:
         return 0
     keep = state.filter(~dead)
-    tmp = state_path + "__staging"
     # repartition(1) keeps a zero-survivor flat state readable (one
     # schema-ful empty part file) instead of a file-less dir
-    writer = keep.repartition(1) if keep.isEmpty() else keep
-    writer.write.mode("overwrite").parquet(tmp)
-    spark.read.parquet(tmp).write.mode("overwrite").parquet(state_path)
-    hadoop_delete_path(spark, tmp)
+    commit_root(keep.repartition(1) if keep.isEmpty() else keep, state_path)
     return removed
 
 
@@ -813,25 +776,12 @@ def _ensure_neardup_root(
     be the silent-loss mixed state (see _neardup_root_layout).
 
     flat root + bucketed requested: MIGRATE (one-time bounded rewrite:
-    stage the partitioned copy at ``path + '__migrating'``, swap via
-    delete + rename; a crash leaves either the intact original plus a
-    partial/complete stage — partial stages are discarded, complete ones
-    (``_SUCCESS``) are adopted — never a mixed root). bucketed root +
-    flat requested: raise; degrading is refused the same way
-    _resolve_state_layout refuses for CDC state."""
-    from bharatmlstack_spark.operators.feature_store import hadoop_delete_path
-
-    tmp = path + "__migrating"
+    the partitioned copy is written once and swapped in by
+    tablecommit.commit_root; a crash leaves the intact original, or a
+    commit the caller's finish_commit completes — never a mixed root).
+    bucketed root + flat requested: raise; degrading is refused the same
+    way _resolve_state_layout refuses for CDC state."""
     layout = _neardup_root_layout(spark, path)
-    if hadoop_path_exists(spark, tmp):
-        if hadoop_path_exists(spark, tmp + "/_SUCCESS"):
-            # complete staged copy: finish the crashed swap
-            if layout is not None:
-                hadoop_delete_path(spark, path)
-            _hadoop_rename(spark, tmp, path)
-            layout = "bucketed"
-        else:
-            hadoop_delete_path(spark, tmp)  # partial write; original intact
     if layout == "mixed":
         raise RuntimeError(
             f"near-dup state root {path} holds BOTH flat files and __kb= "
@@ -842,15 +792,7 @@ def _ensure_neardup_root(
         )
     if want_bucketed and layout == "flat":
         flat = spark.read.parquet(path)
-        (
-            flat.withColumn("__kb", kb_expr(flat))
-            .repartition("__kb")
-            .write.mode("overwrite")
-            .partitionBy("__kb")
-            .parquet(tmp)
-        )
-        hadoop_delete_path(spark, path)
-        _hadoop_rename(spark, tmp, path)
+        commit_root(flat.withColumn("__kb", kb_expr(flat)), path, partition_col="__kb")
     elif not want_bucketed and layout == "bucketed":
         # the flag that controls each root differs (state_buckets for the
         # shingle store, bucket_bands for the band index) — the caller
@@ -1035,12 +977,12 @@ def stream_neardup_minhash_sink(
         # adopt a crashed rebucket_neardup_state commit BEFORE reading
         # the sidecar — otherwise this run could validate against (and
         # append under) the pre-rebucket bucket count while the roots
-        # are already hashed with the new one; then restore any root
-        # whose flat compaction swap crashed mid-rename (a missing
-        # bands root would read as an EMPTY index — silent pair loss)
+        # are already hashed with the new one; then finish any root
+        # commit a crash left pending (a bands root stuck mid-swap
+        # would read as an EMPTY index — silent pair loss)
         finish_commit(spark, f"{state_dir}/{REBUCKET_MARKER}")
-        _recover_root_swap(spark, sets_path)
-        _recover_root_swap(spark, bands_path)
+        finish_commit(spark, sets_path + BUCKET_MARKER_SUFFIX)
+        finish_commit(spark, bands_path + BUCKET_MARKER_SUFFIX)
         meta = read_table_meta(spark, state_dir)
         # shared resolution (legacy pre-hybrid sidecars bucketed both
         # roots) — compact_neardup_state resolves with the SAME helper
@@ -1760,9 +1702,9 @@ def read_streamed_ivf_index(
     Vectors tombstoned by ``delete_indexed_vectors`` are broadcast-anti-
     joined out — deleted ids leave every search immediately, before the
     next compaction/refit folds them physically."""
-    # adopt a crashed refit first
+    # adopt a crashed refit first, then a crashed compaction or purge
     finish_commit(spark, index_path + REFIT_MARKER_SUFFIX)
-    _recover_root_swap(spark, index_path)  # ...or a crashed flat-swap
+    finish_commit(spark, index_path + BUCKET_MARKER_SUFFIX)
     df = spark.read.parquet(index_path)
     tomb = _ivf_tombstones(spark, index_path, id_col)
     if tomb is not None:
@@ -1793,18 +1735,18 @@ def _compact_dedup_state(
        bucket commit (the dedup key determines its partition, so dedup
        is partition-local and untouched dirs never rewrite).
 
-    Flat (unpartitioned) states fall back to a full staged rewrite —
-    correct at any size, but the partitioned layouts are the 100 TB
-    path. Returns ``(rows_removed, bailed)``: ``bailed`` is True only
-    when duplicates are KNOWN to exist but live solely in dirs the
-    listing can't target (a null key's __HIVE_DEFAULT_PARTITION__) —
+    Flat (unpartitioned) states fall back to one root commit of the
+    deduped rows — correct at any size, but the partitioned layouts are
+    the 100 TB path. Returns ``(rows_removed, bailed)``: ``bailed`` is
+    True only when duplicates are KNOWN to exist but live solely in dirs
+    the listing can't target (a null key's __HIVE_DEFAULT_PARTITION__) —
     the callers then preserve the sidecar's redelivery flag instead of
     consuming the signal for a reclaim that never happened."""
     from bharatmlstack_spark.operators.feature_store import (
         hadoop_list_partition_dirs,
     )
 
-    _recover_root_swap(spark, path)  # restore a crashed flat-swap first
+    finish_commit(spark, path + BUCKET_MARKER_SUFFIX)  # a crashed commit first
     if not hadoop_path_exists(spark, path):
         return 0, False
     dirs = (
@@ -1845,14 +1787,9 @@ def _compact_dedup_state(
     removed = before - keep.count()
     if not removed:
         return 0, False
-    # crash-safe flat rewrite: stage, then the aside-swap (a complete
-    # copy exists in some dir at every instant; _recover_root_swap at
-    # the state entry points restores a crash mid-swap) — auto_maintain
-    # runs this inside the sink's own loop, so a plain live overwrite
-    # would put the whole root at risk on every due micro-batch
-    tmp = path + "__compacting"
-    keep.write.mode("overwrite").parquet(tmp)
-    _swap_staged_root(spark, tmp, path)
+    # auto_maintain runs this inside the sink's own loop, so a plain live
+    # overwrite would put the whole root at risk on every due batch
+    commit_root(keep, path)
     return removed, False
 
 
@@ -2012,8 +1949,7 @@ def rebucket_neardup_state(
       exactly the refuse-to-mis-hash contract, now pointing at the new
       truth.
 
-    Crash-safe via the marker commit (r12, mirroring
-    _ensure_neardup_root's __migrating discipline): both roots are
+    Crash-safe via the tablecommit marker commit (r12): both roots are
     STAGED first (``<root>__rebucketing``), then a commit marker
     holding the NEW sidecar is written atomically, then stages are
     adopted (delete + rename) and the sidecar installed from the
@@ -2169,8 +2105,8 @@ def cross_dedup_against_state(
     bands_path = f"{state_dir}/bands"
     # adopt a crashed rebucket
     finish_commit(spark, f"{state_dir}/{REBUCKET_MARKER}")
-    _recover_root_swap(spark, sets_path)
-    _recover_root_swap(spark, bands_path)
+    finish_commit(spark, sets_path + BUCKET_MARKER_SUFFIX)
+    finish_commit(spark, bands_path + BUCKET_MARKER_SUFFIX)
     meta = read_table_meta(spark, state_dir) or {}
     missing = [k for k in ("num_hashes", "bands", "shingle_n") if k not in meta]
     if missing:
@@ -4598,11 +4534,11 @@ def delete_indexed_vectors(
     fold first, or version the id — the sink's single-arrival
     contract's deletion corollary."""
     # the same crash-recovery preamble every other IVF entry point runs
-    # (read_streamed_ivf_index, compact/refit): a crashed refit commit or
-    # flat-swap would otherwise make this raise a spurious "does not
+    # (read_streamed_ivf_index, compact/refit): a crashed refit or root
+    # commit would otherwise make this raise a spurious "does not
     # exist" or read a mid-swap root's schema
     finish_commit(spark, index_path + REFIT_MARKER_SUFFIX)
-    _recover_root_swap(spark, index_path)
+    finish_commit(spark, index_path + BUCKET_MARKER_SUFFIX)
     if not hadoop_path_exists(spark, index_path):
         raise RuntimeError(
             f"streamed IVF index {index_path} does not exist — refusing "
@@ -4723,9 +4659,8 @@ def _purge_tombstoned_rows(
     anti-join rewrite of ONLY the partition dirs holding rows matching
     the (broadcast, persisted) tombstone frame ``t``.
 
-    - ``bucket_col`` None: flat root — full anti-join rewrite via the
-      crash-safe staged swap (root deleted outright when nothing
-      survives);
+    - ``bucket_col`` None: flat root — full anti-join rewrite in one
+      root commit (a commit that drops the root when nothing survives);
     - partitioned: ``touched`` bucket values are either pre-derived by
       the caller (a pure function of the id — no scan) or found by one
       thin detection scan; only existing targeted dirs rewrite, in one
@@ -4740,7 +4675,6 @@ def _purge_tombstoned_rows(
     every crash point leaves the read-side anti-join mask protecting
     queries."""
     from bharatmlstack_spark.operators.feature_store import (
-        hadoop_delete_path,
         hadoop_list_partition_dirs,
     )
     from bharatmlstack_spark.query_registry import defer_unpersist
@@ -4764,19 +4698,12 @@ def _purge_tombstoned_rows(
         cond = (df[join_col] == tt["__t_key"]) & (df["gen"] < tt["gen_lt"])
         return df.join(F.broadcast(tt), on=cond, how="left_semi")
 
-    # recover a crashed PURGE swap first (its stage suffix __purging is
-    # unknown to _recover_root_swap): a missing live root must adopt the
-    # complete purged stage, or restore the pre-purge aside and re-purge
-    # — returning 0 for a mid-swap root would let the caller delete the
-    # tombstone table over rows that were never purged, resurrecting
-    # deleted data once the mask is gone
-    tmp, aside = root + "__purging", root + ASIDE_SUFFIX
-    if not hadoop_path_exists(spark, root):
-        if hadoop_path_exists(spark, tmp + "/_SUCCESS"):
-            _hadoop_rename(spark, tmp, root)
-        elif hadoop_path_exists(spark, aside):
-            _hadoop_rename(spark, aside, root)
-    _recover_root_swap(spark, root)  # ...and a crashed compaction swap
+    # finish a crashed commit first: returning 0 for a root stuck
+    # mid-swap would let the caller delete the tombstone table over rows
+    # that were never purged, resurrecting deleted data once the mask is
+    # gone
+    marker = root + BUCKET_MARKER_SUFFIX
+    finish_commit(spark, marker)
     if not hadoop_path_exists(spark, root):
         return 0
     if bucket_col is None:
@@ -4787,10 +4714,9 @@ def _purge_tombstoned_rows(
         if n_after == before:
             return 0
         if n_after:
-            keep.write.mode("overwrite").parquet(tmp)
-            _swap_staged_root(spark, tmp, root)
+            commit_root(keep, root)
         else:
-            hadoop_delete_path(spark, root)
+            commit(spark, marker, [], [root])
         return before - n_after
     dirs = hadoop_list_partition_dirs(spark, root, bucket_col)
     if touched is None:
@@ -4838,7 +4764,7 @@ def delete_neardup_docs(spark: SparkSession, state_dir: str, doc_ids) -> int:
     is live stays masked and the next fold purges the new rows too —
     fold first, or version the id (see delete_postings_docs)."""
     sets_path = f"{state_dir}/sets"
-    _recover_root_swap(spark, sets_path)
+    finish_commit(spark, sets_path + BUCKET_MARKER_SUFFIX)
     if not hadoop_path_exists(spark, sets_path):
         raise RuntimeError(
             f"near-dup state {state_dir} has no sets root — refusing to "
@@ -5442,7 +5368,7 @@ def stream_cluster_sink(
     def _ensure_layout() -> None:
         if _layout_ok:
             return
-        _recover_root_swap(spark, labels_path)  # crashed compaction swap
+        finish_commit(spark, labels_path + BUCKET_MARKER_SUFFIX)  # crashed compaction
         meta = read_table_meta(spark, state_dir)
         recorded = (
             int(meta["n_buckets"])
@@ -5728,7 +5654,7 @@ def read_cluster_state(spark: SparkSession, state_dir: str) -> DataFrame:
     stream_cluster_sink)."""
     labels_path = f"{state_dir}/labels"
     merges_path = f"{state_dir}/merges"
-    _recover_root_swap(spark, labels_path)
+    finish_commit(spark, labels_path + BUCKET_MARKER_SUFFIX)
     labels = spark.read.parquet(labels_path).select("node", "label")
     if hadoop_path_exists(spark, merges_path):
         merges = spark.read.parquet(merges_path)
@@ -5750,8 +5676,8 @@ def compact_cluster_state(spark: SparkSession, state_dir: str) -> dict:
     entirely. Maintenance-cadence, single-writer (same contract as the
     other compactors here).
 
-    Crash ordering: the canonical labels SWAP IN first (staged root +
-    _swap_staged_root, recovered by _recover_root_swap from any entry
+    Crash ordering: the canonical labels SWAP IN first (one
+    tablecommit.commit_root, finished by finish_commit from any entry
     point), the merge log is deleted second. A crash between the two
     leaves canonical labels plus a stale log whose children no longer
     appear as any stored label — every resolve join misses, reads stay
@@ -5764,7 +5690,7 @@ def compact_cluster_state(spark: SparkSession, state_dir: str) -> dict:
 
     labels_path = f"{state_dir}/labels"
     merges_path = f"{state_dir}/merges"
-    _recover_root_swap(spark, labels_path)
+    finish_commit(spark, labels_path + BUCKET_MARKER_SUFFIX)
     meta = read_table_meta(spark, state_dir)
     recorded = (
         int(meta["n_buckets"]) if meta and meta.get("n_buckets") is not None else None
@@ -5785,20 +5711,13 @@ def compact_cluster_state(spark: SparkSession, state_dir: str) -> dict:
         .groupBy("node")
         .agg(F.min("label").alias("label"))
     )
-    stage = labels_path + "__compacting"
     if recorded is not None:
-        (
-            canonical.withColumn(
-                "__kb", F.pmod(F.xxhash64(F.col("node")), F.lit(recorded))
-            )
-            .repartition("__kb")
-            .write.mode("overwrite")
-            .partitionBy("__kb")
-            .parquet(stage)
+        canonical = canonical.withColumn(
+            "__kb", F.pmod(F.xxhash64(F.col("node")), F.lit(recorded))
         )
-    else:
-        canonical.write.mode("overwrite").parquet(stage)
-    n_labels = spark.read.parquet(stage).count()
-    _swap_staged_root(spark, stage, labels_path)
+    commit_root(
+        canonical, labels_path, partition_col="__kb" if recorded is not None else None
+    )
+    n_labels = spark.read.parquet(labels_path).count()
     hadoop_delete_path(spark, merges_path)
     return {"labels_rewritten": n_labels, "merges_cleared": n_merges}

@@ -1,4 +1,5 @@
-"""One commit protocol for every staged rewrite of a parquet root.
+"""One commit protocol for every staged rewrite of a parquet root, whole
+or bucket by bucket.
 
 A writer puts its new data under a stage, never inside a live root, and
 then calls ``commit``. The commit writes ONE marker atomically
@@ -13,10 +14,11 @@ et al., VLDB 2020):
   point may call. It is idempotent, and costs one FS existence check
   when no marker exists.
 
-A stage is either a whole root (``sets__rebucketing`` for ``sets``) or a
-partition dir (``key_bucket=3``) inside a stage root. A swap moves the
-live dir ASIDE, renames the stage over its place, then drops the aside,
-so a complete copy of every dir exists at every instant. A root's aside
+A stage is either a whole root (``sets__root_stage`` or
+``sets__rebucketing`` for ``sets``) or a partition dir
+(``key_bucket=3``) inside a stage root. A swap moves the live dir
+ASIDE, renames the stage over its place, then drops the aside, so a
+complete copy of every dir exists at every instant. A root's aside
 is ``<root>__replaced``; a partition dir's aside sits in
 ``<root>__bucket_aside``, because a ``key_bucket=3__replaced`` dir inside
 a live root breaks every read of it (an invalid partition value, or the
@@ -26,7 +28,15 @@ The bucket-partitioned rewrites (FeatureStore persist / delete /
 compact, the CDC state, the streamed-state compactors and tombstone
 purges) go through ``commit_buckets``: the touched buckets' new rows
 are written once, to ``<root>__bucket_stage``, then swapped in; the
-touched buckets left without rows are dropped.
+touched buckets left without rows are dropped. The whole-root rewrites
+(event retention, the flat CDC state and its bucket conversion, the
+near-dup layout migration, the flat compactions and purges, the cluster
+labels) go through ``commit_root``: the new root is written once, to
+``<root>__root_stage``, then swapped in. A rewrite that leaves no rows
+commits with the root in ``drops``. Both kinds share the per-root
+marker ``<root>__bucket_commit.json``, so one
+``finish_commit(spark, root + BUCKET_MARKER_SUFFIX)`` at an entry point
+finishes either.
 """
 
 from __future__ import annotations
@@ -43,6 +53,7 @@ from bharatmlstack_spark.operators.feature_store import (
 )
 
 ASIDE_SUFFIX = "__replaced"
+ROOT_STAGE_SUFFIX = "__root_stage"
 BUCKET_STAGE_SUFFIX = "__bucket_stage"
 BUCKET_ASIDE_SUFFIX = "__bucket_aside"
 BUCKET_MARKER_SUFFIX = "__bucket_commit.json"
@@ -109,37 +120,6 @@ def _swap_dir(spark: SparkSession, stage: str, live: str, aside: str) -> None:
                     "is missing with no aside copy"
                 )
     if hadoop_path_exists(spark, aside) and hadoop_path_exists(spark, live):
-        _delete(spark, aside)
-
-
-def _swap_staged_root(spark: SparkSession, stage: str, live: str) -> None:
-    """Adopt one complete staged ROOT over ``live`` (aside
-    ``<live>__replaced``, which _recover_root_swap also knows). A stage
-    without _SUCCESS is refused loudly: adopting a partial write would
-    lose data."""
-    if hadoop_path_exists(spark, stage):
-        _require_stage_success(spark, stage)
-    _swap_dir(spark, stage, live, live + ASIDE_SUFFIX)
-
-
-def _recover_root_swap(spark: SparkSession, live: str) -> None:
-    """Finish a pending bucket commit on ``live``, then restore a root
-    whose flat compaction swap (_swap_staged_root) crashed mid-rename: a
-    missing live dir adopts a complete ``__compacting`` stage, else
-    restores the ``__replaced`` aside copy; a stranded aside beside an
-    intact live is dropped. Called from the state entry points (sink
-    layout check, compactor, probes, readers) — a few FS existence
-    checks in the common no-op case. Without this, a sink restarted
-    after such a crash would see a missing root and silently treat the
-    whole accumulated index as empty."""
-    finish_commit(spark, live + BUCKET_MARKER_SUFFIX)
-    tmp, aside = live + "__compacting", live + ASIDE_SUFFIX
-    if not hadoop_path_exists(spark, live):
-        if hadoop_path_exists(spark, tmp + "/_SUCCESS"):
-            _hadoop_rename(spark, tmp, live)
-        elif hadoop_path_exists(spark, aside):
-            _hadoop_rename(spark, aside, live)
-    elif hadoop_path_exists(spark, aside):
         _delete(spark, aside)
 
 
@@ -242,3 +222,30 @@ def commit_buckets(
         [live[b] for b in sorted(touched) if b in live and b not in staged],
         meta,
     )
+
+
+def commit_root(
+    df: DataFrame,
+    root: str,
+    meta: tuple[str, dict] | None = None,
+    partition_col: str | None = None,
+) -> None:
+    """Replace the whole of ``root`` with the rows of ``df``: one write,
+    to ``<root>__root_stage`` (``partition_col=`` dirs when given), then
+    one commit that swaps the stage in, under the marker commit_buckets
+    uses. A ``meta`` sidecar inside ``root`` is also written into the
+    stage, so the rename brings it in with the data: a reader never sees
+    the new dirs without it."""
+    spark = df.sparkSession
+    stage = root + ROOT_STAGE_SUFFIX
+    writer = (
+        df.repartition(partition_col).write.partitionBy(partition_col)
+        if partition_col is not None
+        else df.write
+    )
+    writer.mode("overwrite").parquet(stage)  # also clears a pre-commit crash's stage
+    if meta is not None and meta[0].startswith(root + "/"):
+        hadoop_write_text_atomic(
+            spark, stage + meta[0][len(root):], json.dumps(meta[1])
+        )
+    commit(spark, root + BUCKET_MARKER_SUFFIX, [(stage, root)], meta=meta)

@@ -302,9 +302,10 @@ def test_minhash_in_row_band_hashes_match_band_signatures(spark):
 
 
 def test_dedup_pass_leaves_no_cached_rdd(spark, docs):
-    """A simhash_near_pairs + minhash_lsh_dedup_pairs pass caches only
-    what the registry's deferred unpersist frees: nothing new stays
-    persisted after drain_pending_unpersist()."""
+    """A simhash_near_pairs + minhash_lsh_dedup_pairs +
+    minhash_lsh_cross_pairs pass caches only what the registry's deferred
+    unpersist frees: nothing new stays persisted after
+    drain_pending_unpersist()."""
     from bharatmlstack_spark.query_registry import drain_pending_unpersist
 
     def persisted():
@@ -314,5 +315,7 @@ def test_dedup_pass_leaves_no_cached_rdd(spark, docs):
     before = persisted()
     DD.simhash_near_pairs(DD.simhash(docs, id_col="doc_id"), max_hamming=3).collect()
     DD.minhash_lsh_dedup_pairs(docs, threshold=0.5).collect()
+    cross = DD.minhash_lsh_cross_pairs(docs.filter("doc_id < 100"), docs, threshold=0.5)
+    assert {(r.id_a, r.id_b) for r in cross.collect()} >= {(1, 101), (2, 102)}
     drain_pending_unpersist()
     assert persisted() - before == set()

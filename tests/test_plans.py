@@ -184,6 +184,76 @@ def test_bucket_writes_job_counts(spark, tmp_path):
     assert planned == 0
 
 
+def test_flat_state_batches_write_once(spark, tmp_path):
+    """A stream_event_retention batch into an existing state and a flat
+    stream_cdc_sink batch write the new state once and swap it in by one
+    root commit: 4 and 10 jobs, with no job reading a stage back
+    (writing a stage, reading it back and overwriting the root took 6
+    and 12). Each root holds the files of one write, and no stage or
+    aside dir is left beside it."""
+    import os
+    from datetime import datetime
+
+    from bharatmlstack_spark.operators.event_store import EventStore
+    from bharatmlstack_spark.streaming.ingest import (
+        await_stream,
+        seed_cdc_state,
+        stream_cdc_sink,
+        stream_event_retention,
+    )
+
+    st = spark.sparkContext.statusTracker()
+
+    def batch(sink, schema, rows, name):
+        """Jobs of one micro-batch: a query runs under its run id's group."""
+        topic = str(tmp_path / "topics" / name)
+        spark.createDataFrame(rows, schema).coalesce(1).write.parquet(topic)
+        q = sink(spark.readStream.schema(schema).parquet(topic), str(tmp_path / name))
+        await_stream(q, 120, name)
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(st.getJobIdsForGroup(str(q.runId)))
+
+    def files(root):
+        return sorted(f for f in os.listdir(root) if f.endswith(".parquet"))
+
+    ev_schema = "user_id long, ts timestamp, event_id long, value double"
+    ev_state = str(tmp_path / "ev" / "state")
+
+    def retention(stream, ck):
+        return stream_event_retention(
+            stream, EventStore(ts_col="ts", max_per_week=3), ev_state, ck, spark,
+            trigger_once=True,
+        )
+
+    def events(hours):
+        return [(1, datetime(2024, 1, 1, h), h, 1.0) for h in hours]
+
+    batch(retention, ev_schema, events(range(4)), "ev0")
+    assert batch(retention, ev_schema, events([5, 6]), "ev1") == 4
+    assert os.listdir(tmp_path / "ev") == ["state"]
+    assert len(files(ev_state)) == 1
+
+    cdc_schema = "user_id long, seq long, op string, bal long"
+    cdc_state = str(tmp_path / "cdc" / "state")
+    seed_cdc_state(
+        spark.createDataFrame([(i, i * 10) for i in range(4)], "user_id long, bal long"),
+        cdc_state,
+        key_cols=["user_id"],
+    )
+    seeded = files(cdc_state)
+
+    def cdc(stream, ck):
+        return stream_cdc_sink(
+            stream, cdc_state, ck, spark, key_cols=["user_id"], trigger_once=True
+        )
+
+    changes = [(1, 5, "U", 111), (2, 6, "D", None), (9, 7, "U", 999)]
+    assert batch(cdc, cdc_schema, changes, "cdc1") == 10
+    assert os.listdir(tmp_path / "cdc") == ["state"]
+    assert files(cdc_state) and not set(files(cdc_state)) & set(seeded)
+    assert spark.read.parquet(cdc_state).count() == 5
+
+
 def test_events_range_is_take_ordered(spark, sf_dir, qs):
     from bharatmlstack_spark.plans import explain_formatted
 
@@ -483,21 +553,24 @@ def test_minhash_lsh_no_corpus_wide_verify(spark, sf_dir, qs):
 
 
 def test_minhash_lsh_is_one_band_join(spark, sf_dir, qs):
-    """minhash_lsh_dedup_pairs verifies each pair in its band-join row, at
-    the pair's first matching band: the plan has one join, no pair-dedup
-    aggregate and no checkpointed RDD scan, and a collect runs at most 5
-    Spark jobs (a checkpoint, a pair dedup and two verify joins took 8)."""
+    """minhash_lsh_dedup_pairs and minhash_lsh_cross_pairs verify each
+    pair in its band-join row, at the pair's first matching band: the plan
+    has one join, no pair-dedup aggregate and no checkpointed RDD scan,
+    and a collect runs at most 5 Spark jobs (a checkpoint, a pair dedup
+    and two verify joins took 8 for the self-join form)."""
     from bharatmlstack_spark.query_registry import drain_pending_unpersist
 
-    df = qs["dedup_minhash_lsh"](spark, sf_dir)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert sum(plan.count(j) for j in ("HashJoin", "SortMergeJoin", "NestedLoopJoin")) == 1
-    assert "HashAggregate" not in plan
-    assert "Scan ExistingRDD" not in plan
-    rows, jobs = _jobs_launched(spark, df.collect)
-    drain_pending_unpersist()
-    assert len(rows) > 0
-    assert jobs <= 5
+    for name in ("dedup_minhash_lsh", "dedup_cross_corpus"):
+        df = qs[name](spark, sf_dir)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        joins = ("HashJoin", "SortMergeJoin", "NestedLoopJoin")
+        assert sum(plan.count(j) for j in joins) == 1, name
+        assert "HashAggregate" not in plan, name
+        assert "Scan ExistingRDD" not in plan, name
+        rows, jobs = _jobs_launched(spark, df.collect)
+        drain_pending_unpersist()
+        assert len(rows) > 0, name
+        assert jobs <= 5, (name, jobs)
 
 
 def test_multi_store_retrieve_broadcasts_keys(spark, sf_dir, qs):

@@ -477,35 +477,45 @@ def test_compactor_mixed_bailout_preserves_redelivery_flag(spark, tmp_path):
     assert maintenance_due(spark, index_path, every_n_batches=100)
 
 
-def test_flat_compaction_swap_recovery(spark, tmp_path):
-    """A flat root whose compaction swap crashed mid-rename is restored
-    by the next entry point: live-missing + complete stage adopts the
-    stage; live-missing + aside restores the aside."""
+def test_flat_compaction_swap_recovery(spark, tmp_path, monkeypatch):
+    """A flat root whose compaction commit was killed mid-swap is finished
+    by the next entry point: killed before the stage is renamed in (live
+    moved aside), the compacted stage goes live; killed before the aside
+    is dropped, the aside goes. Either way the marker holds the commit."""
+    from bharatmlstack_spark import tablecommit
     from bharatmlstack_spark.streaming.ingest import (
-        _recover_root_swap,
+        compact_streamed_index,
         read_streamed_ivf_index,
     )
-
-    # case 1: live renamed aside, stage consumed/absent -> restore aside
-    root = str(tmp_path / "fs_root")
-    df = spark.createDataFrame(
-        [(1, 0), (2, 0)], "vec_id long, cell int"
+    from bharatmlstack_spark.tablecommit import (
+        ASIDE_SUFFIX,
+        BUCKET_MARKER_SUFFIX,
+        ROOT_STAGE_SUFFIX,
     )
-    df.write.parquet(root)
-    os.rename(root, root + "__replaced")
-    _recover_root_swap(spark, root)
-    assert spark.read.parquet(root).count() == 2
-    assert not os.path.exists(root + "__replaced")
 
-    # case 2: live renamed aside, complete stage present -> adopt stage
-    # (the deduped copy), drop the aside; exercised through the reader
-    root2 = str(tmp_path / "fs_root2")
-    df.write.parquet(root2)
-    spark.read.parquet(root2).limit(1).write.parquet(root2 + "__compacting")
-    os.rename(root2, root2 + "__replaced")
-    out = read_streamed_ivf_index(spark, root2, dedup=False)
-    assert out.count() == 1  # the staged (compacted) copy went live
-    assert os.path.exists(root2)
+    df = spark.createDataFrame([(1, 0), (1, 0), (2, 0)], "vec_id long, cell int")
+    # (call to fail, its number): the stage's rename over the live root,
+    # then the aside's delete
+    for name, k in (("_rename", 2), ("_delete", 1)):
+        root = str(tmp_path / f"fs_root{name}")
+        df.write.parquet(root)  # flat: no cell= dirs
+        real, calls = getattr(tablecommit, name), []
+
+        def failing(*a, _real=real, _calls=calls, _k=k):
+            _calls.append(a)
+            if len(_calls) == _k:
+                raise RuntimeError("killed")
+            return _real(*a)
+
+        with monkeypatch.context() as m:
+            m.setattr(tablecommit, name, failing)
+            with pytest.raises(RuntimeError, match="killed"):
+                compact_streamed_index(spark, root)
+        assert os.path.exists(root + BUCKET_MARKER_SUFFIX)
+        out = read_streamed_ivf_index(spark, root, dedup=False)
+        assert sorted(r.vec_id for r in out.collect()) == [1, 2]  # compacted
+        for leftover in (ASIDE_SUFFIX, ROOT_STAGE_SUFFIX, BUCKET_MARKER_SUFFIX):
+            assert not os.path.exists(root + leftover), (name, leftover)
 
 
 def test_torn_first_sidecar_write_is_discarded(spark, tmp_path):

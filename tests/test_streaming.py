@@ -662,20 +662,23 @@ def test_stream_neardup_minhash_replay_and_partial_state(spark, tmp_path):
     assert _neardup_pairs(spark, out) == {(1, 2), (1, 3), (2, 3)}
 
 
-def test_stream_cdc_sink_meta_loss_recovers_or_fails_loudly(spark, tmp_path):
-    """Bootstrap-conversion crash window: the full overwrite deletes the
-    meta sidecar before write_table_meta restores it. A bucketed state
-    ('__kb' dirs) without a sidecar must recover the bucket count from
-    the staging copy when present, and refuse to run (never silently
-    flatten) when it is not."""
+def test_stream_cdc_sink_meta_loss_recovers_or_fails_loudly(
+    spark, tmp_path, monkeypatch
+):
+    """The bootstrap conversion's root commit stages the sidecar with the
+    '__kb' dirs: a conversion killed mid-swap is finished by the next
+    batch with the bucket count kept. A bucketed state that lost its
+    sidecar some other way must refuse to run (never silently
+    flatten)."""
     import os
 
+    from bharatmlstack_spark import tablecommit
     from bharatmlstack_spark.operators.feature_store import (
         TABLE_META_FILE,
         read_table_meta,
-        write_table_meta,
     )
     from bharatmlstack_spark.streaming.ingest import seed_cdc_state, stream_cdc_sink
+    from bharatmlstack_spark.tablecommit import BUCKET_MARKER_SUFFIX, ROOT_STAGE_SUFFIX
 
     schema = "user_id long, seq long, op string, bal long"
     snap = spark.createDataFrame(
@@ -690,22 +693,32 @@ def test_stream_cdc_sink_meta_loss_recovers_or_fails_loudly(spark, tmp_path):
         )
         q.awaitTermination(300)
 
-    # recovery path: meta gone, staging copy present
+    # recovery path: an empty-seeded state's conversion killed after the
+    # flat bootstrap root went aside, before the stage was renamed in
     state = str(tmp_path / "ml_state")
-    seed_cdc_state(snap, state, key_cols=["user_id"], n_buckets=4)
-    deliver(state, [(1, 10, "U", 111)], tmp_path / "ml_t0", tmp_path / "ml_c0")
-    os.remove(os.path.join(state, TABLE_META_FILE))
-    os.makedirs(state + "__staging", exist_ok=True)
-    write_table_meta(spark, state + "__staging", 4)
-    deliver(state, [(2, 11, "U", 222)], tmp_path / "ml_t1", tmp_path / "ml_c1")
-    assert read_table_meta(spark, state)["n_buckets"] == 4  # re-recorded
-    got = {
-        (r["user_id"], r["bal"]) for r in
-        spark.read.parquet(state).filter(F.col("__last_seq").isNotNull()).collect()
-    }
+    seed_cdc_state(snap.limit(0), state, key_cols=["user_id"], n_buckets=4)
+    real = tablecommit._rename
+
+    def failing(spark_, src, dst):
+        if dst == state:
+            raise RuntimeError("killed mid-swap")
+        return real(spark_, src, dst)
+
+    with monkeypatch.context() as m:
+        m.setattr(tablecommit, "_rename", failing)
+        with pytest.raises(Exception):
+            deliver(state, [(1, 10, "U", 111)], tmp_path / "ml_t0", tmp_path / "ml_c0")
+    assert os.path.exists(state + BUCKET_MARKER_SUFFIX)
+    assert read_table_meta(spark, state + ROOT_STAGE_SUFFIX)["n_buckets"] == 4
+    # the redelivered batch finishes the commit, then no-ops on its seq
+    deliver(state, [(1, 10, "U", 111)], tmp_path / "ml_t1", tmp_path / "ml_c1")
+    deliver(state, [(2, 11, "U", 222)], tmp_path / "ml_t1b", tmp_path / "ml_c1b")
+    assert read_table_meta(spark, state)["n_buckets"] == 4
+    assert any(d.startswith("__kb=") for d in os.listdir(state))
+    got = {(r["user_id"], r["bal"]) for r in spark.read.parquet(state).collect()}
     assert got == {(1, 111), (2, 222)}  # both batches applied, layout kept
 
-    # fail-loud path: meta gone, no staging to recover from
+    # fail-loud path: meta gone
     state2 = str(tmp_path / "ml_state2")
     seed_cdc_state(snap, state2, key_cols=["user_id"], n_buckets=4)
     deliver(state2, [(1, 10, "U", 111)], tmp_path / "ml_t2", tmp_path / "ml_c2")
@@ -847,6 +860,7 @@ def test_stream_neardup_flat_to_bucketed_migrates_state(spark, tmp_path):
     import os
 
     from bharatmlstack_spark.streaming.ingest import stream_neardup_minhash_sink
+    from bharatmlstack_spark.tablecommit import ROOT_STAGE_SUFFIX
 
     docs = _neardup_docs()
     src = str(tmp_path / "mg_src")
@@ -866,10 +880,12 @@ def test_stream_neardup_flat_to_bucketed_migrates_state(spark, tmp_path):
         d.startswith("__kb=") for d in os.listdir(f"{state}/bands")
     )
 
-    # a crashed earlier migration left a PARTIAL stage (no _SUCCESS):
-    # it must be discarded, the intact flat original migrated instead
-    os.makedirs(f"{state}/bands__migrating", exist_ok=True)
-    with open(f"{state}/bands__migrating/part-junk.parquet", "w") as f:
+    # a crashed earlier migration left a PARTIAL stage (no _SUCCESS, no
+    # commit marker): it must be discarded, the intact flat original
+    # migrated instead
+    stage = f"{state}/bands{ROOT_STAGE_SUFFIX}"
+    os.makedirs(stage, exist_ok=True)
+    with open(f"{stage}/part-junk.parquet", "w") as f:
         f.write("partial")
 
     # batch 2 switches to fully-bucketed: both roots migrate, then append
@@ -882,7 +898,7 @@ def test_stream_neardup_flat_to_bucketed_migrates_state(spark, tmp_path):
     bands_ls = os.listdir(f"{state}/bands")
     assert any(d.startswith("__kb=") for d in bands_ls)
     assert not any(d.endswith(".parquet") for d in bands_ls)  # no mixing
-    assert not os.path.exists(f"{state}/bands__migrating")
+    assert not os.path.exists(stage)
     sets_ls = os.listdir(f"{state}/sets")
     assert any(d.startswith("__kb=") for d in sets_ls)
     assert not any(d.endswith(".parquet") for d in sets_ls)

@@ -1,16 +1,18 @@
-"""Fault injection for the bucket commit (bharatmlstack_spark.tablecommit).
+"""Fault injection for the table commits (bharatmlstack_spark.tablecommit):
+bucket commits and whole-root commits.
 
 Each test runs a real write up to its commit, then replays that commit
 from the same on-disk state once per rename-or-delete call it makes,
 with the k-th call failing. After every failure:
 
-- no non-numeric ``key_bucket=`` / ``cell=`` dir sits in the live root
-  (stages and asides live beside it, never inside);
+- no non-numeric ``key_bucket=`` / ``cell=`` / ``__kb=`` dir sits in the
+  live root (stages and asides live beside it, never inside);
 - a fresh reader, which goes through an entry point, sees exactly the
   old rows (the marker was never written) or exactly the new rows;
 - that entry point finished the commit: marker, stage and aside are gone.
 """
 
+import inspect
 import os
 import shutil
 
@@ -20,9 +22,19 @@ from pyspark.sql import functions as F
 from bharatmlstack_spark import fixtures, tablecommit
 from bharatmlstack_spark.operators.feature_store import FeatureStore, _bucket_expr
 from bharatmlstack_spark.tablecommit import (
+    ASIDE_SUFFIX,
     BUCKET_ASIDE_SUFFIX,
     BUCKET_MARKER_SUFFIX,
     BUCKET_STAGE_SUFFIX,
+    ROOT_STAGE_SUFFIX,
+)
+
+LEFTOVERS = (
+    BUCKET_MARKER_SUFFIX,
+    BUCKET_STAGE_SUFFIX,
+    BUCKET_ASIDE_SUFFIX,
+    ROOT_STAGE_SUFFIX,
+    ASIDE_SUFFIX,
 )
 
 
@@ -36,17 +48,22 @@ class _Stop(Exception):
 
 def _capture_commit(monkeypatch, root, op):
     """Run ``op`` up to its commit: returns the commit's arguments and a
-    snapshot of the dir holding ``root`` and its stage at that point."""
+    snapshot of the dir holding ``root`` and its stage at that point. A
+    streaming sink reports the stop wrapped in its query's failure."""
     args = []
+    signature = inspect.signature(tablecommit.commit)
 
-    def record(*a):
-        args.extend(a)
+    def record(*a, **kw):
+        bound = signature.bind(*a, **kw)
+        bound.apply_defaults()
+        args.extend(bound.args)
         raise _Stop
 
     with monkeypatch.context() as m:
         m.setattr(tablecommit, "commit", record)
-        with pytest.raises(_Stop):
+        with pytest.raises(Exception):
             op()
+    assert args, "the operation never reached its commit"
     parent = os.path.dirname(root)
     snapshot = parent + "__snapshot"
     shutil.copytree(parent, snapshot)
@@ -83,19 +100,24 @@ def _replay(monkeypatch, args, restore, k):
     return calls[0]
 
 
-def _sweep(monkeypatch, root, col, args, restore, read, old):
-    """Replay the commit failing at every call; check each outcome."""
+def _sweep(monkeypatch, root, col, args, restore, read, old, check=None):
+    """Replay the commit failing at every call; check each outcome.
+    ``check`` runs on the on-disk state right after each fault, before
+    any entry point has finished the commit."""
     n_calls = _replay(monkeypatch, args, restore, 0)
     new = read()
     assert new != old and n_calls > 0
     for k in range(1, n_calls + 1):
         _replay(monkeypatch, args, restore, k)
-        for name in os.listdir(root):
-            if name.startswith(f"{col}="):
-                assert name[len(col) + 1:].isdigit(), (k, name)
+        if os.path.exists(root):
+            for name in os.listdir(root):
+                if name.startswith(f"{col}="):
+                    assert name[len(col) + 1:].isdigit(), (k, name)
+        if check is not None:
+            check(k)
         committed = os.path.exists(root + BUCKET_MARKER_SUFFIX)
         assert read() == (new if committed else old), k
-        for leftover in (BUCKET_MARKER_SUFFIX, BUCKET_STAGE_SUFFIX, BUCKET_ASIDE_SUFFIX):
+        for leftover in LEFTOVERS:
             assert not os.path.exists(root + leftover), (k, leftover)
     return n_calls
 
@@ -205,3 +227,261 @@ def test_commit_refreshes_frames_cached_over_the_root(spark, tmp_path):
     )
     assert sorted(r.id for r in spark.read.parquet(root).collect()) == [0, 1, 3, 5]
     stale.unpersist()
+
+
+# -- whole-root commits (tablecommit.commit_root) ----------------------
+
+CDC_SCHEMA = "user_id long, seq long, op string, bal long"
+
+
+def _cdc_batch(spark, tmp_path, state, rows, name):
+    """Apply one CDC micro-batch through stream_cdc_sink."""
+    from bharatmlstack_spark.streaming.ingest import await_stream, stream_cdc_sink
+
+    topic = str(tmp_path / "topics" / name)
+    spark.createDataFrame(rows, CDC_SCHEMA).coalesce(1).write.parquet(topic)
+    q = stream_cdc_sink(
+        spark.readStream.schema(CDC_SCHEMA).parquet(topic),
+        state,
+        str(tmp_path / "cks" / name),
+        spark,
+        key_cols=["user_id"],
+        trigger_once=True,
+    )
+    await_stream(q, 120, f"cdc batch {name}")
+
+
+def _cdc_read(spark, state):
+    """Rows through an entry point: a tombstone GC that removes nothing."""
+    from bharatmlstack_spark.streaming.ingest import compact_cdc_state
+
+    assert compact_cdc_state(spark, state, watermark_seq=-1) == 0
+    return sorted(
+        (r["user_id"], r["bal"], r["__op"], r["__last_seq"])
+        for r in spark.read.parquet(state).collect()
+    )
+
+
+def test_flat_cdc_batch_commit_survives_a_fault_at_every_step(
+    spark, tmp_path, monkeypatch
+):
+    """A flat CDC state: one batch updates a key, deletes one, adds one."""
+    from bharatmlstack_spark.streaming.ingest import seed_cdc_state
+
+    state = str(tmp_path / "cdc" / "state")
+    seed_cdc_state(
+        spark.createDataFrame([(i, i * 10) for i in range(4)], "user_id long, bal long"),
+        state,
+        key_cols=["user_id"],
+    )
+    old = _cdc_read(spark, state)
+    rows = [(1, 5, "U", 111), (2, 6, "D", None), (9, 7, "U", 999)]
+    args, restore = _capture_commit(
+        monkeypatch, state, lambda: _cdc_batch(spark, tmp_path, state, rows, "b1")
+    )
+    n = _sweep(
+        monkeypatch, state, "__kb", args, restore, lambda: _cdc_read(spark, state), old
+    )
+    assert n == 4  # aside, swap in, drop aside, marker
+
+
+def test_cdc_bootstrap_commit_survives_a_fault_at_every_step(
+    spark, tmp_path, monkeypatch
+):
+    """An empty-seeded bucketed CDC state converts to its __kb= dirs on the
+    first batch. At no instant are __kb= dirs live without the n_buckets
+    sidecar, which would make every entry point refuse the state."""
+    from bharatmlstack_spark.operators.feature_store import read_table_meta
+    from bharatmlstack_spark.streaming.ingest import seed_cdc_state
+
+    state = str(tmp_path / "cdc" / "state")
+    seed_cdc_state(
+        spark.createDataFrame([], "user_id long, bal long"),
+        state,
+        key_cols=["user_id"],
+        n_buckets=4,
+    )
+    old = _cdc_read(spark, state)
+    rows = [(i, i, "U", i * 100) for i in range(8)]
+    args, restore = _capture_commit(
+        monkeypatch, state, lambda: _cdc_batch(spark, tmp_path, state, rows, "b1")
+    )
+
+    def sidecar_with_dirs(k):
+        if os.path.exists(state) and any(
+            d.startswith("__kb=") for d in os.listdir(state)
+        ):
+            assert (read_table_meta(spark, state) or {}).get("n_buckets") == 4, k
+
+    n = _sweep(
+        monkeypatch,
+        state,
+        "__kb",
+        args,
+        restore,
+        lambda: _cdc_read(spark, state),
+        old,
+        check=sidecar_with_dirs,
+    )
+    assert n == 4
+    assert read_table_meta(spark, state)["n_buckets"] == 4
+    assert any(d.startswith("__kb=") for d in os.listdir(state))
+
+
+def test_event_retention_commit_survives_a_fault_at_every_step(
+    spark, tmp_path, monkeypatch
+):
+    """A stream_event_retention batch. The reader is the sink itself: a
+    later batch for another user merges into the state it finds, so a
+    root left mid-swap would restart the state from that batch alone."""
+    from datetime import datetime
+
+    from bharatmlstack_spark.operators.event_store import EventStore
+    from bharatmlstack_spark.streaming.ingest import await_stream, stream_event_retention
+
+    schema = "user_id long, ts timestamp, event_id long, value double"
+    store = EventStore(ts_col="ts", max_per_week=3)
+    state = str(tmp_path / "ev" / "state")
+    base = datetime(2024, 1, 1)
+    runs = [0]
+
+    def batch(user, hours):
+        runs[0] += 1
+        topic = str(tmp_path / "topics" / f"t{runs[0]}")
+        spark.createDataFrame(
+            [(user, base.replace(hour=h), h, 1.0) for h in hours], schema
+        ).coalesce(1).write.parquet(topic)
+        q = stream_event_retention(
+            spark.readStream.schema(schema).parquet(topic),
+            store,
+            state,
+            str(tmp_path / "cks" / f"c{runs[0]}"),
+            spark,
+            trigger_once=True,
+        )
+        await_stream(q, 120, "event retention batch")
+
+    def read():
+        batch(2, [1])
+        return sorted(
+            (r.user_id, r.event_id) for r in spark.read.parquet(state).collect()
+        )
+
+    batch(1, range(4))  # user 1 keeps events 1, 2, 3
+    args, restore = _capture_commit(monkeypatch, state, lambda: batch(1, [5, 6]))
+    restore()
+    old = read()
+    assert old == [(1, 1), (1, 2), (1, 3), (2, 1)]
+    n = _sweep(monkeypatch, state, "__kb", args, restore, read, old)
+    assert n == 4
+    _replay(monkeypatch, args, restore, 0)
+    assert read() == [(1, 3), (1, 5), (1, 6), (2, 1)]
+
+
+def test_flat_neardup_compaction_commit_survives_a_fault_at_every_step(
+    spark, tmp_path, monkeypatch
+):
+    """compact_neardup_state on a flat state holding a full redelivery:
+    the deduped shingle store swaps in whole. The reader is the
+    cross-dedup probe's preamble."""
+    import json
+
+    from bharatmlstack_spark.streaming.ingest import (
+        await_stream,
+        compact_neardup_state,
+        cross_dedup_against_state,
+        stream_neardup_minhash_sink,
+    )
+
+    src = str(tmp_path / "src")
+    os.makedirs(src)
+    with open(os.path.join(src, "b0.json"), "w") as f:
+        for i, text in enumerate(["the quick brown fox jumps", "unrelated words here"]):
+            f.write(json.dumps({"doc_id": i, "text": text}) + "\n")
+    state_dir = str(tmp_path / "nd" / "state")
+    sets = f"{state_dir}/sets"
+    for ck in ("ck1", "ck2"):  # the second run redelivers every doc
+        q = stream_neardup_minhash_sink(
+            spark.readStream.schema("doc_id long, text string").json(src),
+            state_dir,
+            str(tmp_path / "out"),
+            str(tmp_path / "cks" / ck),
+            spark,
+            id_col="doc_id",
+            text_col="text",
+            trigger_once=True,
+        )
+        await_stream(q, 120, "near-dup sink")
+    incoming = spark.createDataFrame([(7, "the quick brown fox jumps")], ["doc_id", "text"])
+
+    def read():
+        pairs = cross_dedup_against_state(spark, state_dir, incoming)
+        assert {(r.id_a, r.id_b) for r in pairs.collect()} == {(0, 7)}
+        return sorted((r.id, tuple(r.sh)) for r in spark.read.parquet(sets).collect())
+
+    old = read()
+    args, restore = _capture_commit(
+        monkeypatch, sets, lambda: compact_neardup_state(spark, state_dir)
+    )
+    n = _sweep(monkeypatch, sets, "__kb", args, restore, read, old)
+    assert n == 4
+    assert len(read()) == 2 and len(old) == 4
+
+
+def test_cluster_compaction_commit_survives_a_fault_at_every_step(
+    spark, tmp_path, monkeypatch
+):
+    """compact_cluster_state on a 4-bucket label store: the canonical
+    labels swap in whole, as __kb= dirs. The reader is
+    read_cluster_state, whose components never change."""
+    from bharatmlstack_spark.operators.feature_store import write_table_meta
+    from bharatmlstack_spark.streaming.ingest import (
+        compact_cluster_state,
+        read_cluster_state,
+    )
+
+    state_dir = str(tmp_path / "cl" / "state")
+    labels = f"{state_dir}/labels"
+    # nodes 10 and 11 joined cluster 1 through the logged merge 10 -> 1
+    spark.createDataFrame(
+        [(1, 1), (2, 1), (10, 10), (11, 10), (40, 40)], "node long, label long"
+    ).withColumn("__kb", F.pmod(F.xxhash64("node"), F.lit(4))).write.partitionBy(
+        "__kb"
+    ).parquet(labels)
+    spark.createDataFrame([(10, 1)], "child long, parent long").write.parquet(
+        f"{state_dir}/merges"
+    )
+    write_table_meta(spark, state_dir, 4)
+    components = {1: 1, 2: 1, 10: 1, 11: 1, 40: 40}
+
+    def read():
+        got = read_cluster_state(spark, state_dir).collect()
+        assert {r.node: r.component for r in got} == components
+        return sorted((r.node, r.label) for r in spark.read.parquet(labels).collect())
+
+    old = read()
+    args, restore = _capture_commit(
+        monkeypatch, labels, lambda: compact_cluster_state(spark, state_dir)
+    )
+    n = _sweep(monkeypatch, labels, "__kb", args, restore, read, old)
+    assert n == 4
+    assert dict(read()) == components
+
+
+def test_no_hand_rolled_root_swaps():
+    """Every root rewrite in the package commits through tablecommit: the
+    retired swap helpers and stage names must not come back."""
+    import pathlib
+    import re
+
+    retired = re.compile(
+        r"_swap_staged_root|_recover_root_swap|__(staging|compacting|purging|migrating)\b"
+    )
+    package = pathlib.Path(tablecommit.__file__).parent
+    hits = [
+        f"{path.relative_to(package.parent)}:{n}: {line.strip()}"
+        for path in sorted(package.rglob("*.py"))
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        if retired.search(line)
+    ]
+    assert not hits, "hand-rolled root swap:\n" + "\n".join(hits)

@@ -9,8 +9,8 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from bharatmlstack_spark import tablecommit
 from bharatmlstack_spark.streaming.ingest import (
-    ASIDE_SUFFIX,
     await_stream,
     bm25_search_streamed,
     compact_streamed_postings,
@@ -22,6 +22,11 @@ from bharatmlstack_spark.streaming.ingest import (
     maintenance_due,
     stream_neardup_minhash_sink,
     stream_postings_sink,
+)
+from bharatmlstack_spark.tablecommit import (
+    ASIDE_SUFFIX,
+    BUCKET_MARKER_SUFFIX,
+    ROOT_STAGE_SUFFIX,
 )
 
 
@@ -89,13 +94,36 @@ def test_pending_tombstones_make_maintenance_due(spark, tiny_postings):
     assert not maintenance_due(spark, tiny_postings, every_n_batches=64)
 
 
+class _Crash(Exception):
+    pass
+
+
+def _crash_mid_root_swap(monkeypatch, root, op):
+    """Run ``op`` with the rename of ``root``'s stage over it failing: the
+    commit marker is written and the live root is already aside."""
+    real = tablecommit._rename
+
+    def failing(spark, src, dst):
+        if dst == root:
+            raise _Crash(src)
+        return real(spark, src, dst)
+
+    with monkeypatch.context() as m:
+        m.setattr(tablecommit, "_rename", failing)
+        with pytest.raises(_Crash):
+            op()
+    assert os.path.exists(root + BUCKET_MARKER_SUFFIX)
+    assert os.path.exists(root + ASIDE_SUFFIX)
+
+
 def test_crashed_purge_swap_recovers_before_tombstone_consumption(
-    spark, tmp_path
+    spark, tmp_path, monkeypatch
 ):
-    """A fold retried over a mid-swap flat root (live missing, pre-purge
-    copy stranded aside) must restore and RE-PURGE it — returning 0 for
-    the missing root would let the caller delete the tombstone table and
-    resurrect the deleted doc's band rows forever."""
+    """A fold killed while swapping the purged flat bands root in (live
+    moved aside, stage not yet renamed) is finished by the retried fold
+    before it looks at the root — returning 0 for the missing root would
+    let the caller delete the tombstone table and resurrect the deleted
+    doc's band rows forever."""
     src = str(tmp_path / "src")
     os.makedirs(src)
     with open(os.path.join(src, "b0.json"), "w") as f:
@@ -110,14 +138,20 @@ def test_crashed_purge_swap_recovers_before_tombstone_consumption(
     )
     await_stream(q, 120, "crash-sim sink")
     delete_neardup_docs(spark, state_dir, [1])
-    # simulate the crash: live bands renamed aside, stage lost
-    os.rename(f"{state_dir}/bands", f"{state_dir}/bands{ASIDE_SUFFIX}")
+    bands_path = f"{state_dir}/bands"
+    _crash_mid_root_swap(
+        monkeypatch, bands_path, lambda: fold_neardup_tombstones(spark, state_dir)
+    )
+    assert not os.path.exists(bands_path)
+    assert os.path.exists(f"{state_dir}/tombstones")  # the mask still holds
     stats = fold_neardup_tombstones(spark, state_dir)
-    assert stats["tombstones"] == 1 and stats["bands_removed"] > 0
-    bands = spark.read.parquet(f"{state_dir}/bands")  # restored AND purged
+    assert stats["tombstones"] == 1
+    bands = spark.read.parquet(bands_path)  # finished: the purged copy
     assert bands.filter(F.col("id") == 1).count() == 0
     assert bands.filter(F.col("id") == 2).count() > 0
-    assert not os.path.exists(f"{state_dir}/bands{ASIDE_SUFFIX}")
+    for leftover in (ASIDE_SUFFIX, ROOT_STAGE_SUFFIX, BUCKET_MARKER_SUFFIX):
+        assert not os.path.exists(bands_path + leftover), leftover
+    assert not os.path.exists(f"{state_dir}/tombstones")
 
 
 def test_noop_fold_skips_identical_rewrite(spark, tiny_postings):
@@ -200,16 +234,16 @@ def test_null_id_tombstones_rejected(spark, tiny_postings):
     assert delete_postings_docs(spark, tiny_postings, ok) == 1
 
 
-def test_delete_indexed_vectors_recovers_crashed_swap(spark, tmp_path):
+def test_delete_indexed_vectors_recovers_crashed_swap(spark, tmp_path, monkeypatch):
     """delete_indexed_vectors runs the same crash-recovery preamble as
-    every other IVF entry point (ADVICE r12): after a crashed flat-swap
-    left the live root renamed aside, the delete must restore the root
-    and record the tombstone instead of raising 'does not exist'."""
+    every other IVF entry point (ADVICE r12): after a root commit of the
+    index was killed with the live root moved aside, the delete must
+    finish the commit and record the tombstone instead of raising 'does
+    not exist'."""
     import numpy as np
 
     from bharatmlstack_spark.operators.lsh import IvfIndex
     from bharatmlstack_spark.streaming.ingest import (
-        _hadoop_rename,
         await_stream,
         read_streamed_ivf_index,
         stream_ann_ivf_sink,
@@ -231,11 +265,17 @@ def test_delete_indexed_vectors_recovers_crashed_swap(spark, tmp_path):
     )
     await_stream(q, 120, "ivf sink (crash-recovery delete)")
 
-    # simulate the crashed flat-swap: live root renamed aside, stage gone
-    _hadoop_rename(spark, index_path, index_path + ASIDE_SUFFIX)
+    _crash_mid_root_swap(
+        monkeypatch,
+        index_path,
+        lambda: tablecommit.commit_root(
+            spark.read.parquet(index_path), index_path, partition_col="cell"
+        ),
+    )
     assert not os.path.exists(index_path)
     assert delete_indexed_vectors(spark, index_path, [3]) == 1
-    assert os.path.exists(index_path)  # the preamble restored the root
+    assert os.path.exists(index_path)  # the preamble finished the commit
+    assert not os.path.exists(index_path + BUCKET_MARKER_SUFFIX)
     masked = read_streamed_ivf_index(spark, index_path)
     assert 3 not in {r["vec_id"] for r in masked.collect()}
 
