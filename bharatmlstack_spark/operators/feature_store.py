@@ -184,16 +184,6 @@ def table_meta_entry(
     return os.path.join(table_path, TABLE_META_FILE), meta
 
 
-def _table_schema(df: DataFrame) -> T.StructType:
-    """The schema a bucket-partitioned parquet write of ``df`` reads back
-    with: the data columns, then ``key_bucket`` as partition discovery
-    types it (int)."""
-    fields = [f for f in df.schema.fields if f.name != BUCKET_COL]
-    if BUCKET_COL in df.columns:
-        fields.append(T.StructField(BUCKET_COL, T.IntegerType()))
-    return T.StructType(fields)
-
-
 def read_table_meta(spark: SparkSession, table_path: str) -> dict | None:
     import json
 
@@ -407,11 +397,13 @@ class FeatureStore:
         else:
             out = out.dropDuplicates(entity.key_columns)
 
+        from bharatmlstack_spark.stateroot import read, stored_schema
+
         path = self._table_path(entity_label, store_id)
         kb_dirs = self._bucket_dirs(path)
         # the table's schema, from its sidecar (or merged over every
         # bucket for a table written before schemas were stored)
-        probe = self._read(path) if kb_dirs else None
+        probe = read(self.spark, path) if kb_dirs else None
 
         # F9 narrow storage: fp16/fp8 FG columns write as bit-pattern
         # integers (2x/4x denser than FLOAT; ref perm_storage_datablock_v2
@@ -437,7 +429,7 @@ class FeatureStore:
                 .partitionBy(BUCKET_COL)
                 .parquet(path)
             )
-            write_table_meta(self.spark, path, nb, _table_schema(out))
+            write_table_meta(self.spark, path, nb, stored_schema(out, BUCKET_COL))
             return
         # the incoming batch is the small side by contract — the list of
         # touched buckets is <= n_buckets driver-side values
@@ -468,7 +460,7 @@ class FeatureStore:
             path,
             BUCKET_COL,
             touched,
-            table_meta_entry(path, nb, _table_schema(merged)),
+            table_meta_entry(path, nb, stored_schema(merged, BUCKET_COL)),
         )
 
     @staticmethod
@@ -535,27 +527,14 @@ class FeatureStore:
         return joined.select(*cols)
 
     def load(self, entity_label: str, store_id: int = 0) -> DataFrame:
-        """The table, after finishing a commit a crash left pending."""
+        """The table, after finishing a commit a crash left pending, read
+        with the schema its sidecar stores (stateroot.read): no job."""
+        from bharatmlstack_spark.stateroot import read
         from bharatmlstack_spark.tablecommit import BUCKET_MARKER_SUFFIX, finish_commit
 
         path = self._table_path(entity_label, store_id)
         finish_commit(self.spark, path + BUCKET_MARKER_SUFFIX)
-        return self._read(path)
-
-    def _read(self, path: str, *bucket_dirs: str) -> DataFrame:
-        """The table at ``path`` (or only its ``bucket_dirs``), read with the
-        schema its sidecar stores — no schema-inference job, and a column
-        another FeatureStore instance or the streaming sink added is
-        visible. A table whose sidecar has no schema (written before
-        schemas were stored) is inferred, merged over its files."""
-        meta = read_table_meta(self.spark, path) or {}
-        if "schema" in meta:
-            reader = self.spark.read.schema(T.StructType.fromJson(meta["schema"]))
-        else:
-            reader = self.spark.read.option("mergeSchema", "true")
-        if bucket_dirs:
-            return reader.option("basePath", path).parquet(*bucket_dirs)
-        return reader.parquet(path)
+        return read(self.spark, path)
 
     def materialize(
         self,
@@ -578,10 +557,12 @@ class FeatureStore:
         are rewritten, in one bucket commit; a bucket left without rows is
         dropped, and so is the table dir when every row expired (as for
         delete). Returns rows removed."""
+        from bharatmlstack_spark.stateroot import read
+
         now = now if now is not None else F.current_timestamp()
         path = self._table_path(entity_label, store_id)
         kb_dirs = self._bucket_dirs(path)
-        table = self._read(path)
+        table = read(self.spark, path)
         if "expires_at" not in table.columns:
             return 0
         expired = F.col("expires_at").isNotNull() & (F.col("expires_at") <= now)
@@ -601,7 +582,7 @@ class FeatureStore:
             return removed
         from bharatmlstack_spark.tablecommit import commit_buckets
 
-        scoped = self._read(path, *(kb_dirs[b] for b in counts))
+        scoped = read(self.spark, path, *(kb_dirs[b] for b in counts))
         commit_buckets(scoped.filter(~expired), path, BUCKET_COL, counts)
         return removed
 
@@ -625,6 +606,8 @@ class FeatureStore:
         compliance-scale key sets (tens of millions of keys stop being
         broadcastable; AQE then picks a shuffled join over the already-
         bucket-pruned existing side)."""
+        from bharatmlstack_spark.stateroot import read
+
         entity = self.registry.entity(entity_label)
         for k in entity.key_columns:
             if k not in keys.columns:
@@ -642,7 +625,7 @@ class FeatureStore:
         paths = [kb_dirs[b] for b in touched if b in kb_dirs]
         if not paths:
             return 0
-        scoped = self._read(path, *paths)
+        scoped = read(self.spark, path, *paths)
         kside = keys.select(*key_cols).dropDuplicates(key_cols)
         hits = kside.withColumn("__hit", F.lit(1))
         if broadcast_keys:
@@ -692,9 +675,13 @@ class FeatureStore:
         ``broadcast_keys``: the request is request-sized by contract, and
         its keys are collected to the driver here (a local request frame
         costs no Spark job; any other frame costs the jobs of computing
-        it). Each store's scan keeps only the request's buckets and keys
-        (literal IN lists) and broadcasts into a left join with the
-        request — the feature table never shuffles (module docstring).
+        it). A request built with ``spark.createDataFrame(<list of
+        tuples>)`` is RDD-backed, so that collect in ``_request_filters``
+        costs one extra job; build it from a pandas frame (or any other
+        local data) to avoid it. Each store's scan keeps only the
+        request's buckets and keys (literal IN lists) and broadcasts
+        into a left join with the request — the feature table never
+        shuffles (module docstring).
         Pass False when the "request" is itself table-sized (a 100M-key
         backfill): a plain keys LEFT JOIN table, AQE picks the join. Same
         rows either way (tested).

@@ -25,13 +25,20 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from bharatmlstack_spark import stateroot
 from bharatmlstack_spark.operators.event_store import EventStore
-from bharatmlstack_spark.operators.feature_store import FeatureStore, hadoop_path_exists
+from bharatmlstack_spark.operators.feature_store import (
+    TABLE_META_FILE,
+    FeatureStore,
+    hadoop_path_exists,
+    read_table_meta,
+)
 from bharatmlstack_spark.tablecommit import (
     BUCKET_MARKER_SUFFIX,
     commit,
     commit_buckets,
     commit_root,
+    commit_roots,
     finish_commit,
 )
 
@@ -224,46 +231,6 @@ def decode_event_requests(
     return df.select(value_col).mapInPandas(gen, schema)
 
 
-def protobuf_event_source(
-    spark: SparkSession, brokers: str, topic: str, kind: str
-) -> DataFrame:
-    """S5 with the reference's real wire format: Kafka records whose value
-    is a serialized click/order persist request, decoded distributed via
-    :func:`decode_event_requests` (the interaction-store consumer path,
-    time_series.proto + consumer/kafka.go)."""
-    raw = (
-        spark.readStream.format("kafka")
-        .option("kafka.bootstrap.servers", brokers)
-        .option("subscribe", topic)
-        .option("startingOffsets", "earliest")
-        .load()
-    )
-    return decode_event_requests(raw, kind, value_col="value")
-
-
-def protobuf_feature_source(
-    spark: SparkSession,
-    brokers: str,
-    topic: str,
-    registry,
-    entity_label: str,
-    key_types: dict[str, str] | None = None,
-) -> DataFrame:
-    """SS1 with the reference's real wire format: Kafka records whose value
-    is a serialized ``persist.Query`` (what the py-sdk Spark push client
-    produces), decoded distributed via :func:`decode_persist_queries`."""
-    raw = (
-        spark.readStream.format("kafka")
-        .option("kafka.bootstrap.servers", brokers)
-        .option("subscribe", topic)
-        .option("startingOffsets", "earliest")
-        .load()
-    )
-    return decode_persist_queries(
-        raw, registry, entity_label, value_col="value", key_types=key_types
-    )
-
-
 def parse_embedding_payloads(
     df: DataFrame, registry, entity_label: str, value_col: str = "value"
 ) -> DataFrame:
@@ -408,7 +375,9 @@ def stream_event_retention(
     EventStore.merge_trim, so late/out-of-order arrivals re-sort within
     their week (SS4, persist/click.go:165-182). Each batch writes the
     merged state once and swaps it in with tablecommit.commit_root, so a
-    batch killed at any step leaves the old or the new state."""
+    batch killed at any step leaves the old or the new state; the commit
+    records the state's schema, so the next batch reads it without an
+    inference job."""
 
     def _merge(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
@@ -416,7 +385,7 @@ def stream_event_retention(
         # a batch killed mid-swap must not read as a missing state
         finish_commit(spark, state_path + BUCKET_MARKER_SUFFIX)
         if hadoop_path_exists(spark, state_path):
-            existing = spark.read.parquet(state_path)
+            existing = stateroot.read(spark, state_path)
             merged = store.merge_trim(existing, batch_df)
         else:
             merged = store.merge_trim(batch_df)
@@ -442,7 +411,8 @@ def seed_cdc_state(
     is RECORDED in the state's meta sidecar — stream_cdc_sink and
     compact_cdc_state read it from there, so the bucket count is a
     property of the state, not a per-call argument that could silently
-    mismatch (the FeatureStore _effective_n_buckets discipline).
+    mismatch (the FeatureStore _effective_n_buckets discipline) — with
+    the state's read schema (stateroot.read).
 
     An EMPTY snapshot (bootstrapping a table purely from the change
     stream) seeds a flat schema-ful zero-row parquet even in bucketed
@@ -451,60 +421,57 @@ def seed_cdc_state(
     __kb partition values (nothing to prune), and the first real batch
     converts it to the bucket dirs with one root commit that brings the
     sidecar in with them."""
-    from bharatmlstack_spark.operators.feature_store import write_table_meta
-
-    spark = snapshot.sparkSession
     seeded = snapshot.withColumn("__op", F.lit("U")).withColumn(
         "__last_seq", F.lit(None).cast("long")
     )
-    if n_buckets is None:
-        seeded.write.parquet(state_path)
-        return
-    if seeded.isEmpty():
+    col = None
+    if n_buckets is not None and not seeded.isEmpty():
+        col = "__kb"
+        seeded = seeded.withColumn(
+            "__kb",
+            F.pmod(F.xxhash64(*[F.col(c) for c in key_cols]), F.lit(n_buckets)),
+        ).repartition("__kb")
+    elif n_buckets is not None:
         # flat zero-row bootstrap WITHOUT the partition column (its
         # presence as a data column would conflict with the partition
         # dirs the first batch writes); repartition(1) forces one
         # schema-ful part file — a partitionBy write of zero rows would
-        # leave a file-less, unreadable dir
-        seeded.repartition(1).write.parquet(state_path)
-    else:
-        seeded = seeded.withColumn(
-            "__kb",
-            F.pmod(F.xxhash64(*[F.col(c) for c in key_cols]), F.lit(n_buckets)),
-        )
-        seeded.repartition("__kb").write.partitionBy("__kb").parquet(state_path)
-    write_table_meta(spark, state_path, n_buckets)
+        # leave a file-less dir
+        seeded = seeded.repartition(1)
+    (seeded.write.partitionBy(col) if col else seeded.write).parquet(state_path)
+    layout = {} if n_buckets is None else {"n_buckets": n_buckets}
+    schema = stateroot.stored_schema(seeded, col).jsonValue()
+    stateroot.update_meta(
+        snapshot.sparkSession, state_path, lambda m: m.update(layout, schema=schema)
+    )
 
 
 def cdc_state_n_buckets(spark: SparkSession, state_path: str) -> int | None:
     """The state's recorded bucket layout (None = flat)."""
-    from bharatmlstack_spark.operators.feature_store import read_table_meta
-
     meta = read_table_meta(spark, state_path)
     return int(meta["n_buckets"]) if meta and "n_buckets" in meta else None
 
 
-def _resolve_state_layout(
-    spark: SparkSession, state_path: str, state_cols: list[str]
-) -> int | None:
-    """Recorded bucket count, CONSISTENCY-CHECKED against the physical
-    layout. The bootstrap conversion's root commit brings the sidecar in
-    with the '__kb' dirs, so a bucket-partitioned state without one was
-    damaged outside the sink. Treating it as flat would be silently
-    wrong twice over: every later batch would rewrite the FULL state
-    (the O(touched buckets) cost model lost for good) and would write
-    '__kb' as a DATA column conflicting with the partition dirs. Fail
-    loudly — never degrade the layout."""
-    n_buckets = cdc_state_n_buckets(spark, state_path)
-    if n_buckets is not None or "__kb" not in state_cols:
-        return n_buckets
-    raise RuntimeError(
-        f"CDC state {state_path} is bucket-partitioned ('__kb' dirs) but "
-        "has no meta sidecar — refusing to silently flatten the layout. "
-        "Repair: "
-        "write_table_meta(spark, state_path, <the n_buckets the state "
-        "was seeded with>)."
-    )
+def _bind_cdc(spark: SparkSession, state_path: str) -> int | None:
+    """The recorded bucket count, held to the physical layout by
+    stateroot.bind. The bootstrap conversion's root commit brings the
+    sidecar in with the '__kb' dirs, so a bucket-partitioned state
+    without one was damaged outside the sink. Treating it as flat would
+    be silently wrong twice over: every later batch would rewrite the
+    FULL state (the O(touched buckets) cost model lost for good) and
+    would write '__kb' as a DATA column conflicting with the partition
+    dirs. Fail loudly — never degrade the layout. (A bucketed state may
+    still be the flat zero-row bootstrap file, see seed_cdc_state.)"""
+    return stateroot.bind(
+        spark,
+        "CDC state",
+        state_path,
+        {},
+        {"n_buckets": None},
+        hint="Repair: write_table_meta(spark, state_path, <the n_buckets "
+        "the state was seeded with>).",
+        layout=lambda c: {state_path: None if c["n_buckets"] is not None else False},
+    )["n_buckets"]
 
 
 def stream_cdc_sink(
@@ -567,21 +534,14 @@ def stream_cdc_sink(
         return F.pmod(F.xxhash64(*[F.col(c) for c in key_cols]), F.lit(n))
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        from bharatmlstack_spark.operators.feature_store import (
-            hadoop_list_partition_dirs,
-        )
-
         if batch_df.isEmpty():
             return
         finish_commit(spark, state_path + BUCKET_MARKER_SUFFIX)
-        # one driver-side listStatus stands in for reading the root:
-        # physical layout detection AND the pruned read's dir paths —
+        n_buckets = _bind_cdc(spark, state_path)
+        # the pruned read's dir paths from one driver-side listStatus —
         # reading the root + isin(touched) would list every bucket dir
         # per micro-batch (hadoop_list_partition_dirs docstring)
-        kb_dirs = hadoop_list_partition_dirs(spark, state_path, "__kb")
-        n_buckets = _resolve_state_layout(
-            spark, state_path, ["__kb"] if kb_dirs else []
-        )
+        kb_dirs = _list_kb_dirs(spark, state_path)
         # an empty-seeded bucketed state is a flat zero-row bootstrap
         # file without the partition dirs (see seed_cdc_state)
         bootstrap = n_buckets is not None and not kb_dirs
@@ -595,25 +555,16 @@ def stream_cdc_sink(
             # partition pruning: only the touched bucket dirs are read —
             # keys outside them cannot collide with the batch's keys
             # (same hash, same bucket). A touched bucket with no dir yet
-            # simply has no existing rows.
+            # simply has no existing rows: one dir, limit(0), keeps the
+            # schema.
             paths = [kb_dirs[b] for b in touched if b in kb_dirs]
-            if paths:
-                state = (
-                    spark.read.option("basePath", state_path)
-                    .parquet(*paths)
-                    .drop("__kb")
-                )
-            else:
-                # schema-preserving empty existing side
-                any_dir = next(iter(kb_dirs.values()))
-                state = (
-                    spark.read.option("basePath", state_path)
-                    .parquet(any_dir)
-                    .limit(0)
-                    .drop("__kb")
-                )
+            state = stateroot.read(
+                spark, state_path, *(paths or list(kb_dirs.values())[:1])
+            ).drop("__kb")
+            if not paths:
+                state = state.limit(0)
         else:
-            state = spark.read.parquet(state_path)
+            state = stateroot.read(spark, state_path)
         payload = [
             c for c in batch_df.columns if c not in (*key_cols, seq_col, op_col)
         ]
@@ -696,8 +647,8 @@ def compact_cdc_state(
     a file-less state dir is unreadable, and an all-tombstone table
     should be re-seeded, not compacted."""
     finish_commit(spark, state_path + BUCKET_MARKER_SUFFIX)
-    state = spark.read.parquet(state_path)
-    n_buckets = _resolve_state_layout(spark, state_path, state.columns)
+    n_buckets = _bind_cdc(spark, state_path)
+    state = stateroot.read(spark, state_path)
     dead = (F.col("__op") == "D") & (F.col("__last_seq") <= F.lit(watermark_seq))
     if n_buckets is not None and "__kb" in state.columns:
         # one job: per bucket holding dead tombstones, (rows, dead rows)
@@ -737,93 +688,33 @@ def _list_kb_dirs(spark: SparkSession, path: str) -> dict[int, str]:
     return hadoop_list_partition_dirs(spark, path, "__kb")
 
 
-def _neardup_root_layout(spark: SparkSession, path: str) -> str | None:
-    """Physical layout of one append-only near-dup state root: ``None``
-    (absent/empty), ``'flat'`` (data files at top level), ``'bucketed'``
-    (``__kb=`` partition dirs), or ``'mixed'`` — the damage state this
-    probe exists to catch: ``spark.read.parquet`` over a root holding
-    BOTH returns only the partitioned rows, silently dropping every
-    flat-era doc from the band index and shingle store."""
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(jpath):
-        return None
-    has_kb = has_flat = False
-    for st in fs.listStatus(jpath):
-        name = st.getPath().getName()
-        if name.startswith("_") or name.startswith("."):
-            continue  # _SUCCESS, sidecars
-        if st.isDirectory() and name.startswith("__kb="):
-            has_kb = True
-        else:
-            has_flat = True
-    if has_kb and has_flat:
-        return "mixed"
-    return "bucketed" if has_kb else ("flat" if has_flat else None)
-
-
-def _ensure_neardup_root(
-    spark: SparkSession,
-    path: str,
-    kb_expr,
-    want_bucketed: bool,
-    repair_hint: str = "pass the state_buckets the state was created with "
-    "(recorded in the state dir's meta sidecar)",
-) -> None:
-    """Reconcile one near-dup state root with the REQUESTED layout before
-    the first append of a run — appending the other layout into it would
-    be the silent-loss mixed state (see _neardup_root_layout).
-
-    flat root + bucketed requested: MIGRATE (one-time bounded rewrite:
-    the partitioned copy is written once and swapped in by
-    tablecommit.commit_root; a crash leaves the intact original, or a
-    commit the caller's finish_commit completes — never a mixed root).
-    bucketed root + flat requested: raise; degrading is refused the same
-    way _resolve_state_layout refuses for CDC state."""
-    layout = _neardup_root_layout(spark, path)
-    if layout == "mixed":
-        raise RuntimeError(
-            f"near-dup state root {path} holds BOTH flat files and __kb= "
-            "partition dirs — reads would silently drop the flat rows. "
-            "This root predates the layout guard; repair by re-seeding "
-            "the state (replay the topic) or manually folding the flat "
-            "files into the partitioned layout."
-        )
-    if want_bucketed and layout == "flat":
-        flat = spark.read.parquet(path)
-        commit_root(flat.withColumn("__kb", kb_expr(flat)), path, partition_col="__kb")
-    elif not want_bucketed and layout == "bucketed":
-        # the flag that controls each root differs (state_buckets for the
-        # shingle store, bucket_bands for the band index) — the caller
-        # passes the matching repair guidance so the message never points
-        # at the wrong knob
-        raise RuntimeError(
-            f"near-dup state root {path} is bucket-partitioned but this "
-            "run requested the flat layout — flat appends would create "
-            f"the silent-loss mixed root. Repair: {repair_hint}."
-        )
-
-
-def _resolve_neardup_layout(meta: dict | None) -> tuple[int | None, bool]:
-    """The ONE meta-sidecar layout resolution shared by the sink
-    (stream_neardup_minhash_sink._ensure_layout) and
-    compact_neardup_state — writer and compactor MUST agree on the
-    legacy default or the compactor could rewrite a ``__kb=``-partitioned
-    band root flat (destroying the layout the sink then refuses to run
-    against). Returns ``(n_buckets, bands_bucketed)``:
-
-    - no sidecar, or no ``n_buckets`` key (e.g. a flat state whose
-      sidecar holds only maintenance counters): flat everything
-      -> ``(None, False)``;
-    - ``n_buckets`` present, ``bucket_bands`` present: as recorded;
-    - ``n_buckets`` present, ``bucket_bands`` ABSENT: a legacy sidecar
-      from before the hybrid mode, which bucketed BOTH roots
-      -> ``(n_buckets, True)``.
-    """
-    if not meta or meta.get("n_buckets") is None:
-        return None, False
-    return int(meta["n_buckets"]), bool(meta.get("bucket_bands", True))
+def _bind_neardup(
+    spark: SparkSession, state_dir: str, want: dict | None = None
+) -> tuple[int | None, bool]:
+    """(n_buckets, bands bucketed) of a near-dup state, held by
+    stateroot.bind to the contract its sidecar recorded at creation —
+    the one resolution the sink, compactor, fold, probe and rebucket
+    share, so none can rewrite a ``__kb=`` band root flat. ``want``: the
+    sink run's contract (bucket count, band layout, signature params).
+    Pre-contract default: a sidecar recording n_buckets without
+    bucket_bands predates the hybrid layout, which bucketed BOTH roots.
+    The layout changes only through rebucket_neardup_state."""
+    c = stateroot.bind(
+        spark,
+        "near-dup state",
+        state_dir,
+        want or {},
+        {"n_buckets": None, "bucket_bands": True},
+        names={"n_buckets": "state_buckets"},
+        hint="Its layout changes only through rebucket_neardup_state(spark, "
+        "state_dir, new_buckets, bucket_bands=...), which also migrates a "
+        "flat state.",
+        layout=lambda c: {
+            f"{state_dir}/sets": c["n_buckets"] is not None,
+            f"{state_dir}/bands": c["n_buckets"] is not None and c["bucket_bands"],
+        },
+    )
+    return c["n_buckets"], c["n_buckets"] is not None and bool(c["bucket_bands"])
 
 
 def stream_neardup_minhash_sink(
@@ -906,17 +797,18 @@ def stream_neardup_minhash_sink(
     batches or in point-lookup regimes (tests/test_streaming.py pins
     all three layouts pair-identical).
 
-    LAYOUT CONTRACT (enforced before a run's first append; mixing
-    layouts in one root would make ``spark.read.parquet`` silently drop
-    the flat rows): switching a FLAT state to bucketed triggers a
-    one-time staged migration of each to-be-partitioned root; running
-    flat against a BUCKETED state raises (refuse-to-degrade, the
-    _resolve_state_layout stance); the bucket count AND the
-    ``bucket_bands`` flag are recorded in the state dir's meta sidecar
-    on first bucketed write, and a later run passing a DIFFERENT value
-    of either raises — writer and probe derive pmod(·, buckets) with
-    the run's count, so a changed count would prune true candidates
-    against dirs hashed with the old one.
+    LAYOUT CONTRACT (stateroot.bind, before a run's first append): the
+    layout is a value fixed when the state is created. The bucket count
+    (``state_buckets``, None = flat), the ``bucket_bands`` flag and the
+    signature parameters are recorded in the state dir's meta sidecar on
+    the first write, and a later run passing a DIFFERENT value of any of
+    them raises — writer and probe derive pmod(·, buckets) with the
+    run's count, so a changed count would prune true candidates against
+    dirs hashed with the old one, and a flat run would append flat files
+    into a partitioned root (a mixed root, whose reads silently drop
+    the flat rows). The one migration path is the offline
+    ``rebucket_neardup_state``, which also moves a flat state to the
+    bucketed layouts.
 
     Crash/redelivery contract (all three state writes are appends, not
     atomic together): SETS append before BANDS, so every doc the band
@@ -956,24 +848,15 @@ def stream_neardup_minhash_sink(
 
     def _write_state(df: DataFrame, path: str, is_bucketed: bool) -> None:
         if is_bucketed:
-            df.repartition("__kb").write.mode("append").partitionBy("__kb").parquet(path)
+            stateroot.append(df.repartition("__kb"), path, "__kb")
         else:
-            df.write.mode("append").parquet(path)
+            stateroot.append(df, path)
 
     _layout_ok: list[bool] = []  # once per run; the layout can't change under us
 
     def _ensure_layout() -> None:
         if _layout_ok:
             return
-        import json as _json
-        import os as _os
-
-        from bharatmlstack_spark.operators.feature_store import (
-            TABLE_META_FILE,
-            hadoop_write_text_atomic,
-            read_table_meta,
-        )
-
         # adopt a crashed rebucket_neardup_state commit BEFORE reading
         # the sidecar — otherwise this run could validate against (and
         # append under) the pre-rebucket bucket count while the roots
@@ -983,86 +866,22 @@ def stream_neardup_minhash_sink(
         finish_commit(spark, f"{state_dir}/{REBUCKET_MARKER}")
         finish_commit(spark, sets_path + BUCKET_MARKER_SUFFIX)
         finish_commit(spark, bands_path + BUCKET_MARKER_SUFFIX)
-        meta = read_table_meta(spark, state_dir)
-        # shared resolution (legacy pre-hybrid sidecars bucketed both
-        # roots) — compact_neardup_state resolves with the SAME helper
-        recorded, rec_bands = _resolve_neardup_layout(meta)
-        # signature-parameter contract (r11): the band index is only
-        # meaningful under the derivations that built it — a run with a
-        # different num_hashes/bands/shingle_n would append band hashes
-        # from a DIFFERENT signature space into the same root, silently
-        # losing every cross-run pair. Recorded on first write, enforced
-        # ever after (same stance as the bucket-count guard).
-        sig = {"num_hashes": num_hashes, "bands": bands, "shingle_n": shingle_n}
-        if meta:
-            for k, v in sig.items():
-                if k in meta and int(meta[k]) != v:
-                    raise RuntimeError(
-                        f"near-dup state {state_dir} was built with "
-                        f"{k}={meta[k]} but this run passed {v} — bands "
-                        "from different signature parameters never "
-                        "collide, so every cross-run pair would be "
-                        f"silently lost. Pass {k}={meta[k]} (or rebuild "
-                        "the state)."
-                    )
-        if bucketed and recorded is not None and recorded != state_buckets:
-            raise RuntimeError(
-                f"near-dup state {state_dir} was created with "
-                f"state_buckets={recorded} but this run passed "
-                f"{state_buckets} — the probe's pmod pruning would miss "
-                "true candidates against dirs hashed with the old count. "
-                f"Pass state_buckets={recorded}."
-            )
-        if bucketed and recorded is not None and rec_bands != bucket_bands:
-            raise RuntimeError(
-                f"near-dup state {state_dir} was created with "
-                f"bucket_bands={rec_bands} but this run passed "
-                f"{bucket_bands} — the band index's physical layout "
-                f"cannot change under an append-only state. Pass "
-                f"bucket_bands={rec_bands}."
-            )
-        if not bucketed and recorded is not None:
-            raise RuntimeError(
-                f"near-dup state {state_dir} is recorded as bucketed "
-                f"(state_buckets={recorded}) but this run passed None — "
-                f"refusing to degrade the layout. Pass state_buckets={recorded}."
-            )
-        _ensure_neardup_root(
+        # the signature parameters are recorded for EVERY layout (r11):
+        # a run with different num_hashes/bands/shingle_n would append
+        # band hashes from another signature space, silently losing
+        # every cross-run pair, and cross_dedup_against_state derives
+        # its probe from them
+        _bind_neardup(
             spark,
-            bands_path,
-            lambda df: F.pmod(F.col("band_hash"), F.lit(state_buckets)),
-            bands_bucketed,
-            repair_hint="pass bucket_bands=True (this root is the band "
-            "index; its layout is controlled by bucket_bands, not "
-            "state_buckets)",
+            state_dir,
+            {
+                "num_hashes": num_hashes,
+                "bands": bands,
+                "shingle_n": shingle_n,
+                "n_buckets": state_buckets,
+                **({"bucket_bands": bucket_bands} if bucketed else {}),
+            },
         )
-        _ensure_neardup_root(
-            spark,
-            sets_path,
-            lambda df: _set_bucket(F.col("id")),
-            bucketed,
-            repair_hint="pass the state_buckets the state was created "
-            "with (recorded in the state dir's meta sidecar)",
-        )
-        need_sig = meta is None or any(k not in meta for k in sig)
-        if (bucketed and recorded is None) or need_sig:
-            # AFTER both roots reconciled, BEFORE any append: a crash in
-            # between just re-runs this (idempotent) next start.
-            # Merge-write: a flat-era sidecar may already hold maintenance
-            # counters (_update_maintenance_meta) that must survive.
-            # Signature params are recorded for EVERY layout (flat too) —
-            # cross_dedup_against_state derives the probe side from them
-            merged = dict(meta or {})
-            merged.update(sig)
-            if bucketed and recorded is None:
-                merged.update(
-                    {"n_buckets": state_buckets, "bucket_bands": bucket_bands}
-                )
-            hadoop_write_text_atomic(
-                spark,
-                _os.path.join(state_dir, TABLE_META_FILE),
-                _json.dumps(merged),
-            )
         _layout_ok.append(True)
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
@@ -1132,11 +951,9 @@ def stream_neardup_minhash_sink(
                     ]
                     paths = [existing[b] for b in probe_kb if b in existing]
                     if paths:
-                        old = spark.read.option("basePath", bands_path).parquet(
-                            *paths
-                        )
+                        old = stateroot.read(spark, bands_path, *paths)
                 elif have_state:
-                    old = spark.read.parquet(bands_path)
+                    old = stateroot.read(spark, bands_path)
                 if old is not None:
                     cross = (
                         bands_new.alias("n")
@@ -1184,12 +1001,10 @@ def stream_neardup_minhash_sink(
                     existing_sets = _list_kb_dirs(spark, sets_path)
                     paths = [existing_sets[b] for b in need_kb if b in existing_sets]
                     if paths:
-                        stored = spark.read.option("basePath", sets_path).parquet(
-                            *paths
-                        )
+                        stored = stateroot.read(spark, sets_path, *paths)
                         sets_all = sets_all.unionByName(stored.drop("__kb"))
                 elif have_state:
-                    sets_all = sets_all.unionByName(spark.read.parquet(sets_path))
+                    sets_all = sets_all.unionByName(stateroot.read(spark, sets_path))
                 sa = sets_all.select(
                     F.col("id").alias("id_a"), F.col("sh").alias("sh_a")
                 )
@@ -1324,38 +1139,8 @@ def stream_ann_ivf_sink(
     subsequent probe; the same refuse-to-mis-hash stance the near-dup
     sink takes on bucket counts. A fresh state persists the handed
     quantizer, arming the guard for every restart."""
-    from bharatmlstack_spark.operators.feature_store import read_table_meta
-
     _ensure_quantizer_consistent(spark, index_path, ivf)
-    meta0 = read_table_meta(spark, index_path)
-    if meta0 is not None:
-        # mirror of the reverse-direction guard in stream_ann_ivfpq_sink:
-        # an IVF-PQ codes root shares the coarse-quantizer sidecar (so
-        # _ensure_quantizer_consistent passes), but appending
-        # full-precision embedding rows into it would mix schemas under
-        # one root — refuse symmetrically
-        if meta0.get("ivfpq", False):
-            raise RuntimeError(
-                f"index root {index_path} was built by the IVF-PQ codes "
-                "sink ('ivfpq' sidecar flag set) — appending "
-                "full-precision embedding rows would mix schemas under "
-                "one root. Use a fresh root."
-            )
-        # an existing index whose sidecar predates the flag (or was
-        # written by the SemDeDup sink) IS the unversioned case —
-        # default, don't skip: accepting allow_updates=True against it
-        # would mix gen-carrying and gen-less rows, and the mask's
-        # gen < gen_lt predicate evaluates NULL (kept!) for gen-less
-        # rows — replaced embeddings would keep serving forever
-        stored = bool(meta0.get("versioned", False))
-        if stored != bool(allow_updates):
-            raise RuntimeError(
-                f"streamed IVF index {index_path} was built with "
-                f"versioned={stored!r} but this run passed "
-                f"allow_updates={allow_updates!r} — refusing to mix "
-                "gen-carrying and gen-less rows (the update mask would "
-                "silently miss half the index)."
-            )
+    _bind_ivf(spark, index_path, versioned=bool(allow_updates), ivfpq=False)
 
     gen_base = (
         _gen_base_for_checkpoint(spark, index_path, checkpoint_dir)
@@ -1420,7 +1205,6 @@ def stream_ann_ivf_sink(
                 rows_appended=n,
                 extra={
                     "n_cells": int(len(ivf.centroids)),
-                    "versioned": bool(allow_updates),
                     **(
                         {"next_gen_base": gen_val + 1}
                         if allow_updates
@@ -1452,8 +1236,7 @@ def stream_ann_ivf_sink(
                 ]
                 if probe_dirs:
                     rearrived = (
-                        spark.read.option("basePath", reg_root)
-                        .parquet(*probe_dirs)
+                        stateroot.read(spark, reg_root, *probe_dirs)
                         .join(
                             assigned.select(F.col(id_col).alias("id"))
                             .distinct(),
@@ -1475,23 +1258,18 @@ def stream_ann_ivf_sink(
                 # would go stale the moment a refit re-assigns the
                 # corpus, and a staleness-prone column that exists to
                 # "target" folds is exactly how a fold mis-targets
-                (
+                stateroot.append(
                     assigned.select(
                         F.col(id_col).alias("id"),
                         "gen",
                         F.pmod(
                             F.xxhash64(id_col), F.lit(IVF_ID_BUCKETS)
                         ).alias("id_bucket"),
-                    )
-                    .write.mode("append")
-                    .partitionBy("id_bucket")
-                    .parquet(reg_root)
+                    ),
+                    reg_root,
+                    "id_bucket",
                 )
-            (
-                assigned.write.mode("append")
-                .partitionBy("cell")
-                .parquet(index_path)
-            )
+            stateroot.append(assigned, index_path, "cell")
             if auto_maintain:
                 # versioned stream: update-tombstones are steady state —
                 # counter cadence, not per-batch folds (see maintenance_due)
@@ -1572,19 +1350,10 @@ def stream_semantic_dedup_sink(
     from bharatmlstack_spark.functions.vector import cosine_similarity
     from bharatmlstack_spark.operators.feature_store import (
         hadoop_list_partition_dirs,
-        read_table_meta,
     )
 
     _ensure_quantizer_consistent(spark, index_path, ivf)
-    if (read_table_meta(spark, index_path) or {}).get("versioned"):
-        raise RuntimeError(
-            f"streamed index {index_path} is VERSIONED "
-            "(stream_ann_ivf_sink allow_updates=True) — the SemDeDup "
-            "sink appends gen-less rows and probes cell dirs without "
-            "consulting tombstones, so its pairs could name replaced "
-            "generations. Run it against an unversioned index, or fold "
-            "and rebuild."
-        )
+    _bind_ivf(spark, index_path, versioned=False, ivfpq=False)
     id_col, emb_col = ivf.id_col, ivf.emb_col
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
@@ -1610,8 +1379,7 @@ def stream_semantic_dedup_sink(
             paths = [cell_dirs[c] for c in touched if c in cell_dirs]
             if paths:
                 old = (
-                    spark.read.option("basePath", index_path)
-                    .parquet(*paths)
+                    stateroot.read(spark, index_path, *paths)
                     .select(
                         F.col(id_col).alias("id_o"),
                         F.col(emb_col).alias("emb_o"),
@@ -1649,11 +1417,7 @@ def stream_semantic_dedup_sink(
             # crash-safe (a doc's state is self-contained, unlike the
             # near-dup sets/bands dependency) — a crash anywhere simply
             # redelivers the batch, which only duplicates rows
-            (
-                assigned.write.mode("append")
-                .partitionBy("cell")
-                .parquet(index_path)
-            )
+            stateroot.append(assigned, index_path, "cell")
             # shared-state bookkeeping: same sidecar stream_ann_ivf_sink
             # maintains (one index, interchangeable writers); row count
             # is cheap — assigned is persisted
@@ -1682,6 +1446,28 @@ def stream_semantic_dedup_sink(
     return writer.start()
 
 
+def _bind_ivf(spark: SparkSession, index_path: str, **want) -> None:
+    """Hold a streamed IVF index to the row format it was created with
+    (stateroot.bind): ``versioned`` rows carry a gen column the update
+    mask needs — the mask's gen < gen_lt predicate keeps gen-less rows,
+    so mixing them would serve replaced embeddings forever — and
+    ``ivfpq`` rows hold PQ codes instead of embeddings. A sidecar
+    predating either flag (or written by the SemDeDup sink) is the
+    False case. ``want`` also carries the IVF-PQ codebook shape."""
+    stateroot.bind(
+        spark,
+        "streamed IVF index",
+        index_path,
+        want,
+        {"versioned": False, "ivfpq": False},
+        hint="One root holds one row format: full-precision embedding rows "
+        "(gen-carrying when VERSIONED, for stream_ann_ivf_sink "
+        "allow_updates=True; the SemDeDup sink probes cell dirs without "
+        "consulting tombstones, so it needs an unversioned index) or "
+        "IVF-PQ codes. Use a fresh root.",
+    )
+
+
 def read_streamed_ivf_index(
     spark: SparkSession,
     index_path: str,
@@ -1705,7 +1491,7 @@ def read_streamed_ivf_index(
     # adopt a crashed refit first, then a crashed compaction or purge
     finish_commit(spark, index_path + REFIT_MARKER_SUFFIX)
     finish_commit(spark, index_path + BUCKET_MARKER_SUFFIX)
-    df = spark.read.parquet(index_path)
+    df = stateroot.read(spark, index_path)
     tomb = _ivf_tombstones(spark, index_path, id_col)
     if tomb is not None:
         # mask BEFORE the dedup: on a versioned index an id's masked old
@@ -1754,7 +1540,7 @@ def _compact_dedup_state(
         if partition_col is not None
         else {}
     )
-    state = spark.read.parquet(path)
+    state = stateroot.read(spark, path)
     if dirs:
         per_part = _detect_duplicate_partitions(state, dedup_cols, partition_col)
         touched = [r[0] for r in per_part.select(partition_col).collect()]
@@ -1773,15 +1559,14 @@ def _compact_dedup_state(
             return 0, bailed
         # each read lists the dirs afresh: the last one counts the
         # committed rows
-        reader = spark.read.option("basePath", path)
-        before = reader.parquet(*paths).count()
+        before = stateroot.read(spark, path, *paths).count()
         commit_buckets(
-            reader.parquet(*paths).dropDuplicates(dedup_cols),
+            stateroot.read(spark, path, *paths).dropDuplicates(dedup_cols),
             path,
             partition_col,
             [p for p in touched if p in dirs],
         )
-        return before - reader.parquet(*paths).count(), bailed
+        return before - stateroot.read(spark, path, *paths).count(), bailed
     before = state.count()
     keep = state.dropDuplicates(dedup_cols)
     removed = before - keep.count()
@@ -1836,8 +1621,6 @@ def compact_streamed_index(
     # fold pending vector deletions first (also removes the _tombstones
     # dir before any flat-fallback root swap could drop it silently)
     fold_index_tombstones(spark, index_path, id_col)
-    from bharatmlstack_spark.operators.feature_store import read_table_meta
-
     # versioned index: gen rides the dedup keys (post-fold each id has
     # one live gen, but gen-keyed dedup stays conservative if that
     # invariant ever breaks) and the (id, gen) registry compacts too
@@ -1872,15 +1655,13 @@ def compact_neardup_state(spark: SparkSession, state_dir: str) -> dict:
       (id, band_idx) — signatures are deterministic, so copies are
       byte-identical.
 
-    Layout comes from the state's meta sidecar resolved with THE SAME
-    helper the sink uses (_resolve_neardup_layout — in particular the
-    legacy pre-hybrid default: a sidecar recording n_buckets but no
-    bucket_bands key means BOTH roots are bucketed, so the compactor
-    must rewrite the band root partitioned, never flat); partitioned
-    roots rewrite only duplicate-holding dirs (the dedup keys determine
-    their bucket). Returns {"sets_removed": n, "bands_removed": m}."""
-    from bharatmlstack_spark.operators.feature_store import read_table_meta
-
+    Layout comes from the state's meta sidecar through THE SAME bind the
+    sink uses (_bind_neardup — in particular the legacy pre-hybrid
+    default: a sidecar recording n_buckets but no bucket_bands key means
+    BOTH roots are bucketed, so the compactor must rewrite the band root
+    partitioned, never flat); partitioned roots rewrite only
+    duplicate-holding dirs (the dedup keys determine their bucket).
+    Returns {"sets_removed": n, "bands_removed": m}."""
     sets_path = f"{state_dir}/sets"
     bands_path = f"{state_dir}/bands"
     # adopt a crashed rebucket
@@ -1889,9 +1670,7 @@ def compact_neardup_state(spark: SparkSession, state_dir: str) -> dict:
     # post-deletion state, and the sink's pending-tombstone refusal
     # clears through any compaction pass
     fold_neardup_tombstones(spark, state_dir)
-    recorded, bands_bucketed = _resolve_neardup_layout(
-        read_table_meta(spark, state_dir)
-    )
+    recorded, bands_bucketed = _bind_neardup(spark, state_dir)
     bucketed = recorded is not None
     sets_removed, sets_bailed = _compact_dedup_state(
         spark, sets_path, ["id"], "__kb" if bucketed else None
@@ -1910,12 +1689,18 @@ def compact_neardup_state(spark: SparkSession, state_dir: str) -> dict:
     return {"sets_removed": sets_removed, "bands_removed": bands_removed}
 
 
-# tablecommit markers of the reset jobs' staged root swaps: a crash
-# before the marker leaves the intact old state (stages are garbage,
-# cleaned by the next reset run); after it, finish_commit re-runs the
-# adoption idempotently from any reader/writer entry point
+# tablecommit markers of the reset jobs' root commits (commit_roots): a
+# crash before the marker leaves the intact old state (a stage is
+# garbage the next write of it overwrites); after it, finish_commit
+# re-runs the adoption idempotently from any reader/writer entry point
 REBUCKET_MARKER = "__rebucket_commit.json"
 REFIT_MARKER_SUFFIX = "__refit_commit.json"
+
+
+def _dedup_counts(df: DataFrame, cols: list[str]) -> tuple[int, int]:
+    """(rows, rows left by dropDuplicates(cols)) in one job."""
+    row = df.groupBy(*cols).count().agg(F.sum("count"), F.count(F.lit(1))).first()
+    return int(row[0] or 0), int(row[1])
 
 
 def rebucket_neardup_state(
@@ -1933,7 +1718,7 @@ def rebucket_neardup_state(
     count), so a state bucketed for a 10M-doc corpus keeps those buckets
     at 1B docs — per-bucket size, and with it every targeted-dir read,
     grows linearly. This offline migration rewrites BOTH roots under a
-    new count via the staged swap the runtime migration already uses:
+    new count in one root commit:
 
     - sets: ``__kb = pmod(xxhash64(id), new_buckets)`` (the sink's exact
       derivation), rewritten partitioned; dedup on id folded in (rows
@@ -1949,87 +1734,50 @@ def rebucket_neardup_state(
       exactly the refuse-to-mis-hash contract, now pointing at the new
       truth.
 
-    Crash-safe via the tablecommit marker commit (r12): both roots are
-    STAGED first (``<root>__rebucketing``), then a commit marker
-    holding the NEW sidecar is written atomically, then stages are
-    adopted (delete + rename) and the sidecar installed from the
-    marker. Pre-marker crashes leave the old state intact (stages are
-    garbage, cleaned on the next run); post-marker crashes are finished
-    by finish_commit from ANY state entry point — the sink's
-    layout check, the compactor, the cross-dedup probe, or the next
-    rebucket — so roots hashed with new_buckets can never serve probes
-    pruned with the old sidecar count.
+    Crash-safe via tablecommit.commit_roots: both roots are written to
+    their stages first, then ONE commit marker holding the NEW sidecar
+    is written atomically, then the stages are swapped in and the
+    sidecar installed from the marker. A crash before the marker leaves
+    the old state intact; after it, finish_commit finishes the commit
+    from ANY state entry point — the sink's layout check, the
+    compactor, the fold, the cross-dedup probe, or the next rebucket —
+    so roots hashed with new_buckets can never serve probes pruned with
+    the old sidecar count.
 
     A flat state (no sidecar ``n_buckets``) is migrated INTO the
-    bucketed layout — the bulk form of the sink's one-time runtime
-    migration, for when a long-running flat state crosses into the
-    batch ≪ index regime where bucketing wins (SCALE.md's measured
-    rule). Run at reset cadence, offline (not concurrently with the
-    sink — same single-writer assumption as the appends). Returns
-    {"old_buckets", "new_buckets", "sets_rows", "bands_rows",
-    "rows_removed"}."""
-    from bharatmlstack_spark.operators.feature_store import (
-        TABLE_META_FILE,
-        hadoop_delete_path,
-        read_table_meta,
-    )
-
+    bucketed layout — the one migration path between layouts (the sink
+    refuses a run whose layout differs from the recorded one), for when
+    a long-running flat state crosses into the batch ≪ index regime
+    where bucketing wins (SCALE.md's measured rule). Run at reset
+    cadence, offline (not concurrently with the sink — same
+    single-writer assumption as the appends). Returns {"old_buckets",
+    "new_buckets", "sets_rows", "bands_rows", "rows_removed"}."""
     sets_path = f"{state_dir}/sets"
     bands_path = f"{state_dir}/bands"
-    # finish a crashed predecessor's adoption, then clear any orphaned
-    # pre-commit stages (theirs, or a pre-marker crash of our own past)
     finish_commit(spark, f"{state_dir}/{REBUCKET_MARKER}")
     # fold pending deletions: the re-bucketed state and its fresh
     # sidecar row totals must see the shrunk corpus
     fold_neardup_tombstones(spark, state_dir)
-    for orphan in (sets_path + "__rebucketing", bands_path + "__rebucketing"):
-        if hadoop_path_exists(spark, orphan):
-            hadoop_delete_path(spark, orphan)
+    recorded, bands_bucketed = _bind_neardup(spark, state_dir)
     meta = read_table_meta(spark, state_dir) or {}
-    recorded, bands_bucketed = _resolve_neardup_layout(meta)
     if bucket_bands is None:
         bucket_bands = bands_bucketed
-
-    removed = 0
-
-    def _stage(path: str, kb, dedup_cols: list[str]) -> int:
-        """Write the re-bucketed copy to <path>__rebucketing (never
-        touching the live root) and return its row count."""
-        nonlocal removed
-        df = spark.read.parquet(path)
-        if "__kb" in df.columns:
-            df = df.drop("__kb")
-        before = df.count()
-        keep = df.dropDuplicates(dedup_cols)
-        tmp = path + "__rebucketing"
-        (
-            keep.withColumn("__kb", kb(keep))
-            .repartition("__kb")
-            .write.mode("overwrite")
-            .partitionBy("__kb")
-            .parquet(tmp)
-        )
-        n = spark.read.parquet(tmp).count()
-        removed += before - n
-        return n
-
-    sets_rows = _stage(
-        sets_path,
-        lambda df: F.pmod(F.xxhash64(F.col("id")), F.lit(new_buckets)),
-        ["id"],
-    )
+    keys = [(sets_path, F.xxhash64("id"), ["id"])]
     if bucket_bands:
-        bands_rows = _stage(
-            bands_path,
-            lambda df: F.pmod(F.col("band_hash"), F.lit(new_buckets)),
-            ["id", "band_idx"],
-        )
+        keys.append((bands_path, F.col("band_hash"), ["id", "band_idx"]))
+    roots, counts = [], []
+    for path, key, dedup_cols in keys:
+        df = stateroot.read(spark, path).drop("__kb")
+        counts.append(_dedup_counts(df, dedup_cols))
+        keep = df.dropDuplicates(dedup_cols)
+        roots.append((keep.withColumn("__kb", F.pmod(key, F.lit(new_buckets))), path, "__kb"))
+    sets_rows = counts[0][1]
+    if bucket_bands:
+        bands_rows = counts[1][1]
+    elif hadoop_path_exists(spark, bands_path):
+        bands_rows = stateroot.read(spark, bands_path).count()
     else:
-        bands_rows = (
-            spark.read.parquet(bands_path).count()
-            if hadoop_path_exists(spark, bands_path)
-            else 0
-        )
+        bands_rows = 0
     merged = dict(meta)
     merged.update(
         {
@@ -2042,13 +1790,9 @@ def rebucket_neardup_state(
         }
     )
     merged.pop(MAINT_REDELIVERY_KEY, None)
-    # COMMIT POINT: stages complete -> atomic marker carrying the new
-    # sidecar -> adopt (swaps + sidecar install + marker delete)
-    roots = [sets_path, bands_path] if bucket_bands else [sets_path]
-    commit(
-        spark,
+    commit_roots(
         f"{state_dir}/{REBUCKET_MARKER}",
-        [(root + "__rebucketing", root) for root in roots],
+        roots,
         meta=(f"{state_dir}/{TABLE_META_FILE}", merged),
     )
     return {
@@ -2056,7 +1800,7 @@ def rebucket_neardup_state(
         "new_buckets": new_buckets,
         "sets_rows": sets_rows,
         "bands_rows": bands_rows,
-        "rows_removed": removed,
+        "rows_removed": sum(before - after for before, after in counts),
     }
 
 
@@ -2099,7 +1843,6 @@ def cross_dedup_against_state(
         hashed_word_shingles,
         minhash_signatures_from_hashes,
     )
-    from bharatmlstack_spark.operators.feature_store import read_table_meta
 
     sets_path = f"{state_dir}/sets"
     bands_path = f"{state_dir}/bands"
@@ -2120,7 +1863,7 @@ def cross_dedup_against_state(
         int(meta["bands"]),
         int(meta["shingle_n"]),
     )
-    recorded, bands_bucketed = _resolve_neardup_layout(meta)
+    recorded, bands_bucketed = _bind_neardup(spark, state_dir)
     bucketed = recorded is not None
 
     # the empty frame's id types must match the non-empty path's (id_a
@@ -2131,7 +1874,7 @@ def cross_dedup_against_state(
 
     in_id_type = incoming_df.schema[id_col].dataType
     stored_id_type = (
-        spark.read.parquet(sets_path).schema["id"].dataType
+        stateroot.read(spark, sets_path).schema["id"].dataType
         if hadoop_path_exists(spark, sets_path)
         else in_id_type
     )
@@ -2173,13 +1916,9 @@ def cross_dedup_against_state(
         paths = [dirs[b] for b in need if b in dirs]
         if not paths:
             return empty
-        bands_a = (
-            spark.read.option("basePath", bands_path)
-            .parquet(*paths)
-            .drop("__kb")
-        )
+        bands_a = stateroot.read(spark, bands_path, *paths).drop("__kb")
     else:
-        bands_a = spark.read.parquet(bands_path)
+        bands_a = stateroot.read(spark, bands_path)
     # retracted reference docs (delete_neardup_docs) stop flagging
     # deltas immediately, before any fold physically purges them
     tomb = _neardup_tombstones(spark, state_dir)
@@ -2206,12 +1945,12 @@ def cross_dedup_against_state(
         dirs = _list_kb_dirs(spark, sets_path)
         paths = [dirs[b] for b in need_kb if b in dirs]
         stored = (
-            spark.read.option("basePath", sets_path).parquet(*paths).drop("__kb")
+            stateroot.read(spark, sets_path, *paths).drop("__kb")
             if paths
-            else spark.read.parquet(sets_path).limit(0).drop("__kb")
+            else stateroot.read(spark, sets_path).limit(0).drop("__kb")
         )
     else:
-        stored = spark.read.parquet(sets_path)
+        stored = stateroot.read(spark, sets_path)
     a = (
         stored.dropDuplicates(["id"])  # redelivery copies are byte-identical
         .select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a"))
@@ -2282,51 +2021,39 @@ def _update_maintenance_meta(
     from an earlier id, which is exactly the event that accumulates the
     byte-identical duplicate rows the compactors reclaim; accumulate
     ``rows_appended`` when the caller passes the batch's row count (the
-    refit_due policy reads it). Read-modify-write, so layout keys
-    (n_buckets, bucket_bands, n_cells) survive; ATOMIC replace
-    (hadoop_write_text_atomic) — this file carries the layout/signature
-    contract and is rewritten every micro-batch, so an in-place truncate
-    would expose every crash to a torn JSON that bricks the next sink
-    start. Single-writer assumption: same as the sinks' own (one
-    streaming query appends to a state root at a time)."""
-    import json as _json
-    import os as _os
+    refit_due policy reads it). One stateroot.update_meta, so layout
+    keys (n_buckets, bucket_bands, n_cells) survive and a crash never
+    leaves a torn sidecar. ``extra``: layout facts the writing sink
+    knows (e.g. the IVF sinks' fitted n_cells) — consistent by
+    construction: the quantizer guard refuses a sink whose quantizer
+    (hence n_cells) disagrees with the persisted state. Single-writer
+    assumption: same as the sinks' own (one streaming query appends to a
+    state root at a time)."""
 
-    from bharatmlstack_spark.operators.feature_store import (
-        TABLE_META_FILE,
-        hadoop_write_text_atomic,
-        read_table_meta,
-    )
+    def edit(meta: dict) -> None:
+        meta[MAINT_COUNTER_KEY] = int(meta.get(MAINT_COUNTER_KEY, 0)) + 1
+        if batch_id is not None:
+            last = meta.get(MAINT_LAST_BATCH_KEY)
+            if last is not None and int(batch_id) <= int(last):
+                meta[MAINT_REDELIVERY_KEY] = True
+            meta[MAINT_LAST_BATCH_KEY] = max(
+                int(batch_id), int(last) if last is not None else int(batch_id)
+            )
+        if rows_appended:
+            meta[MAINT_ROWS_KEY] = int(meta.get(MAINT_ROWS_KEY, 0)) + int(
+                rows_appended
+            )
+        meta.update(extra or {})
 
-    meta = read_table_meta(spark, root) or {}
-    meta[MAINT_COUNTER_KEY] = int(meta.get(MAINT_COUNTER_KEY, 0)) + 1
-    if batch_id is not None:
-        last = meta.get(MAINT_LAST_BATCH_KEY)
-        if last is not None and int(batch_id) <= int(last):
-            meta[MAINT_REDELIVERY_KEY] = True
-        meta[MAINT_LAST_BATCH_KEY] = max(
-            int(batch_id), int(last) if last is not None else int(batch_id)
-        )
-    if rows_appended:
-        meta[MAINT_ROWS_KEY] = int(meta.get(MAINT_ROWS_KEY, 0)) + int(
-            rows_appended
-        )
-    if extra:
-        # layout facts the writing sink knows (e.g. the IVF sinks'
-        # fitted n_cells) — consistent by construction: the quantizer
-        # guard refuses a sink whose quantizer (hence n_cells) disagrees
-        # with the persisted state
-        meta.update(extra)
-    hadoop_write_text_atomic(
-        spark, _os.path.join(root, TABLE_META_FILE), _json.dumps(meta)
-    )
+    stateroot.update_meta(spark, root, edit)
 
 
 def _reset_maintenance_meta(
     spark: SparkSession, root: str, clear_redelivery: bool = True
 ) -> None:
     """After a successful compaction/refit: zero the batch counter and
-    clear the redelivery flag (layout keys untouched).
+    clear the redelivery flag (layout keys untouched; a root without a
+    sidecar gets none).
 
     ``clear_redelivery=False`` preserves the known-duplicates signal for
     a compaction pass that could NOT reclaim (the _compact_dedup_state
@@ -2334,53 +2061,32 @@ def _reset_maintenance_meta(
     maintenance_due then stays true, honestly reporting that duplicates
     persist; each subsequent maybe_* call re-pays only the thin detect
     scan."""
-    import json as _json
-    import os as _os
 
-    from bharatmlstack_spark.operators.feature_store import (
-        TABLE_META_FILE,
-        hadoop_write_text_atomic,
-        read_table_meta,
-    )
+    def edit(meta: dict) -> bool | None:
+        if not meta:
+            return False
+        meta[MAINT_COUNTER_KEY] = 0
+        if clear_redelivery:
+            meta.pop(MAINT_REDELIVERY_KEY, None)
 
-    meta = read_table_meta(spark, root)
-    if meta is None:
-        return
-    meta[MAINT_COUNTER_KEY] = 0
-    if clear_redelivery:
-        meta.pop(MAINT_REDELIVERY_KEY, None)
-    hadoop_write_text_atomic(
-        spark, _os.path.join(root, TABLE_META_FILE), _json.dumps(meta)
-    )
+    stateroot.update_meta(spark, root, edit)
 
 
 def _set_meta_flag(spark: SparkSession, root: str, key: str, value) -> None:
-    """Read-modify-write ONE sidecar key (atomic replace, layout keys
-    survive) — _update_maintenance_meta without the batch-counter bump,
-    for event flags set outside the sinks' per-batch loop (the delete
-    surfaces). ``value=None`` clears the key; clearing an absent key
-    skips the rewrite."""
-    import json as _json
-    import os as _os
+    """Set ONE sidecar key — _update_maintenance_meta without the
+    batch-counter bump, for event flags set outside the sinks' per-batch
+    loop (the delete surfaces). ``value=None`` clears the key; clearing
+    an absent key skips the rewrite."""
 
-    from bharatmlstack_spark.operators.feature_store import (
-        TABLE_META_FILE,
-        hadoop_write_text_atomic,
-        read_table_meta,
-    )
+    def edit(meta: dict) -> bool | None:
+        if value is not None:
+            meta[key] = value
+        elif key in meta:
+            del meta[key]
+        else:
+            return False
 
-    meta = read_table_meta(spark, root)
-    if meta is None:
-        meta = {}
-    if value is None:
-        if key not in meta:
-            return
-        meta.pop(key)
-    else:
-        meta[key] = value
-    hadoop_write_text_atomic(
-        spark, _os.path.join(root, TABLE_META_FILE), _json.dumps(meta)
-    )
+    stateroot.update_meta(spark, root, edit)
 
 
 def maintenance_due(
@@ -2419,8 +2125,6 @@ def maintenance_due(
     update tombstones), and right-to-be-forgotten waves should fold at
     the next maintenance opportunity, not after N quiet batches. The
     folds clear the flag with the tombstone table."""
-    from bharatmlstack_spark.operators.feature_store import read_table_meta
-
     meta = read_table_meta(spark, root) or {}
     if meta.get(MAINT_REDELIVERY_KEY):
         return True
@@ -2477,13 +2181,16 @@ def save_streamed_index_quantizer(
     _write_quantizer(spark, index_path + QUANTIZER_DIR_SUFFIX, ivf)
 
 
-def _write_quantizer(spark: SparkSession, out_dir: str, ivf) -> None:
+def _quantizer_frame(spark: SparkSession, ivf) -> DataFrame:
     rows = [
         (int(c), [float(x) for x in cent])
         for c, cent in enumerate(ivf.centroids)
     ]
-    df = spark.createDataFrame(rows, "cell int, centroid array<double>")
-    df.coalesce(1).write.mode("overwrite").parquet(out_dir)
+    return spark.createDataFrame(rows, "cell int, centroid array<double>").coalesce(1)
+
+
+def _write_quantizer(spark: SparkSession, out_dir: str, ivf) -> None:
+    _quantizer_frame(spark, ivf).write.mode("overwrite").parquet(out_dir)
 
 
 def load_streamed_index_quantizer(
@@ -2501,7 +2208,7 @@ def load_streamed_index_quantizer(
     # adopt a crashed refit first
     finish_commit(spark, index_path + REFIT_MARKER_SUFFIX)
     rows = (
-        spark.read.parquet(index_path + QUANTIZER_DIR_SUFFIX)
+        stateroot.read(spark, index_path + QUANTIZER_DIR_SUFFIX)
         .orderBy("cell")
         .collect()
     )
@@ -2570,7 +2277,7 @@ def _read_codebooks(spark: SparkSession, in_dir: str):
     import numpy as np
 
     rows = (
-        spark.read.parquet(in_dir).orderBy("subspace", "code").collect()
+        stateroot.read(spark, in_dir).orderBy("subspace", "code").collect()
     )
     m = max(r["subspace"] for r in rows) + 1
     k = max(r["code"] for r in rows) + 1
@@ -2697,16 +2404,14 @@ def stream_ann_ivfpq_sink(
     re-rank). Reference anchor: skye realtime indexer
     (skye/internal/consumers/handler/indexer/) serving KNN at
     compressed storage (qdrant.go:351-412)."""
-    from bharatmlstack_spark.operators.feature_store import read_table_meta
-
     _ensure_ivfpq_quantizer_consistent(spark, index_path, ivfpq)
-    meta0 = read_table_meta(spark, index_path)
-    if meta0 is not None and not meta0.get("ivfpq", False):
-        raise RuntimeError(
-            f"index root {index_path} was built by a full-precision IVF "
-            "sink (no 'ivfpq' sidecar flag) — appending tinyint-code "
-            "rows would mix schemas under one root. Use a fresh root."
-        )
+    _bind_ivf(
+        spark,
+        index_path,
+        ivfpq=True,
+        pq_m=int(ivfpq.m),
+        pq_k=int(ivfpq.k),
+    )
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
         assigned = ivfpq.index(batch_df).persist()
@@ -2719,18 +2424,9 @@ def stream_ann_ivfpq_sink(
                 index_path,
                 batch_id,
                 rows_appended=n,
-                extra={
-                    "n_cells": int(len(ivfpq.ivf.centroids)),
-                    "ivfpq": True,
-                    "pq_m": int(ivfpq.m),
-                    "pq_k": int(ivfpq.k),
-                },
+                extra={"n_cells": int(len(ivfpq.ivf.centroids))},
             )
-            (
-                assigned.write.mode("append")
-                .partitionBy("cell")
-                .parquet(index_path)
-            )
+            stateroot.append(assigned, index_path, "cell")
             if auto_maintain:
                 maybe_compact_streamed_index(
                     spark,
@@ -2800,8 +2496,6 @@ def refit_due(
     over the argument. False when the sidecar lacks the counters (no
     sink has run, or a pre-r12 state) — the caller then has no basis to
     refit from metadata alone."""
-    from bharatmlstack_spark.operators.feature_store import read_table_meta
-
     # adopt a crashed refit first
     finish_commit(spark, index_path + REFIT_MARKER_SUFFIX)
     meta = read_table_meta(spark, index_path) or {}
@@ -2829,8 +2523,6 @@ def rebucket_due(
     population isn't the scaling axis there; the regime rule in
     SCALE.md decides the flat->bucketed migration instead) or when no
     sink has recorded counters yet."""
-    from bharatmlstack_spark.operators.feature_store import read_table_meta
-
     # adopt a crashed rebucket
     finish_commit(spark, f"{state_dir}/{REBUCKET_MARKER}")
     meta = read_table_meta(spark, state_dir) or {}
@@ -2866,8 +2558,6 @@ def maybe_refit_streamed_index(
     a due-at-16 decision could execute a refit at the 10_000 default,
     collapsing the index to min_cells and silently rewriting the
     operator's configured layout target."""
-    from bharatmlstack_spark.operators.feature_store import read_table_meta
-
     meta = read_table_meta(spark, index_path) or {}
     resolved = int(meta.get("target_cell_rows", target_cell_rows))
     if not refit_due(spark, index_path, resolved, factor):
@@ -2893,8 +2583,6 @@ def maybe_rebucket_neardup_state(
     layout guard enforces it), or None when not due. OFFLINE ONLY, same
     single-writer caveat as maybe_refit_streamed_index."""
     import math as _math
-
-    from bharatmlstack_spark.operators.feature_store import read_table_meta
 
     if not rebucket_due(spark, state_dir, target_bucket_rows, factor):
         return None
@@ -2938,17 +2626,16 @@ def refit_streamed_index(
     3. re-fit the coarse quantizer on the accumulated vectors
        (IvfIndex.fit — deterministic hash-ordered sample, ≤ sample_size
        driver rows) and re-assign every vector (one Arrow GEMM pass);
-    4. marker commit (tablecommit.commit):
-       stage the re-assigned state at ``<index>__refitting`` with the
-       fresh meta sidecar INSIDE it (n_cells + target_cell_rows + reset
-       maintenance counters — it rides the rename), stage the NEW
-       quantizer at ``<index>__quantizer__refitting``, then write the
-       atomic commit marker and adopt both stages via delete + rename.
-       A crash before the marker leaves the live root + quantizer
-       untouched; after it, finish_commit finishes the adoption
-       from any entry point (sinks, readers, compactor, next refit) —
-       the index and its quantizer can never go live separately, which
-       is what made a restarted sink silently mis-route probes.
+    4. one tablecommit.commit_roots of the re-assigned state and the
+       NEW quantizer (``<index>__quantizer``) under the refit marker,
+       the fresh sidecar (n_cells + target_cell_rows + reset
+       maintenance counters) riding in the index's stage and installed
+       from the marker. A crash before the marker leaves the live root
+       + quantizer untouched; after it, finish_commit finishes the
+       adoption from any entry point (sinks, readers, compactor, next
+       refit) — the index and its quantizer can never go live
+       separately, which is what made a restarted sink silently
+       mis-route probes.
 
     Search/dedup equivalence (pytest-pinned): assignments change, but
     identical vectors still share a cell under ANY quantizer, so exact-
@@ -2960,66 +2647,43 @@ def refit_streamed_index(
     one (_ensure_quantizer_consistent), so the mis-route is a loud
     error, never a silent probe miss. Returns {"ivf", "n",
     "rows_removed", "n_cells_before", "n_cells_after"}."""
-    import json as _json
     import math as _math
-    import os as _os
 
     from bharatmlstack_spark.operators.feature_store import (
-        TABLE_META_FILE,
-        hadoop_delete_path,
         hadoop_list_partition_dirs,
-        hadoop_write_text_atomic,
     )
     from bharatmlstack_spark.operators.lsh import IvfIndex
 
-    # finish a crashed predecessor's adoption, then clear orphaned
-    # pre-commit stages
     finish_commit(spark, index_path + REFIT_MARKER_SUFFIX)
-    tmp = index_path + "__refitting"
-    qtmp = index_path + QUANTIZER_DIR_SUFFIX + "__refitting"
-    for orphan in (tmp, qtmp):
-        if hadoop_path_exists(spark, orphan):
-            hadoop_delete_path(spark, orphan)
     if not hadoop_path_exists(spark, index_path):
         raise FileNotFoundError(
             f"refit_streamed_index: no index at {index_path} — nothing "
             "accumulated yet (run a sink first); refusing to fabricate "
             "an empty state"
         )
-    from bharatmlstack_spark.operators.feature_store import read_table_meta
-
     old_meta = read_table_meta(spark, index_path) or {}
     # fold pending vector deletions: the refit sample, the re-assignment,
     # and the fresh sidecar row totals must all see the shrunk corpus
-    # (the staged-root swap would also silently drop the _tombstones dir)
+    # (the root commit would also silently drop the _tombstones dir)
     fold_index_tombstones(spark, index_path, id_col)
     n_cells_before = len(hadoop_list_partition_dirs(spark, index_path, "cell"))
-    raw = spark.read.parquet(index_path)
-    total = raw.count()
     # versioned index: gen rides through the re-assignment (the fold
     # above left one live gen per id; dropping the column would make
     # every post-refit row invisible to later update masks)
     gen = ["gen"] if old_meta.get("versioned") else []
-    acc = raw.select(id_col, emb_col, *gen).dropDuplicates([id_col])
-    n = acc.count()
+    raw = stateroot.read(spark, index_path).select(id_col, emb_col, *gen)
+    total, n = _dedup_counts(raw, [id_col])
+    acc = raw.dropDuplicates([id_col])
     n_cells = max(min_cells, _math.ceil(n / target_cell_rows))
     ivf = IvfIndex(n_cells=n_cells, id_col=id_col, emb_col=emb_col).fit(
         acc, sample_size=sample_size, iters=iters
     )
-    (
-        ivf.index(acc)
-        .repartition("cell")
-        .write.mode("overwrite")
-        .partitionBy("cell")
-        .parquet(tmp)
-    )
-    # the fresh sidecar rides INSIDE the index stage (underscore files
-    # are invisible to parquet discovery): counters zeroed (the refit
-    # subsumed the compaction), fitted cell count + target_cell_rows +
-    # post-dedup row count recorded for the next refit_due decision.
-    # MERGE over the prior meta (the rebucket's discipline) — dropping
-    # last_batch_id would blind redelivery detection for a stream later
-    # restarted from an older checkpoint
+    # the fresh sidecar: counters zeroed (the refit subsumed the
+    # compaction), fitted cell count + target_cell_rows + post-dedup
+    # row count recorded for the next refit_due decision. MERGE over the
+    # prior meta (the rebucket's discipline) — dropping last_batch_id
+    # would blind redelivery detection for a stream later restarted from
+    # an older checkpoint
     merged = dict(old_meta)
     merged.update(
         {
@@ -3030,18 +2694,13 @@ def refit_streamed_index(
         }
     )
     merged.pop(MAINT_REDELIVERY_KEY, None)  # the refit reclaimed them
-    hadoop_write_text_atomic(
-        spark,
-        _os.path.join(tmp, TABLE_META_FILE),
-        _json.dumps(merged),
-    )
-    _write_quantizer(spark, qtmp, ivf)
-    # COMMIT POINT: both stages complete -> atomic marker -> adopt
-    # index + quantizer together (aside-rename each, marker dropped)
-    commit(
-        spark,
+    commit_roots(
         index_path + REFIT_MARKER_SUFFIX,
-        [(tmp, index_path), (qtmp, index_path + QUANTIZER_DIR_SUFFIX)],
+        [
+            (ivf.index(acc), index_path, "cell"),
+            (_quantizer_frame(spark, ivf), index_path + QUANTIZER_DIR_SUFFIX, None),
+        ],
+        meta=(f"{index_path}/{TABLE_META_FILE}", merged),
     )
     return {
         "ivf": ivf,
@@ -3492,22 +3151,14 @@ def stream_postings_sink(
     build from a different tokenizer era) is REFUSED against the sidecar
     — appending postings hashed under a different modulus would scatter
     a term across buckets and silently halve every subsequent search's
-    recall; the refuse-to-mis-hash stance of the near-dup sink.
+    recall; the refuse-to-mis-hash stance of the near-dup sink
+    (stateroot.bind records the signature on the first start).
 
     100 TB shape: postings rows ~ token count — the index IS big, but a
     query touches |terms| buckets (~|terms|/n_buckets of it), the
     term-bucket dirs shard the write across executors, and hot stopword
     terms cost reads only when queried. Size n_buckets so a bucket's
     postings fit a scan budget (SCALE.md)."""
-    import json as _json
-    import os as _os
-
-    from bharatmlstack_spark.operators.feature_store import (
-        TABLE_META_FILE,
-        hadoop_write_text_atomic,
-        read_table_meta,
-    )
-
     sig = {
         "n_buckets": int(n_buckets),
         "tokenizer": POSTINGS_TOKENIZER,
@@ -3522,32 +3173,19 @@ def stream_postings_sink(
         # would leave half the index unmaskable — same refusal
         "versioned": bool(allow_updates),
     }
-    # adopt a crashed rebucket
+    # adopt a crashed rebucket, then hold the index to its signature;
+    # indexes built before a boolean-flag contract existed have no key
+    # and ARE the False case
     finish_commit(spark, f"{index_path}/{POSTINGS_REBUCKET_MARKER}")
-    meta = read_table_meta(spark, index_path)
-    if meta is not None and "n_buckets" in meta:
-        for key, want in sig.items():
-            # indexes built before a boolean-flag contract existed have
-            # no key and ARE the False case — default, don't skip
-            got = meta.get(
-                key, False if key in ("positions", "versioned") else None
-            )
-            if got is not None and got != want:
-                raise RuntimeError(
-                    f"postings index {index_path} was built with "
-                    f"{key}={got!r} but this run passed {key}={want!r} — "
-                    "refusing to append mis-hashed postings. Pass the "
-                    "recorded value (meta sidecar) or build a new root."
-                )
-    else:
-        # fresh root (or pre-contract sidecar): record the signature
-        # BEFORE the first append — a crash in between re-runs this
-        # idempotently on the next start
-        merged = dict(meta or {})
-        merged.update(sig)
-        hadoop_write_text_atomic(
-            spark, _os.path.join(index_path, TABLE_META_FILE), _json.dumps(merged)
-        )
+    stateroot.bind(
+        spark,
+        "postings index",
+        index_path,
+        sig,
+        {"positions": False, "versioned": False},
+        hint="Pass the recorded value (meta sidecar) or build a new root; "
+        "rebucket_postings_index changes n_buckets.",
+    )
 
     toks = _postings_tokens(text_col)
     gen_base = (
@@ -3607,11 +3245,7 @@ def stream_postings_sink(
             # pre-bump sidecar snapshot + ONE batch aggregate off the
             # persisted base: feeds the versioned dup-id guard AND the
             # post-append stats rollforward (_roll_postings_stats)
-            from bharatmlstack_spark.operators.feature_store import (
-                read_table_meta as _read_meta,
-            )
-
-            pre_meta = _read_meta(spark, index_path) or {}
+            pre_meta = read_table_meta(spark, index_path) or {}
             bstats = base.agg(
                 F.count(F.lit(1)).alias("n"),
                 F.countDistinct("id").alias("n_ids"),
@@ -3651,11 +3285,7 @@ def stream_postings_sink(
                 index_path,
                 batch_id,
                 rows_appended=n,
-                extra=(
-                    {**sig, "next_gen_base": gen_val + 1}
-                    if allow_updates
-                    else sig
-                ),
+                extra={"next_gen_base": gen_val + 1} if allow_updates else None,
             )
             dead_docs = dead_dl = 0
             if allow_updates:
@@ -3683,8 +3313,7 @@ def stream_postings_sink(
                     # persisted ONCE: feeds the tombstone wave AND the
                     # stats rollforward's replaced-generation aggregate
                     probe_rows = (
-                        spark.read.option("basePath", dl_root)
-                        .parquet(*probe_dirs)
+                        stateroot.read(spark, dl_root, *probe_dirs)
                         .join(base.select("id").distinct(), "id", "left_semi")
                         .filter(F.col("gen") < F.lit(gen_val))
                         .persist()
@@ -3715,23 +3344,19 @@ def stream_postings_sink(
                         dead_dl = int(drow["s"] or 0)
                     finally:
                         probe_rows.unpersist()
-            (
-                postings.select(*cols)
-                .write.mode("append")
-                .partitionBy("term_bucket")
-                .parquet(f"{index_path}/{POSTINGS_DIR}")
+            stateroot.append(
+                postings.select(*cols), f"{index_path}/{POSTINGS_DIR}", "term_bucket"
             )
-            (
+            stateroot.append(
                 base.select(
                     "id",
                     F.size("__w").alias("dl"),
                     *([F.lit(gen_val).cast("long").alias("gen")]
                       if allow_updates else []),
                     F.pmod(F.xxhash64("id"), F.lit(n_buckets)).alias("id_bucket"),
-                )
-                .write.mode("append")
-                .partitionBy("id_bucket")
-                .parquet(f"{index_path}/{DOCLEN_DIR}")
+                ),
+                f"{index_path}/{DOCLEN_DIR}",
+                "id_bucket",
             )
             # stats rollforward AFTER the appends (its stamp ordering
             # contract): keeps the searches' cached (n_docs, sum_dl)
@@ -3811,7 +3436,6 @@ def bm25_search_streamed(
     time. ``dedup=True`` drops at-least-once redelivery copies in-plan;
     after compact_streamed_postings readers may pass dedup=False and
     skip both dedup shuffles (the measured trade in SCALE.md)."""
-    from bharatmlstack_spark.operators.feature_store import read_table_meta
     from bharatmlstack_spark.query_registry import defer_unpersist
 
     # adopt a crashed rebucket
@@ -3849,7 +3473,7 @@ def bm25_search_streamed(
             f"`{out_id}` {_postings_id_type(spark, index_path)}, "
             "score double, rank int",
         )
-    pruned = spark.read.option("basePath", post_root).parquet(*dirs)
+    pruned = stateroot.read(spark, post_root, *dirs)
     tf = pruned.filter(F.col("term").isin(terms)).select(
         "term", "id", "tf", "dl", *gen_cols
     )
@@ -3899,7 +3523,7 @@ def bm25_search_streamed(
             F.lit(float(sum_dl) / float(n_docs)).alias("__avgdl"),
         )
     else:
-        dl_tbl = spark.read.parquet(f"{index_path}/{DOCLEN_DIR}").select(
+        dl_tbl = stateroot.read(spark, f"{index_path}/{DOCLEN_DIR}").select(
             "id", "dl", *gen_cols
         )
         if dedup:
@@ -3935,8 +3559,6 @@ def compact_streamed_postings(spark: SparkSession, index_path: str) -> dict:
     provably fresh (zero appends since; the sink's per-batch counter is
     the staleness witness). A bailed pass DROPS the cache: doclen still
     holds duplicates the stats must not double-count."""
-    from bharatmlstack_spark.operators.feature_store import read_table_meta
-
     # adopt a crashed rebucket
     finish_commit(spark, f"{index_path}/{POSTINGS_REBUCKET_MARKER}")
     # fold pending deletions first: the dedup rewrite and the stats
@@ -3985,45 +3607,38 @@ def _cache_postings_stats(
     skips it. Exactness: Spark's avg over longs is sum-as-long / count
     in double arithmetic, which is precisely ``sum_dl / n_docs`` here —
     the cached path is bit-identical to the scan it replaces."""
-    import json as _json
-    import os as _os
 
-    from bharatmlstack_spark.operators.feature_store import (
-        TABLE_META_FILE,
-        hadoop_write_text_atomic,
-        read_table_meta,
-    )
-
-    meta = read_table_meta(spark, index_path)
-    if meta is None:
-        return
-    if not valid:
-        if "n_docs" not in meta and "sum_dl" not in meta:
-            return
-        meta.pop("n_docs", None)
-        meta.pop("sum_dl", None)
-        meta.pop("stats_counter", None)
-    else:
+    def edit(meta: dict) -> bool | None:
+        if not meta:
+            return False
+        if not valid:
+            if "n_docs" not in meta and "sum_dl" not in meta:
+                return False
+            for key in ("n_docs", "sum_dl", "stats_counter"):
+                meta.pop(key, None)
+            return None
         doclen_path = f"{index_path}/{DOCLEN_DIR}"
         if not hadoop_path_exists(spark, doclen_path):
-            return
+            return False
         row = (
-            spark.read.parquet(doclen_path)
+            stateroot.read(spark, doclen_path)
             .agg(F.count(F.lit(1)).alias("n"), F.sum("dl").alias("s"))
             .collect()[0]
         )
         if not row["n"]:
-            return
-        meta["n_docs"] = int(row["n"])
-        meta["sum_dl"] = int(row["s"])
+            return False
         # the batch counter AT WHICH these stats are accurate: searches
         # trust the cache iff stats_counter == the live counter, so a
         # later append (counter bump) invalidates automatically unless
         # the sink's per-batch rollforward re-stamps it
-        meta["stats_counter"] = int(meta.get(MAINT_COUNTER_KEY, 0))
-    hadoop_write_text_atomic(
-        spark, _os.path.join(index_path, TABLE_META_FILE), _json.dumps(meta)
-    )
+        meta.update(
+            n_docs=int(row["n"]),
+            sum_dl=int(row["s"]),
+            stats_counter=int(meta.get(MAINT_COUNTER_KEY, 0)),
+        )
+        return None
+
+    stateroot.update_meta(spark, index_path, edit)
 
 
 def _roll_postings_stats(
@@ -4064,15 +3679,6 @@ def _roll_postings_stats(
     Crash safety is the stamp ordering: the counter bump lands BEFORE
     the appends (meta-first), this stamp lands AFTER them — a crash
     anywhere between leaves stats_counter < counter and searches scan."""
-    import json as _json
-    import os as _os
-
-    from bharatmlstack_spark.operators.feature_store import (
-        TABLE_META_FILE,
-        hadoop_write_text_atomic,
-        read_table_meta,
-    )
-
     last = pre.get(MAINT_LAST_BATCH_KEY)
     fresh_root = last is None
     monotonic = fresh_root or int(batch_id) > int(last)
@@ -4090,12 +3696,14 @@ def _roll_postings_stats(
     sum_dl = old_dl + int(add_dl) - int(dead_dl)
     if n_docs <= 0 or sum_dl < 0:
         return  # arithmetic went impossible — leave the scan path
-    meta = read_table_meta(spark, index_path) or {}
-    meta["n_docs"] = int(n_docs)
-    meta["sum_dl"] = int(sum_dl)
-    meta["stats_counter"] = int(meta.get(MAINT_COUNTER_KEY, 0))
-    hadoop_write_text_atomic(
-        spark, _os.path.join(index_path, TABLE_META_FILE), _json.dumps(meta)
+    stateroot.update_meta(
+        spark,
+        index_path,
+        lambda m: m.update(
+            n_docs=int(n_docs),
+            sum_dl=int(sum_dl),
+            stats_counter=int(m.get(MAINT_COUNTER_KEY, 0)),
+        ),
     )
 
 
@@ -4139,64 +3747,37 @@ def rebucket_postings_index(
       start-time guard raises — refuse-to-mis-hash, pointing at the new
       truth.
 
-    Crash-safe via the marker commit: both subroots are STAGED first
-    (``<sub>__rebucketing`` with _SUCCESS required), then an atomic
-    marker carrying the new sidecar is the commit point, then stages
-    are adopted and the marker dropped — pre-marker crashes leave the
-    old index intact, post-marker crashes are finished by
-    finish_commit from any entry point. OFFLINE ONLY (the
-    sinks' single-writer assumption). Returns {"old_buckets",
-    "new_buckets", "postings_rows", "doclen_rows", "rows_removed"}."""
-    from bharatmlstack_spark.operators.feature_store import (
-        TABLE_META_FILE,
-        hadoop_delete_path,
-        read_table_meta,
-    )
-
+    Crash-safe via tablecommit.commit_roots: both subroots are written
+    to their stages first, then ONE atomic marker carrying the new
+    sidecar is the commit point, then the stages are adopted and the
+    marker dropped — pre-marker crashes leave the old index intact,
+    post-marker crashes are finished by finish_commit from any entry
+    point. OFFLINE ONLY (the sinks' single-writer assumption). Returns
+    {"old_buckets", "new_buckets", "postings_rows", "doclen_rows",
+    "rows_removed"}."""
     # adopt a crashed run
     finish_commit(spark, f"{index_path}/{POSTINGS_REBUCKET_MARKER}")
     # fold pending deletions first: the rewrite below recomputes the
     # sidecar row totals and stats from the surviving corpus
     fold_postings_tombstones(spark, index_path)
-    for sub in (POSTINGS_DIR, DOCLEN_DIR):
-        orphan = f"{index_path}/{sub}__rebucketing"
-        if hadoop_path_exists(spark, orphan):
-            hadoop_delete_path(spark, orphan)
     meta = read_table_meta(spark, index_path) or {}
-    old_buckets = meta.get("n_buckets")
-
-    removed = 0
-
-    def _stage(sub: str, bucket_col: str, key, dedup_cols: list[str]) -> int:
-        nonlocal removed
-        df = spark.read.parquet(f"{index_path}/{sub}")
-        if bucket_col in df.columns:
-            df = df.drop(bucket_col)
-        before = df.count()
-        keep = df.dropDuplicates(dedup_cols)
-        tmp = f"{index_path}/{sub}__rebucketing"
-        (
-            keep.withColumn(bucket_col, F.pmod(key, F.lit(new_buckets)))
-            .repartition(bucket_col)
-            .write.mode("overwrite")
-            .partitionBy(bucket_col)
-            .parquet(tmp)
-        )
-        n = spark.read.parquet(tmp).count()
-        removed += before - n
-        return n
-
     # versioned index: gen rides the dedup keys (same rationale as
     # compact_streamed_postings — conservative if the one-live-gen
     # post-fold invariant ever breaks) and the gen column rides the
     # rewrite untouched
     gen = ["gen"] if meta.get("versioned") else []
-    postings_rows = _stage(
-        POSTINGS_DIR, "term_bucket", F.xxhash64("term"), ["term", "id", *gen]
-    )
-    doclen_rows = _stage(
-        DOCLEN_DIR, "id_bucket", F.xxhash64("id"), ["id", *gen]
-    )
+    roots, counts = [], []
+    for sub, col, key, dedup_cols in (
+        (POSTINGS_DIR, "term_bucket", "term", ["term", "id", *gen]),
+        (DOCLEN_DIR, "id_bucket", "id", ["id", *gen]),
+    ):
+        path = f"{index_path}/{sub}"
+        df = stateroot.read(spark, path).drop(col)
+        counts.append(_dedup_counts(df, dedup_cols))
+        keep = df.dropDuplicates(dedup_cols)
+        bucket = F.pmod(F.xxhash64(key), F.lit(new_buckets))
+        roots.append((keep.withColumn(col, bucket), path, col))
+    (_, postings_rows), (_, doclen_rows) = counts
     merged = dict(meta)
     merged.update(
         {
@@ -4214,13 +3795,9 @@ def rebucket_postings_index(
     # the success path recomputes right after adoption
     merged.pop("n_docs", None)
     merged.pop("sum_dl", None)
-    commit(
-        spark,
+    commit_roots(
         f"{index_path}/{POSTINGS_REBUCKET_MARKER}",
-        [
-            (f"{index_path}/{sub}__rebucketing", f"{index_path}/{sub}")
-            for sub in (POSTINGS_DIR, DOCLEN_DIR)
-        ],
+        roots,
         meta=(f"{index_path}/{TABLE_META_FILE}", merged),
     )
     # the rewrite just deduped doclen: roll the corpus stats forward so
@@ -4228,11 +3805,11 @@ def rebucket_postings_index(
     # _cache_postings_stats)
     _cache_postings_stats(spark, index_path, valid=True)
     return {
-        "old_buckets": old_buckets,
+        "old_buckets": meta.get("n_buckets"),
         "new_buckets": int(new_buckets),
         "postings_rows": postings_rows,
         "doclen_rows": doclen_rows,
-        "rows_removed": removed,
+        "rows_removed": sum(before - after for before, after in counts),
     }
 
 
@@ -4248,8 +3825,6 @@ def rebucket_postings_due(
     ``n_buckets x target_bucket_rows`` by ``factor``. One sidecar read;
     the default target is postings ROWS per bucket (thin rows), not
     docs."""
-    from bharatmlstack_spark.operators.feature_store import read_table_meta
-
     # adopt a crashed run
     finish_commit(spark, f"{index_path}/{POSTINGS_REBUCKET_MARKER}")
     meta = read_table_meta(spark, index_path) or {}
@@ -4272,8 +3847,6 @@ def maybe_rebucket_postings_index(
     same single-writer caveat as the other reset-job maybe_* forms.
     Returns the rebucket stats, or None when the index still fits."""
     import math as _math
-
-    from bharatmlstack_spark.operators.feature_store import read_table_meta
 
     if not rebucket_postings_due(spark, index_path, target_bucket_rows, factor):
         return None
@@ -4316,8 +3889,6 @@ def delete_postings_docs(
     tombstone is live stays masked, and the next fold purges the new
     rows too — the anti-join can't date rows. Fold first, or version
     the id; the sink's single-arrival contract's deletion corollary."""
-    from bharatmlstack_spark.operators.feature_store import read_table_meta
-
     finish_commit(spark, f"{index_path}/{POSTINGS_REBUCKET_MARKER}")
     meta = read_table_meta(spark, index_path) or {}
     if "n_buckets" not in meta:
@@ -4330,7 +3901,7 @@ def delete_postings_docs(
     # (xxhash64 is type-sensitive); a doclen-less root has nothing to
     # delete and the earlier sidecar guard already refused a non-index
     id_type = (
-        spark.read.parquet(f"{index_path}/{DOCLEN_DIR}").schema["id"].dataType
+        stateroot.read(spark, f"{index_path}/{DOCLEN_DIR}").schema["id"].dataType
     )
     # drop the cache BEFORE the tombstone lands: a crash in between
     # leaves a cache-less (scan-path) index with no tombstones — the
@@ -4387,22 +3958,14 @@ def _gen_base_for_checkpoint(
     checkpoint per versioned state — resuming an abandoned older
     checkpoint after a newer one has appended would re-issue its
     retired epoch and collide."""
-    import json as _json
-    import os as _os
-
-    from bharatmlstack_spark.operators.feature_store import (
-        hadoop_read_text,
-        hadoop_write_text_atomic,
-        read_table_meta,
-    )
-
-    marker = _os.path.join(checkpoint_dir, GEN_BASE_MARKER)
-    txt = hadoop_read_text(spark, marker)
-    if txt is not None:
-        return int(_json.loads(txt)["base"])
     base = int((read_table_meta(spark, state_root) or {}).get("next_gen_base", 0))
-    hadoop_write_text_atomic(spark, marker, _json.dumps({"base": base}))
-    return base
+    pinned = stateroot.update_meta(
+        spark,
+        checkpoint_dir,
+        lambda m: "base" not in m and m.update(base=base),
+        name=GEN_BASE_MARKER,
+    )
+    return int(pinned["base"])
 
 
 def _postings_tombstones(spark: SparkSession, index_path: str) -> DataFrame | None:
@@ -4456,12 +4019,11 @@ def fold_postings_tombstones(spark: SparkSession, index_path: str) -> dict:
     scan). The tombstone table is removed LAST, so the searches'
     anti-join mask survives every crash point.
     Returns {"tombstones", "postings_removed", "doclen_removed"}."""
-    from bharatmlstack_spark.operators.feature_store import (
-        hadoop_delete_path,
-        read_table_meta,
-    )
+    from bharatmlstack_spark.operators.feature_store import hadoop_delete_path
     from bharatmlstack_spark.query_registry import defer_unpersist
 
+    # a pending rebucket commit owns the subroots' stages
+    finish_commit(spark, f"{index_path}/{POSTINGS_REBUCKET_MARKER}")
     t = _postings_tombstones(spark, index_path)
     if t is None or t.isEmpty():
         # a crash between a prior fold's tombstone-dir delete and its
@@ -4501,11 +4063,11 @@ def fold_postings_tombstones(spark: SparkSession, index_path: str) -> dict:
 # the IVF index root is one cell-partitioned parquet table, so its
 # tombstones live in an underscore-prefixed subdir — Spark's file
 # discovery skips _-prefixed paths, keeping them invisible to
-# spark.read.parquet(index_path) while staying directly readable
+# a read of index_path while staying directly readable
 IVF_TOMBSTONES_DIR = "_tombstones"
 # versioned IVF (allow_updates): the (id, gen) registry lives BESIDE the
 # root (sibling path — outside the root's discovery AND outside the
-# refit/compaction staged-root swaps, which rename the root itself);
+# refit/compaction root commits, which rename the root itself);
 # id-bucketed so the sink's re-arrival probe reads O(batch) dirs
 IVF_IDS_SUFFIX = "__ids"
 IVF_ID_BUCKETS = 64
@@ -4545,9 +4107,7 @@ def delete_indexed_vectors(
             "to record a deletion a search would never see (check the "
             "path; a sink run creates the index)."
         )
-    id_type = spark.read.parquet(index_path).schema[id_col].dataType
-    from bharatmlstack_spark.operators.feature_store import read_table_meta
-
+    id_type = stateroot.read(spark, index_path).schema[id_col].dataType
     # versioned index: a delete is gen_lt = GEN_MAX (all generations
     # dead, terminal until folded — the postings family's stance), and
     # it keeps the tombstone table's schema UNIFORM: mixing one- and
@@ -4608,6 +4168,8 @@ def fold_index_tombstones(
     from bharatmlstack_spark.operators.feature_store import hadoop_delete_path
     from bharatmlstack_spark.query_registry import defer_unpersist
 
+    # a pending refit commit owns the root's stage
+    finish_commit(spark, index_path + REFIT_MARKER_SUFFIX)
     t = _ivf_tombstones(spark, index_path, id_col)
     if t is None or t.isEmpty():
         # see fold_postings_tombstones: clear a flag orphaned by a crash
@@ -4707,7 +4269,7 @@ def _purge_tombstoned_rows(
     if not hadoop_path_exists(spark, root):
         return 0
     if bucket_col is None:
-        df = spark.read.parquet(root)
+        df = stateroot.read(spark, root)
         before = df.count()
         keep = defer_unpersist(_anti(df).persist())
         n_after = keep.count()
@@ -4722,7 +4284,7 @@ def _purge_tombstoned_rows(
     if touched is None:
         touched = [
             r[0]
-            for r in _semi(spark.read.parquet(root))
+            for r in _semi(stateroot.read(spark, root))
             .select(bucket_col)
             .distinct()
             .collect()
@@ -4730,7 +4292,7 @@ def _purge_tombstoned_rows(
     targeted = {b: dirs[b] for b in touched if b in dirs}
     if not targeted:
         return 0
-    scoped = spark.read.option("basePath", root).parquet(*targeted.values())
+    scoped = stateroot.read(spark, root, *targeted.values())
     before = scoped.count()
     keep = defer_unpersist(_anti(scoped).persist())
     n_after = keep.count()
@@ -4764,6 +4326,7 @@ def delete_neardup_docs(spark: SparkSession, state_dir: str, doc_ids) -> int:
     is live stays masked and the next fold purges the new rows too —
     fold first, or version the id (see delete_postings_docs)."""
     sets_path = f"{state_dir}/sets"
+    finish_commit(spark, f"{state_dir}/{REBUCKET_MARKER}")
     finish_commit(spark, sets_path + BUCKET_MARKER_SUFFIX)
     if not hadoop_path_exists(spark, sets_path):
         raise RuntimeError(
@@ -4771,7 +4334,7 @@ def delete_neardup_docs(spark: SparkSession, state_dir: str, doc_ids) -> int:
             "record a deletion no probe would ever see (check the path; "
             "a sink run creates the state)."
         )
-    id_type = spark.read.parquet(sets_path).schema["id"].dataType
+    id_type = stateroot.read(spark, sets_path).schema["id"].dataType
     return _append_tombstones(
         spark, f"{state_dir}/{NEARDUP_TOMBSTONES_DIR}", doc_ids, id_type
     )
@@ -4787,22 +4350,19 @@ def fold_neardup_tombstones(spark: SparkSession, state_dir: str) -> dict:
     sink's pmod(xxhash64(id)) — no scan); band dirs are hashed by
     band_hash, so those take the one thin detection scan. The tombstone
     table is removed LAST (the cross-probe mask survives every crash
-    point); flat roots take the staged-swap rewrite
+    point); flat roots take the root-commit rewrite
     (_purge_tombstoned_rows)."""
-    from bharatmlstack_spark.operators.feature_store import (
-        hadoop_delete_path,
-        read_table_meta,
-    )
+    from bharatmlstack_spark.operators.feature_store import hadoop_delete_path
     from bharatmlstack_spark.query_registry import defer_unpersist
 
+    # a pending rebucket commit owns the roots' stages
+    finish_commit(spark, f"{state_dir}/{REBUCKET_MARKER}")
     t = _neardup_tombstones(spark, state_dir)
     if t is None or t.isEmpty():
         return {"tombstones": 0, "sets_removed": 0, "bands_removed": 0}
     t = defer_unpersist(F.broadcast(t).persist())
     n_t = t.count()
-    recorded, bands_bucketed = _resolve_neardup_layout(
-        read_table_meta(spark, state_dir)
-    )
+    recorded, bands_bucketed = _bind_neardup(spark, state_dir)
     sets_touched = None
     if recorded is not None:
         sets_touched = [
@@ -4899,7 +4459,7 @@ def _append_tombstones(
                 "index's id type. Both would produce a tombstone no "
                 "search or fold can ever match; refusing."
             )
-        frame.write.mode("append").parquet(path)
+        stateroot.append(frame, path)
     finally:
         frame.unpersist()
     return n
@@ -4914,7 +4474,7 @@ def _postings_id_type(spark: SparkSession, index_path: str) -> str:
     repo's document ids are bigint throughout."""
     if hadoop_path_exists(spark, f"{index_path}/{DOCLEN_DIR}"):
         return (
-            spark.read.parquet(f"{index_path}/{DOCLEN_DIR}")
+            stateroot.read(spark, f"{index_path}/{DOCLEN_DIR}")
             .schema["id"]
             .dataType.simpleString()
         )
@@ -4931,7 +4491,7 @@ def _read_tombstones(spark: SparkSession, path: str) -> DataFrame | None:
     # all-column dedup, not id-only: a versioned table legitimately
     # holds several (id, gen_lt) rows for one id — the reader's max
     # aggregation (not an arbitrary drop) picks the winner
-    return spark.read.parquet(path).dropDuplicates()
+    return stateroot.read(spark, path).dropDuplicates()
 
 
 def phrase_search_streamed(
@@ -4960,8 +4520,6 @@ def phrase_search_streamed(
     Redelivery copies dedup on (term, id) like every reader here;
     tombstoned docs are anti-joined out."""
     from functools import reduce
-
-    from bharatmlstack_spark.operators.feature_store import read_table_meta
 
     # adopt a crashed rebucket
     finish_commit(spark, f"{index_path}/{POSTINGS_REBUCKET_MARKER}")
@@ -5002,8 +4560,7 @@ def phrase_search_streamed(
             "n_occurrences long",
         )
     pruned = (
-        spark.read.option("basePath", post_root)
-        .parquet(*dirs)
+        stateroot.read(spark, post_root, *dirs)
         .filter(F.col("term").isin(list(set(terms))))
         .select("term", "id", "positions", *gen_cols)
     )
@@ -5260,6 +4817,24 @@ def _resolve_merge_forest(merges: DataFrame) -> DataFrame:
     )
 
 
+def _bind_clusters(
+    spark: SparkSession, state_dir: str, want: dict | None = None
+) -> int | None:
+    """The cluster state's recorded bucket count, held by stateroot.bind
+    to the contract recorded at creation (``want``: the sink run's)."""
+    return stateroot.bind(
+        spark,
+        "cluster state",
+        state_dir,
+        want or {},
+        {"n_buckets": None},
+        names={"n_buckets": "state_buckets"},
+        hint="A cluster state's layout is fixed at creation: re-seed it "
+        "(replay the pair topic into a fresh state_dir) to change it.",
+        layout=lambda c: {f"{state_dir}/labels": c["n_buckets"] is not None},
+    )["n_buckets"]
+
+
 def stream_cluster_sink(
     pairs_stream: DataFrame,
     state_dir: str,
@@ -5344,15 +4919,13 @@ def stream_cluster_sink(
     joined against the broadcast-resolved merge forest. The naive
     alternative — re-running connected_components over all accumulated
     pairs each batch — is O(corpus x diameter) per batch.
-    """
-    import json as _json
-    import os as _os
 
-    from bharatmlstack_spark.operators.feature_store import (
-        TABLE_META_FILE,
-        hadoop_write_text_atomic,
-        read_table_meta,
-    )
+    Layout contract (stateroot.bind, before a run's first append): the
+    bucket count (``state_buckets``, None = flat) is recorded when the
+    state is created and a run passing another one raises; a state's
+    layout never changes — re-seed it (replay the pair topic into a
+    fresh ``state_dir``) to change it.
+    """
     from bharatmlstack_spark.operators.graph import connected_components
 
     labels_path = f"{state_dir}/labels"
@@ -5369,40 +4942,7 @@ def stream_cluster_sink(
         if _layout_ok:
             return
         finish_commit(spark, labels_path + BUCKET_MARKER_SUFFIX)  # crashed compaction
-        meta = read_table_meta(spark, state_dir)
-        recorded = (
-            int(meta["n_buckets"])
-            if meta and meta.get("n_buckets") is not None
-            else None
-        )
-        if bucketed and recorded is not None and recorded != state_buckets:
-            raise RuntimeError(
-                f"cluster state {state_dir} was created with "
-                f"state_buckets={recorded} but this run passed "
-                f"{state_buckets} — the probe's pmod pruning would miss "
-                f"stored labels hashed with the old count. Pass "
-                f"state_buckets={recorded}."
-            )
-        if not bucketed and recorded is not None:
-            raise RuntimeError(
-                f"cluster state {state_dir} is recorded as bucketed "
-                f"(state_buckets={recorded}) but this run passed None — "
-                f"refusing to degrade the layout. Pass state_buckets={recorded}."
-            )
-        _ensure_neardup_root(
-            spark,
-            labels_path,
-            lambda df: _kb(F.col("node")),
-            bucketed,
-        )
-        if bucketed and recorded is None:
-            merged = dict(meta or {})
-            merged["n_buckets"] = state_buckets
-            hadoop_write_text_atomic(
-                spark,
-                _os.path.join(state_dir, TABLE_META_FILE),
-                _json.dumps(merged),
-            )
+        _bind_clusters(spark, state_dir, {"n_buckets": state_buckets})
         _layout_ok.append(True)
 
     def _probe_stored(endpoints: DataFrame):
@@ -5423,9 +4963,9 @@ def stream_cluster_sink(
             paths = [existing[b] for b in need_kb if b in existing]
             if not paths:
                 return None
-            lab = spark.read.option("basePath", labels_path).parquet(*paths)
+            lab = stateroot.read(spark, labels_path, *paths)
         else:
-            lab = spark.read.parquet(labels_path)
+            lab = stateroot.read(spark, labels_path)
         return lab.join(F.broadcast(endpoints), on="node", how="left_semi").select(
             "node", "label"
         )
@@ -5434,10 +4974,10 @@ def stream_cluster_sink(
         if bucketed:
             out = new_labels.withColumn("__kb", _kb(F.col("node")))
             out = out.coalesce(1) if small else out.repartition("__kb")
-            out.write.mode("append").partitionBy("__kb").parquet(labels_path)
+            stateroot.append(out, labels_path, "__kb")
         else:
             out = new_labels.coalesce(1) if small else new_labels
-            out.write.mode("append").parquet(labels_path)
+            stateroot.append(out, labels_path)
 
     def _apply_driver(pairs: DataFrame, stored_lab, merges_df) -> None:
         """Micro-batch tier: the batch graph, the touched stored labels,
@@ -5497,9 +5037,10 @@ def stream_cluster_sink(
         # merges BEFORE labels (docstring step 4)
         new_merges = [(r0, find(r0)) for r0 in sorted(roots_set) if find(r0) < r0]
         if new_merges:
-            spark.createDataFrame(new_merges, "child long, parent long").coalesce(
-                1
-            ).write.mode("append").parquet(merges_path)
+            stateroot.append(
+                spark.createDataFrame(new_merges, "child long, parent long").coalesce(1),
+                merges_path,
+            )
         new_nodes = sorted({x for p in plist for x in p} - stored_nodes)
         if new_nodes:
             _append_labels(
@@ -5555,7 +5096,7 @@ def stream_cluster_sink(
                 # gate keeps a merge-free state's read path resolve-free
                 # (no merges/ dir at all)
                 if not new_merges.isEmpty():
-                    new_merges.write.mode("append").parquet(merges_path)
+                    stateroot.append(new_merges, merges_path)
                 new_nodes = endpoints.join(
                     stored_res.select("node"), on="node", how="left_anti"
                 )
@@ -5593,7 +5134,7 @@ def stream_cluster_sink(
             try:
                 stored_lab = _probe_stored(endpoints)
                 merges_df = (
-                    spark.read.parquet(merges_path)
+                    stateroot.read(spark, merges_path)
                     if hadoop_path_exists(spark, merges_path)
                     else None
                 )
@@ -5655,9 +5196,9 @@ def read_cluster_state(spark: SparkSession, state_dir: str) -> DataFrame:
     labels_path = f"{state_dir}/labels"
     merges_path = f"{state_dir}/merges"
     finish_commit(spark, labels_path + BUCKET_MARKER_SUFFIX)
-    labels = spark.read.parquet(labels_path).select("node", "label")
+    labels = stateroot.read(spark, labels_path).select("node", "label")
     if hadoop_path_exists(spark, merges_path):
-        merges = spark.read.parquet(merges_path)
+        merges = stateroot.read(spark, merges_path)
         res = _resolve_merge_forest(merges)
         labels = labels.join(
             _maybe_broadcast_forest(res, merges.count()),
@@ -5683,24 +5224,18 @@ def compact_cluster_state(spark: SparkSession, state_dir: str) -> dict:
     appear as any stored label — every resolve join misses, reads stay
     correct, and the next compaction clears the log. The reverse order
     would leave STALE labels with NO log: silently split clusters."""
-    from bharatmlstack_spark.operators.feature_store import (
-        hadoop_delete_path,
-        read_table_meta,
-    )
+    from bharatmlstack_spark.operators.feature_store import hadoop_delete_path
 
     labels_path = f"{state_dir}/labels"
     merges_path = f"{state_dir}/merges"
     finish_commit(spark, labels_path + BUCKET_MARKER_SUFFIX)
-    meta = read_table_meta(spark, state_dir)
-    recorded = (
-        int(meta["n_buckets"]) if meta and meta.get("n_buckets") is not None else None
-    )
+    recorded = _bind_clusters(spark, state_dir)
     if not hadoop_path_exists(spark, merges_path):
         return {"labels_rewritten": 0, "merges_cleared": 0}
-    merges = spark.read.parquet(merges_path)
+    merges = stateroot.read(spark, merges_path)
     n_merges = merges.count()
     res = _resolve_merge_forest(merges)
-    labels = spark.read.parquet(labels_path).select("node", "label")
+    labels = stateroot.read(spark, labels_path).select("node", "label")
     canonical = (
         labels.join(
             _maybe_broadcast_forest(res, n_merges),
@@ -5718,6 +5253,6 @@ def compact_cluster_state(spark: SparkSession, state_dir: str) -> dict:
     commit_root(
         canonical, labels_path, partition_col="__kb" if recorded is not None else None
     )
-    n_labels = spark.read.parquet(labels_path).count()
+    n_labels = stateroot.read(spark, labels_path).count()
     hadoop_delete_path(spark, merges_path)
     return {"labels_rewritten": n_labels, "merges_cleared": n_merges}

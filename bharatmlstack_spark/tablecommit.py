@@ -14,11 +14,10 @@ et al., VLDB 2020):
   point may call. It is idempotent, and costs one FS existence check
   when no marker exists.
 
-A stage is either a whole root (``sets__root_stage`` or
-``sets__rebucketing`` for ``sets``) or a partition dir
-(``key_bucket=3``) inside a stage root. A swap moves the live dir
-ASIDE, renames the stage over its place, then drops the aside, so a
-complete copy of every dir exists at every instant. A root's aside
+A stage is either a whole root (``sets__root_stage`` for ``sets``) or
+a partition dir (``key_bucket=3``) inside a stage root. A swap moves
+the live dir ASIDE, renames the stage over its place, then drops the
+aside, so a complete copy of every dir exists at every instant. A root's aside
 is ``<root>__replaced``; a partition dir's aside sits in
 ``<root>__bucket_aside``, because a ``key_bucket=3__replaced`` dir inside
 a live root breaks every read of it (an invalid partition value, or the
@@ -30,13 +29,15 @@ purges) go through ``commit_buckets``: the touched buckets' new rows
 are written once, to ``<root>__bucket_stage``, then swapped in; the
 touched buckets left without rows are dropped. The whole-root rewrites
 (event retention, the flat CDC state and its bucket conversion, the
-near-dup layout migration, the flat compactions and purges, the cluster
-labels) go through ``commit_root``: the new root is written once, to
+flat compactions and purges, the cluster labels) go through
+``commit_root``: the new root is written once, to
 ``<root>__root_stage``, then swapped in. A rewrite that leaves no rows
 commits with the root in ``drops``. Both kinds share the per-root
 marker ``<root>__bucket_commit.json``, so one
 ``finish_commit(spark, root + BUCKET_MARKER_SUFFIX)`` at an entry point
-finishes either.
+finishes either. The reset jobs (near-dup and postings rebucket, IVF
+refit) rewrite several roots and their family sidecar in ONE commit
+through ``commit_roots``, under the job's own marker.
 """
 
 from __future__ import annotations
@@ -46,10 +47,12 @@ import json
 from pyspark.sql import DataFrame, SparkSession
 
 from bharatmlstack_spark.operators.feature_store import (
+    TABLE_META_FILE,
     hadoop_list_partition_dirs,
     hadoop_path_exists,
     hadoop_read_text,
     hadoop_write_text_atomic,
+    read_table_meta,
 )
 
 ASIDE_SUFFIX = "__replaced"
@@ -224,28 +227,46 @@ def commit_buckets(
     )
 
 
+def commit_roots(
+    marker: str,
+    roots: list[tuple[DataFrame, str, str | None]],
+    meta: tuple[str, dict] | None = None,
+) -> None:
+    """Replace each ``root`` with the rows of its ``df`` (as
+    ``partition_col=`` dirs when given): one write per root, to
+    ``<root>__root_stage``, then ONE commit under ``marker`` that swaps
+    every stage in and installs ``meta``. Each stage carries the root's
+    sidecar — its current one (or ``meta``, when that lies in the root)
+    with the new rows' read schema — so the rename brings it in with
+    the data, and a reader never infers the schema."""
+    from bharatmlstack_spark.stateroot import stored_schema
+
+    spark = roots[0][0].sparkSession
+    swaps = []
+    for df, root, col in roots:
+        # a commit left pending on this root would adopt our stage
+        finish_commit(spark, root + BUCKET_MARKER_SUFFIX)
+        stage = root + ROOT_STAGE_SUFFIX
+        writer = df.repartition(col).write.partitionBy(col) if col else df.write
+        writer.mode("overwrite").parquet(stage)  # also clears a pre-commit crash's stage
+        path = f"{root}/{TABLE_META_FILE}"
+        own = meta is not None and meta[0] == path
+        sidecar = dict(meta[1]) if own else read_table_meta(spark, root) or {}
+        sidecar["schema"] = stored_schema(df, col).jsonValue()
+        hadoop_write_text_atomic(
+            spark, f"{stage}/{TABLE_META_FILE}", json.dumps(sidecar)
+        )
+        if own:
+            meta = (path, sidecar)
+        swaps.append((stage, root))
+    commit(spark, marker, swaps, meta=meta)
+
+
 def commit_root(
     df: DataFrame,
     root: str,
     meta: tuple[str, dict] | None = None,
     partition_col: str | None = None,
 ) -> None:
-    """Replace the whole of ``root`` with the rows of ``df``: one write,
-    to ``<root>__root_stage`` (``partition_col=`` dirs when given), then
-    one commit that swaps the stage in, under the marker commit_buckets
-    uses. A ``meta`` sidecar inside ``root`` is also written into the
-    stage, so the rename brings it in with the data: a reader never sees
-    the new dirs without it."""
-    spark = df.sparkSession
-    stage = root + ROOT_STAGE_SUFFIX
-    writer = (
-        df.repartition(partition_col).write.partitionBy(partition_col)
-        if partition_col is not None
-        else df.write
-    )
-    writer.mode("overwrite").parquet(stage)  # also clears a pre-commit crash's stage
-    if meta is not None and meta[0].startswith(root + "/"):
-        hadoop_write_text_atomic(
-            spark, stage + meta[0][len(root):], json.dumps(meta[1])
-        )
-    commit(spark, root + BUCKET_MARKER_SUFFIX, [(stage, root)], meta=meta)
+    """commit_roots for one root, under its bucket-commit marker."""
+    commit_roots(root + BUCKET_MARKER_SUFFIX, [(df, root, partition_col)], meta)

@@ -187,10 +187,12 @@ def test_bucket_writes_job_counts(spark, tmp_path):
 def test_flat_state_batches_write_once(spark, tmp_path):
     """A stream_event_retention batch into an existing state and a flat
     stream_cdc_sink batch write the new state once and swap it in by one
-    root commit: 4 and 10 jobs, with no job reading a stage back
+    root commit: 3 and 9 jobs, with no job reading a stage back
     (writing a stage, reading it back and overwriting the root took 6
-    and 12). Each root holds the files of one write, and no stage or
-    aside dir is left beside it."""
+    and 12) and none inferring the state's schema, which the commit and
+    the seed record in the state's sidecar (that job made 4 and 10).
+    Each root holds the files of one write, and no stage or aside dir
+    is left beside it."""
     import os
     from datetime import datetime
 
@@ -229,7 +231,7 @@ def test_flat_state_batches_write_once(spark, tmp_path):
         return [(1, datetime(2024, 1, 1, h), h, 1.0) for h in hours]
 
     batch(retention, ev_schema, events(range(4)), "ev0")
-    assert batch(retention, ev_schema, events([5, 6]), "ev1") == 4
+    assert batch(retention, ev_schema, events([5, 6]), "ev1") == 3
     assert os.listdir(tmp_path / "ev") == ["state"]
     assert len(files(ev_state)) == 1
 
@@ -248,10 +250,59 @@ def test_flat_state_batches_write_once(spark, tmp_path):
         )
 
     changes = [(1, 5, "U", 111), (2, 6, "D", None), (9, 7, "U", 999)]
-    assert batch(cdc, cdc_schema, changes, "cdc1") == 10
+    assert batch(cdc, cdc_schema, changes, "cdc1") == 9
     assert os.listdir(tmp_path / "cdc") == ["state"]
     assert files(cdc_state) and not set(files(cdc_state)) & set(seeded)
     assert spark.read.parquet(cdc_state).count() == 5
+
+
+def test_appending_sink_batches_infer_no_schema(spark, tmp_path):
+    """A non-first batch of the bucketed near-dup sink (the hybrid
+    default) and of the postings sink: 18 and 9 jobs. The near-dup batch
+    reads its flat band index and the candidates' shingle-set dirs with
+    the schemas those roots record on their first append (each read
+    inferred its schema in one more job: 20)."""
+    from bharatmlstack_spark.streaming.ingest import (
+        await_stream,
+        stream_neardup_minhash_sink,
+        stream_postings_sink,
+    )
+
+    st = spark.sparkContext.statusTracker()
+    schema = "doc_id long, text string"
+    base = "the quick brown fox jumps over the lazy dog near the river"
+    batches = [
+        [(1, base), (4, "completely different words about spark and parquet")],
+        [(2, base), (3, base + " today")],
+    ]
+
+    def last_batch_jobs(name, start):
+        """Jobs of the second of two micro-batches under one checkpoint."""
+        topic, ck = str(tmp_path / name / "topic"), str(tmp_path / name / "ck")
+        for rows in batches:
+            spark.createDataFrame(rows, schema).coalesce(1).write.mode(
+                "append"
+            ).parquet(topic)
+            q = start(spark.readStream.schema(schema).parquet(topic), ck)
+            await_stream(q, 120, name)
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(st.getJobIdsForGroup(str(q.runId)))
+
+    neardup = last_batch_jobs(
+        "nd",
+        lambda s, ck: stream_neardup_minhash_sink(
+            s, str(tmp_path / "nd" / "state"), str(tmp_path / "nd" / "out"), ck,
+            spark, state_buckets=8, trigger_once=True,
+        ),
+    )
+    postings = last_batch_jobs(
+        "pi",
+        lambda s, ck: stream_postings_sink(
+            s, str(tmp_path / "pi" / "index"), ck, spark, n_buckets=4,
+            trigger_once=True,
+        ),
+    )
+    assert (neardup, postings) == (18, 9)
 
 
 def test_events_range_is_take_ordered(spark, sf_dir, qs):

@@ -852,14 +852,20 @@ def test_stream_neardup_minhash_bucketed_state_equals_flat(spark, tmp_path):
 
 
 def test_stream_neardup_flat_to_bucketed_migrates_state(spark, tmp_path):
-    """Enabling state_buckets on a pre-existing FLAT near-dup state must
-    MIGRATE it to the partitioned layout, not append __kb= dirs beside
-    the flat files (spark.read.parquet over such a mixed root silently
-    returns only the partitioned rows — flat-era docs would vanish from
-    the band index and cross-era pairs would be missed)."""
+    """A near-dup state's layout is fixed when it is created: a bucketed
+    run against a FLAT state is refused, naming the one migration path,
+    rebucket_neardup_state; after it, the bucketed run appends into the
+    migrated roots, never __kb= dirs beside flat files (spark.read.parquet
+    over such a mixed root silently returns only the partitioned rows —
+    flat-era docs would vanish from the band index and cross-era pairs
+    would be missed)."""
     import os
 
-    from bharatmlstack_spark.streaming.ingest import stream_neardup_minhash_sink
+    from bharatmlstack_spark.streaming.ingest import (
+        await_stream,
+        rebucket_neardup_state,
+        stream_neardup_minhash_sink,
+    )
     from bharatmlstack_spark.tablecommit import ROOT_STAGE_SUFFIX
 
     docs = _neardup_docs()
@@ -868,32 +874,40 @@ def test_stream_neardup_flat_to_bucketed_migrates_state(spark, tmp_path):
 
     def run(ck, **kw):
         s = spark.readStream.schema("doc_id long, text string").json(src)
-        stream_neardup_minhash_sink(
+        q = stream_neardup_minhash_sink(
             s, state, out, str(tmp_path / ck), spark,
             id_col="doc_id", text_col="text", trigger_once=True, **kw,
-        ).awaitTermination(120)
+        )
+        await_stream(q, 120, f"near-dup sink ({ck})")
+
+    def partitioned(root):
+        return any(d.startswith("__kb=") for d in os.listdir(f"{state}/{root}"))
 
     # batch 1 under the FLAT layout: doc 1 (pair-bearing) + doc 4
     _write_json_batch(src, [docs[0], docs[3]])
     run("mg_ck1")
-    assert not any(
-        d.startswith("__kb=") for d in os.listdir(f"{state}/bands")
-    )
+    assert not partitioned("bands")
 
-    # a crashed earlier migration left a PARTIAL stage (no _SUCCESS, no
-    # commit marker): it must be discarded, the intact flat original
-    # migrated instead
+    # batch 2 asks for the fully-bucketed layout: refused before any
+    # append, the flat roots untouched
+    _write_json_batch(src, [docs[1], docs[2]])
+    with pytest.raises(Exception, match="rebucket_neardup_state"):
+        run("mg_ck2", state_buckets=8, bucket_bands=True)
+    assert not partitioned("bands") and not partitioned("sets")
+
+    # a crashed earlier rewrite left a PARTIAL stage (no _SUCCESS, no
+    # commit marker): it must be discarded, never adopted
     stage = f"{state}/bands{ROOT_STAGE_SUFFIX}"
     os.makedirs(stage, exist_ok=True)
     with open(f"{stage}/part-junk.parquet", "w") as f:
         f.write("partial")
 
-    # batch 2 switches to fully-bucketed: both roots migrate, then append
-    _write_json_batch(src, [docs[1], docs[2]])
+    # the one migration path, then the bucketed run appends
+    rebucket_neardup_state(spark, state, 8, bucket_bands=True)
     run("mg_ck2", state_buckets=8, bucket_bands=True)
 
     # cross-era pairs (1,2) and (1,3) prove doc 1's flat-era bands and
-    # shingle set survived the switch; pre-guard this was {(2, 3)} only
+    # shingle set survived the switch
     assert _neardup_pairs(spark, out) == {(1, 2), (1, 3), (2, 3)}
     bands_ls = os.listdir(f"{state}/bands")
     assert any(d.startswith("__kb=") for d in bands_ls)

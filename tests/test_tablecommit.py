@@ -5,11 +5,12 @@ Each test runs a real write up to its commit, then replays that commit
 from the same on-disk state once per rename-or-delete call it makes,
 with the k-th call failing. After every failure:
 
-- no non-numeric ``key_bucket=`` / ``cell=`` / ``__kb=`` dir sits in the
+- no non-numeric ``key_bucket=`` / ``cell=`` / ``__kb=`` dir sits in a
   live root (stages and asides live beside it, never inside);
 - a fresh reader, which goes through an entry point, sees exactly the
   old rows (the marker was never written) or exactly the new rows;
-- that entry point finished the commit: marker, stage and aside are gone.
+- that entry point finished the commit: marker, stages and asides are
+  gone.
 """
 
 import inspect
@@ -100,25 +101,28 @@ def _replay(monkeypatch, args, restore, k):
     return calls[0]
 
 
-def _sweep(monkeypatch, root, col, args, restore, read, old, check=None):
-    """Replay the commit failing at every call; check each outcome.
-    ``check`` runs on the on-disk state right after each fault, before
-    any entry point has finished the commit."""
+def _sweep(monkeypatch, root, args, restore, read, old, check=None):
+    """Replay the commit failing at every call; check each outcome in
+    ``root`` and in every other root the commit swaps whole. ``check``
+    runs on the on-disk state right after each fault, before any entry
+    point has finished the commit."""
+    _, marker, swaps = args[:3]
+    roots = {root} | {live for stage, live in swaps if stage == live + ROOT_STAGE_SUFFIX}
     n_calls = _replay(monkeypatch, args, restore, 0)
     new = read()
     assert new != old and n_calls > 0
     for k in range(1, n_calls + 1):
         _replay(monkeypatch, args, restore, k)
-        if os.path.exists(root):
-            for name in os.listdir(root):
-                if name.startswith(f"{col}="):
-                    assert name[len(col) + 1:].isdigit(), (k, name)
+        for name in (n for r in roots if os.path.exists(r) for n in os.listdir(r)):
+            if "=" in name:
+                assert name.split("=", 1)[1].isdigit(), (k, name)
         if check is not None:
             check(k)
-        committed = os.path.exists(root + BUCKET_MARKER_SUFFIX)
+        committed = os.path.exists(marker)
         assert read() == (new if committed else old), k
-        for leftover in LEFTOVERS:
-            assert not os.path.exists(root + leftover), (k, leftover)
+        assert not os.path.exists(marker), k
+        for r, leftover in ((r, s) for r in roots for s in LEFTOVERS):
+            assert not os.path.exists(r + leftover), (k, r, leftover)
     return n_calls
 
 
@@ -159,7 +163,7 @@ def test_persist_commit_survives_a_fault_at_every_step(spark, tmp_path, monkeypa
     args, restore = _capture_commit(
         monkeypatch, root, lambda: _store(spark, base).persist("user", batch)
     )
-    n = _sweep(monkeypatch, root, "key_bucket", args, restore, read, old)
+    n = _sweep(monkeypatch, root, args, restore, read, old)
     assert n == 9  # 2 x (aside, swap in, drop aside) + stage, aside, marker
 
 
@@ -173,7 +177,7 @@ def test_delete_commit_survives_a_fault_at_every_step(spark, tmp_path, monkeypat
     args, restore = _capture_commit(
         monkeypatch, root, lambda: _store(spark, base).delete("user", keys)
     )
-    n = _sweep(monkeypatch, root, "key_bucket", args, restore, read, old)
+    n = _sweep(monkeypatch, root, args, restore, read, old)
     assert n == 7  # aside, swap in, drop aside, drop emptied + stage, aside, marker
 
 
@@ -204,7 +208,7 @@ def test_tombstone_purge_commit_survives_a_fault_at_every_step(
     args, restore = _capture_commit(
         monkeypatch, root, lambda: fold_index_tombstones(spark, root)
     )
-    n = _sweep(monkeypatch, root, "cell", args, restore, read, old)
+    n = _sweep(monkeypatch, root, args, restore, read, old)
     assert n == 7
     visible = read_streamed_ivf_index(spark, root, dedup=False)
     assert sorted(r.vec_id for r in visible.collect()) == [
@@ -280,7 +284,7 @@ def test_flat_cdc_batch_commit_survives_a_fault_at_every_step(
         monkeypatch, state, lambda: _cdc_batch(spark, tmp_path, state, rows, "b1")
     )
     n = _sweep(
-        monkeypatch, state, "__kb", args, restore, lambda: _cdc_read(spark, state), old
+        monkeypatch, state, args, restore, lambda: _cdc_read(spark, state), old
     )
     assert n == 4  # aside, swap in, drop aside, marker
 
@@ -316,7 +320,6 @@ def test_cdc_bootstrap_commit_survives_a_fault_at_every_step(
     n = _sweep(
         monkeypatch,
         state,
-        "__kb",
         args,
         restore,
         lambda: _cdc_read(spark, state),
@@ -372,7 +375,7 @@ def test_event_retention_commit_survives_a_fault_at_every_step(
     restore()
     old = read()
     assert old == [(1, 1), (1, 2), (1, 3), (2, 1)]
-    n = _sweep(monkeypatch, state, "__kb", args, restore, read, old)
+    n = _sweep(monkeypatch, state, args, restore, read, old)
     assert n == 4
     _replay(monkeypatch, args, restore, 0)
     assert read() == [(1, 3), (1, 5), (1, 6), (2, 1)]
@@ -423,7 +426,7 @@ def test_flat_neardup_compaction_commit_survives_a_fault_at_every_step(
     args, restore = _capture_commit(
         monkeypatch, sets, lambda: compact_neardup_state(spark, state_dir)
     )
-    n = _sweep(monkeypatch, sets, "__kb", args, restore, read, old)
+    n = _sweep(monkeypatch, sets, args, restore, read, old)
     assert n == 4
     assert len(read()) == 2 and len(old) == 4
 
@@ -463,25 +466,226 @@ def test_cluster_compaction_commit_survives_a_fault_at_every_step(
     args, restore = _capture_commit(
         monkeypatch, labels, lambda: compact_cluster_state(spark, state_dir)
     )
-    n = _sweep(monkeypatch, labels, "__kb", args, restore, read, old)
+    n = _sweep(monkeypatch, labels, args, restore, read, old)
     assert n == 4
     assert dict(read()) == components
 
 
-def test_no_hand_rolled_root_swaps():
-    """Every root rewrite in the package commits through tablecommit: the
-    retired swap helpers and stage names must not come back."""
+def _grep_package(pattern, subdir=""):
     import pathlib
     import re
 
-    retired = re.compile(
-        r"_swap_staged_root|_recover_root_swap|__(staging|compacting|purging|migrating)\b"
-    )
+    retired = re.compile(pattern)
     package = pathlib.Path(tablecommit.__file__).parent
-    hits = [
+    return [
         f"{path.relative_to(package.parent)}:{n}: {line.strip()}"
-        for path in sorted(package.rglob("*.py"))
+        for path in sorted((package / subdir).rglob("*.py"))
         for n, line in enumerate(path.read_text().splitlines(), 1)
         if retired.search(line)
     ]
+
+
+def test_no_hand_rolled_root_swaps():
+    """Every root rewrite in the package commits through tablecommit: the
+    retired swap helpers and stage names, the reset jobs' own stages and
+    the near-dup runtime layout migration must not come back."""
+    hits = _grep_package(
+        r"_swap_staged_root|_recover_root_swap|_ensure_neardup_root|_neardup_root_layout"
+        r"|__(staging|compacting|purging|migrating|rebucketing|refitting)\b"
+    )
     assert not hits, "hand-rolled root swap:\n" + "\n".join(hits)
+
+
+def test_streamed_sidecars_written_by_stateroot_only():
+    """The streamed stores rewrite their sidecars only through
+    stateroot.update_meta / bind and the commits' ``meta``: no
+    hand-written atomic replace or JSON dump under streaming/."""
+    hits = _grep_package(r"hadoop_write_text_atomic|\bjson\.dumps|import json", "streaming")
+    assert not hits, "hand-written sidecar write:\n" + "\n".join(hits)
+
+
+# -- the reset jobs' multi-root commits (tablecommit.commit_roots) -----
+
+
+def _neardup_state(spark, tmp_path, **kw):
+    """A near-dup state fed 12 docs twice (a full redelivery)."""
+    import json
+
+    from bharatmlstack_spark.streaming.ingest import (
+        await_stream,
+        stream_neardup_minhash_sink,
+    )
+
+    src = str(tmp_path / "src")
+    os.makedirs(src)
+    with open(os.path.join(src, "b0.json"), "w") as f:
+        for i in range(12):
+            f.write(json.dumps({"doc_id": i, "text": f"doc {i} says {i * 7} words"}) + "\n")
+    state = str(tmp_path / "nd" / "state")
+    for ck in ("ck1", "ck2"):
+        q = stream_neardup_minhash_sink(
+            spark.readStream.schema("doc_id long, text string").json(src),
+            state,
+            str(tmp_path / "out"),
+            str(tmp_path / "cks" / ck),
+            spark,
+            trigger_once=True,
+            **kw,
+        )
+        await_stream(q, 120, "near-dup sink")
+    return state
+
+
+def _hashed_as_recorded(spark, root, col, key, n):
+    """Every row of ``root`` sits in the ``col=`` dir ``key`` hashes to
+    under the recorded count ``n``."""
+    rows = spark.read.parquet(root)
+    assert rows.filter(F.col(col) != F.pmod(key, F.lit(n))).count() == 0, root
+
+
+def test_rebucket_neardup_commit_survives_a_fault_at_every_step(
+    spark, tmp_path, monkeypatch
+):
+    """rebucket_neardup_state 4 -> 8 buckets, both roots bucketed. The
+    entry point is compact_neardup_state; after it, every row of both
+    roots sits in the bucket the sidecar's n_buckets hashes it to."""
+    from bharatmlstack_spark.operators.feature_store import read_table_meta
+    from bharatmlstack_spark.streaming.ingest import (
+        compact_neardup_state,
+        rebucket_neardup_state,
+    )
+
+    state = _neardup_state(spark, tmp_path, state_buckets=4, bucket_bands=True)
+    sets, bands = f"{state}/sets", f"{state}/bands"
+
+    def read():
+        compact_neardup_state(spark, state)
+        n = read_table_meta(spark, state)["n_buckets"]
+        _hashed_as_recorded(spark, sets, "__kb", F.xxhash64("id"), n)
+        _hashed_as_recorded(spark, bands, "__kb", F.col("band_hash"), n)
+        return n, sorted(
+            (r["id"], r["__kb"]) for r in spark.read.parquet(sets).distinct().collect()
+        )
+
+    old = read()
+    args, restore = _capture_commit(
+        monkeypatch, sets, lambda: rebucket_neardup_state(spark, state, 8)
+    )
+    n = _sweep(monkeypatch, sets, args, restore, read, old)
+    assert n == 7  # 2 x (aside, swap in, drop aside) + marker
+    assert read()[0] == 8
+
+
+def test_rebucket_postings_commit_survives_a_fault_at_every_step(
+    spark, tmp_path, monkeypatch
+):
+    """rebucket_postings_index 4 -> 8 buckets. The entry point is
+    bm25_search_streamed, whose ranking never changes; after it, every
+    postings and doclen row sits in the bucket the sidecar's n_buckets
+    hashes it to."""
+    import json
+
+    from bharatmlstack_spark.operators.feature_store import read_table_meta
+    from bharatmlstack_spark.streaming.ingest import (
+        await_stream,
+        bm25_search_streamed,
+        rebucket_postings_index,
+        stream_postings_sink,
+    )
+
+    src = str(tmp_path / "src")
+    os.makedirs(src)
+    words = ["fox", "dog", "river", "joins", "spark", "parquet"]
+    with open(os.path.join(src, "b0.json"), "w") as f:
+        for i in range(12):
+            text = " ".join(words[(i + j) % 6] for j in range(i % 4 + 2))
+            f.write(json.dumps({"doc_id": i, "text": text}) + "\n")
+    index = str(tmp_path / "pi" / "index")
+    q = stream_postings_sink(
+        spark.readStream.schema("doc_id long, text string").json(src),
+        index,
+        str(tmp_path / "ck"),
+        spark,
+        n_buckets=4,
+        trigger_once=True,
+    )
+    await_stream(q, 120, "postings sink")
+    ranking = [
+        (r.doc_id, r.rank)
+        for r in bm25_search_streamed(spark, index, ["fox", "spark"]).collect()
+    ]
+    assert ranking
+
+    def read():
+        got = bm25_search_streamed(spark, index, ["fox", "spark"]).collect()
+        assert [(r.doc_id, r.rank) for r in got] == ranking
+        n = read_table_meta(spark, index)["n_buckets"]
+        _hashed_as_recorded(spark, f"{index}/postings", "term_bucket", F.xxhash64("term"), n)
+        _hashed_as_recorded(spark, f"{index}/doclen", "id_bucket", F.xxhash64("id"), n)
+        return n, sorted(
+            (r.term, r.id, r.term_bucket)
+            for r in spark.read.parquet(f"{index}/postings").collect()
+        )
+
+    old = read()
+    args, restore = _capture_commit(
+        monkeypatch,
+        f"{index}/postings",
+        lambda: rebucket_postings_index(spark, index, 8),
+    )
+    n = _sweep(monkeypatch, f"{index}/postings", args, restore, read, old)
+    assert n == 7
+    assert read()[0] == 8
+
+
+def test_refit_commit_survives_a_fault_at_every_step(spark, tmp_path, monkeypatch):
+    """refit_streamed_index 2 -> 5 cells: the index and its quantizer
+    swap in under one marker. The entry point is read_streamed_ivf_index;
+    after it, the sidecar's n_cells is the quantizer's and bounds every
+    cell dir."""
+    import numpy as np
+
+    from bharatmlstack_spark.operators.feature_store import read_table_meta
+    from bharatmlstack_spark.operators.lsh import IvfIndex
+    from bharatmlstack_spark.streaming.ingest import (
+        QUANTIZER_DIR_SUFFIX,
+        await_stream,
+        read_streamed_ivf_index,
+        refit_streamed_index,
+        stream_ann_ivf_sink,
+    )
+
+    rng = np.random.default_rng(3)
+    schema = "vec_id long, embedding array<float>"
+    df = spark.createDataFrame(
+        [(i, [float(x) for x in rng.normal(size=4)]) for i in range(40)], schema
+    )
+    ivf = IvfIndex(n_cells=2).fit(df, sample_size=64, iters=2)
+    topic, index = str(tmp_path / "topic"), str(tmp_path / "ivf" / "index")
+    df.coalesce(1).write.parquet(topic)
+    q = stream_ann_ivf_sink(
+        spark.readStream.schema(schema).parquet(topic),
+        ivf,
+        index,
+        str(tmp_path / "ck"),
+        spark,
+        trigger_once=True,
+    )
+    await_stream(q, 120, "ivf sink")
+
+    def read():
+        rows = read_streamed_ivf_index(spark, index).collect()
+        n = read_table_meta(spark, index)["n_cells"]
+        assert spark.read.parquet(index + QUANTIZER_DIR_SUFFIX).count() == n
+        assert max(r.cell for r in rows) < n
+        return n, sorted((r.vec_id, r.cell) for r in rows)
+
+    old = read()
+    args, restore = _capture_commit(
+        monkeypatch,
+        index,
+        lambda: refit_streamed_index(spark, index, target_cell_rows=8, min_cells=4),
+    )
+    n = _sweep(monkeypatch, index, args, restore, read, old)
+    assert n == 7
+    assert read()[0] == 5
